@@ -87,7 +87,7 @@ def q_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended to a sink, then aggregated per (segment, event_type).
 
     Exercises the full production path — file stream source → snapshot
-    broadcast join → parquet sink — and still hash-matches the batch SQL
+    join → parquet sink — and still hash-matches the batch SQL
     because the union of per-batch inner joins equals the batch join.
     """
     from table_streaming_source_spark.snapshot import SnapshotManager

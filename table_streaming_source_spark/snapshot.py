@@ -13,16 +13,17 @@ re-expression:
   epoch-aligned refresh arithmetic identical to `TableInputDStream.scala:57`;
 - unlike the reference (which leaks the old cached RDD on refresh —
   `TableInputDStream.scala:59` replaces the reference without freeing), we
-  ``unpersist`` the previous snapshot on swap;
+  ``unpersist`` the previous snapshot before each re-scan;
 - ``start()`` zeroes the refresh clock forcing a fresh scan on (re)start,
   matching `TableInputDStream.scala:42-45`.
 
-At 100 TB the snapshot side of an enrichment join is a *dimension* table —
-small relative to the stream.  ``persist`` keeps it hot across micro-batches;
-for multi-executor clusters the enrichment join should broadcast it
-(``F.broadcast``) when under the broadcast threshold, which
-:func:`table_streaming_source_spark.streaming.enrichment.enrich_stream`
-does automatically.
+The snapshot is the lookup side of every micro-batch's enrichment join, and
+Structured Streaming re-plans that join on every trigger.  When the join key
+is set (:func:`~table_streaming_source_spark.streaming.enrichment.start_enriched_stream`
+sets it), each refresh hash-partitions the scan by the key into exactly
+``spark.sql.shuffle.partitions`` partitions and sorts every partition before
+``persist``: the table's layout cost is paid once per TTL, and a sort-merge
+join against the cached snapshot exchanges only the micro-batch.
 """
 
 from __future__ import annotations
@@ -102,8 +103,8 @@ class SnapshotManager:
     Every call to :meth:`current` within a TTL window returns the *same*
     persisted DataFrame (the reference returns the same cached RDD to every
     intervening batch, `TableInputDStream.scala:51-54`); once wall-clock
-    passes the epoch-aligned boundary the table is re-scanned, the new
-    snapshot persisted, and the old one unpersisted.
+    passes the epoch-aligned boundary the old snapshot is unpersisted and
+    the table re-scanned into a newly persisted one.
 
     ``clock_ms`` is injectable for deterministic tests (the reference's
     equivalent is the batch ``validTime`` passed into ``compute``,
@@ -128,8 +129,13 @@ class SnapshotManager:
         self._clock_ms = clock_ms or (lambda: int(time.time() * 1000))
         self._storage_level = storage_level
         self.eager = eager
+        #: join key columns; when set, each refresh lays the snapshot out
+        #: by them (hash-partitioned, sorted within partitions)
+        self.key: Optional[list[str]] = None
         self._df: Optional[DataFrame] = None
         self._last_refresh_ms = 0
+        self._refresh_duration_ms = 0
+        self._rows: Optional[int] = None
         self.refresh_count = 0
 
     @classmethod
@@ -176,17 +182,49 @@ class SnapshotManager:
         # first access always refreshes (`TableInputDStream.scala:58`:
         # ``lastRefreshTime == 0 || currentTime > threshold``)
         if self._df is None or self._last_refresh_ms == 0 or now_ms > threshold:
-            old = self._df
-            new = self._loader().persist(self._storage_level)
-            if self.eager:
-                new.count()  # materialize the cache eagerly
+            # Spark keeps one cache entry per plan, and a re-read of an
+            # unchanged source (same path) has the old snapshot's plan:
+            # persisting the new snapshot first would count the old cached
+            # rows, and freeing the old one afterwards would uncache the
+            # new one.  So the old snapshot goes first (the reference leaks
+            # it, `TableInputDStream.scala:59`); after a failed refresh
+            # there is none, and the next access scans again.
+            self.stop()
+            new = self._loader()
+            if self.key:
+                # an explicit partition count (REPARTITION_BY_NUM) is
+                # never coalesced by AQE, so the cached layout matches
+                # the batch side's hash exchange on the same key
+                n = int(self._spark.conf.get("spark.sql.shuffle.partitions"))
+                new = new.repartition(n, *self.key).sortWithinPartitions(
+                    *self.key
+                )
+            new = new.persist(self._storage_level)
+            try:
+                # the eager count materializes the cache and is the exact
+                # size the enrichment join selects its strategy by
+                self._rows = new.count() if self.eager else None
+            except Exception:
+                new.unpersist()
+                raise
             self._df = new
             self._last_refresh_ms = now_ms
+            self._refresh_duration_ms = self._clock_ms() - now_ms
             self.refresh_count += 1
-            if old is not None:
-                # the reference leaks here (`TableInputDStream.scala:59`);
-                # we free the old snapshot once the new one is in place.
-                old.unpersist()
+
+    def stats(self) -> dict:
+        """What the cache did: ``refreshes`` (count), ``rows`` (the
+        snapshot's exact row count from the eager refresh count, else
+        ``None``), ``last_refresh_ms`` (clock time of the last refresh; 0
+        before the first and after :meth:`start` or :meth:`stop`, which
+        force the next access to re-scan) and ``refresh_ms`` (the last
+        refresh's duration on the same clock)."""
+        return {
+            "refreshes": self.refresh_count,
+            "rows": self._rows,
+            "last_refresh_ms": self._last_refresh_ms,
+            "refresh_ms": self._refresh_duration_ms,
+        }
 
     def stop(self) -> None:
         """Release the cached snapshot."""
@@ -194,6 +232,7 @@ class SnapshotManager:
             self._df.unpersist()
             self._df = None
         self._last_refresh_ms = 0
+        self._rows = None
 
 
 def snapshot_diff(

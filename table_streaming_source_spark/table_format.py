@@ -6,8 +6,8 @@ parquet + JSON, built for three contracts the catalog value-checks:
    files named by the commit log up to that version; readers resolve
    the log, never `listFiles` — a half-written data file is invisible
    until its commit lands, and `version=` gives exact time travel.
-2. **Optimistic concurrency**: commit ``n`` lands by atomic rename of
-   ``n.json``; a racing writer loses the rename and must retry on top
+2. **Optimistic concurrency**: commit ``n`` lands by an atomic
+   put-if-absent of ``n.json``; a racing writer loses and must retry on top
    of the new log head (the loser's data files are orphans, swept by
    vacuum — never corruption).
 3. **File skipping**: every commit records per-file, per-column
@@ -18,9 +18,10 @@ parquet + JSON, built for three contracts the catalog value-checks:
 The pointer-protocol sinks (`sinks.py::upsert_sink`/`scd2_sink`) show
 single-pointer versioning; this module is the append-log generalization
 a real table format uses (log replay instead of one pointer, per-file
-stats instead of directory granularity).  Local-filesystem primitives
-(`os.replace`) stand in for the object-store atomic-put; the log/
-manifest/pruning shapes are unchanged.
+stats instead of directory granularity).  A local-filesystem primitive
+(`os.link`, which fails when the name exists) stands in for the
+object-store put-if-absent; the log/manifest/pruning shapes are
+unchanged.
 """
 
 from __future__ import annotations
@@ -58,21 +59,17 @@ def create_table(path: str) -> None:
 def _write_commit(path: str, version: int, payload: dict) -> None:
     """Atomically publish commit ``version``; lose the race → conflict."""
     final = os.path.join(_log_dir(path), f"{version}.json")
-    if os.path.exists(final):
-        raise CommitConflict(f"version {version} already committed")
     tmp = final + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
     try:
-        # atomic on POSIX; emulates object-store put-if-absent.  A true
-        # lost race surfaces as the loser's payload being overwritten —
-        # guarded by the exists-check above plus verify-after-rename.
-        if os.path.exists(final):
-            raise CommitConflict(f"version {version} already committed")
-        os.replace(tmp, final)
+        # put-if-absent: link() fails when the name exists, so of two
+        # writers racing for one version exactly one publishes
+        os.link(tmp, final)
+    except FileExistsError:
+        raise CommitConflict(f"version {version} already committed") from None
     finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+        os.remove(tmp)
 
 
 def latest_version(path: str) -> int:
@@ -527,7 +524,7 @@ def commit_append(
     """Write ``df`` as new data files, then publish them as the next
     commit.  ``expected_version`` implements optimistic concurrency:
     pass the version you read; if someone committed meanwhile the
-    rename loses and :class:`CommitConflict` propagates — your data
+    publish loses and :class:`CommitConflict` propagates — your data
     files are orphans (vacuum's job), the table is untouched.
 
     ``row_ids_from=<key column>`` stamps every appended row with a
@@ -2438,16 +2435,18 @@ def read_staged(
 
 def commit_publish(path: str, *, audit_id: str) -> int:
     """WAP step 3: atomically promote the audited staged commit.  Loses
-    the rename (another writer landed the version first) →
+    the publish (another writer landed the version first) →
     :class:`CommitConflict`; the stage survives for retry-on-new-head
     logic to re-parent."""
     staged = _staged_path(path, audit_id)
     with open(staged) as fh:
         version = json.load(fh)["version"]
     final = os.path.join(_log_dir(path), f"{version}.json")
-    if os.path.exists(final):
-        raise CommitConflict(f"version {version} already committed")
-    os.replace(staged, final)
+    try:
+        os.link(staged, final)  # put-if-absent, as in _write_commit
+    except FileExistsError:
+        raise CommitConflict(f"version {version} already committed") from None
+    os.remove(staged)
     return version
 
 

@@ -8,6 +8,8 @@ old snapshot (the reference leaks it at `scala:59`).
 """
 
 import json
+import os
+import shutil
 
 import pytest
 
@@ -99,6 +101,62 @@ def test_restart_forces_rescan(spark):
     assert calls["n"] == 2
 
 
+def test_stats_report_refreshes_rows_and_duration(spark):
+    clock = FakeClock(1_000)
+
+    def loader():
+        clock.now_ms += 250  # the scan takes 250 ms on the fake clock
+        return spark.range(7)
+
+    mgr = SnapshotManager(
+        spark, loader, refresh_interval_ms=5_000, clock_ms=clock, eager=True
+    )
+    assert mgr.stats() == {
+        "refreshes": 0, "rows": None, "last_refresh_ms": 0, "refresh_ms": 0,
+    }
+    mgr.current()
+    assert mgr.stats() == {
+        "refreshes": 1, "rows": 7, "last_refresh_ms": 1_000, "refresh_ms": 250,
+    }
+    clock.now_ms = 5_001
+    mgr.current()
+    assert mgr.stats() == {
+        "refreshes": 2, "rows": 7, "last_refresh_ms": 5_001, "refresh_ms": 250,
+    }
+    mgr.stop()
+    assert mgr.stats()["rows"] is None
+
+
+def test_stats_rows_unknown_without_eager_count(spark):
+    mgr, _ = make_manager(spark, FakeClock(1_000))
+    mgr.current()
+    assert mgr.stats()["refreshes"] == 1
+    assert mgr.stats()["rows"] is None
+    mgr.stop()
+
+
+def test_keyed_refresh_partitions_and_sorts_by_key(spark):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        mgr = SnapshotManager(
+            spark,
+            lambda: spark.range(100).selectExpr("(id * 37) % 100 AS k", "id"),
+            clock_ms=FakeClock(1_000),
+            eager=True,
+        )
+        mgr.key = ["k"]
+        df = mgr.current()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    parts = df.rdd.glom().map(lambda rows: [r.k for r in rows]).collect()
+    assert len(parts) == 3  # exactly the shuffle partition count
+    assert all(keys == sorted(keys) for keys in parts)
+    assert sorted(k for keys in parts for k in keys) == list(range(100))
+    assert mgr.stats()["rows"] == 100
+    mgr.stop()
+
+
 def test_snapshot_reflects_table_mutation(spark, tmp_path):
     # the e2e refresh behavior of `PipelineTest.java:129-149`: write row,
     # snapshot, append row, refresh → snapshot reflects the append.
@@ -118,6 +176,31 @@ def test_snapshot_reflects_table_mutation(spark, tmp_path):
     assert {r.name for r in mgr.current().collect()} == {"Samuel"}  # cached
     clock.now_ms = 6_000
     assert {r.name for r in mgr.current().collect()} == {"Samuel", "L"}
+    mgr.stop()
+
+
+def test_refresh_of_same_source_caches_new_rows(spark, tmp_path):
+    """A re-read of the same path has the old snapshot's plan, so Spark
+    would share one cache entry between them: the refresh must still
+    count and keep cached the rows a writer outside this session added."""
+    path = str(tmp_path / "tbl.parquet")
+    spark.range(3).write.parquet(path)
+    clock = FakeClock(1_000)
+    mgr = SnapshotManager(
+        spark, lambda: spark.read.parquet(path), 5_000, clock_ms=clock,
+        eager=True,
+    )
+    assert mgr.current().count() == 3
+    staged = str(tmp_path / "staged")
+    spark.range(3, 5).write.parquet(staged)
+    for name in os.listdir(staged):
+        if name.endswith(".parquet"):
+            shutil.move(os.path.join(staged, name), path)
+    clock.now_ms = 6_000
+    df = mgr.current()
+    assert mgr.stats()["rows"] == 5
+    assert df.storageLevel.useMemory  # the swap left the new snapshot cached
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 3, 4]
     mgr.stop()
 
 

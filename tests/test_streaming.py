@@ -10,6 +10,7 @@ Plus enrichment-mode and watermark/window/stream-dedup coverage.
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from table_streaming_source_spark.snapshot import SnapshotManager
@@ -141,6 +142,170 @@ def test_enrichment_mode_ttl_refresh(spark, tmp_path):
     finally:
         q.stop()
         mgr.stop()
+
+
+def _plan_paths(node, above=()):
+    """Every root-to-leaf path of a physical plan as a tuple of node
+    class names, looking through AQE's adaptive root and its query
+    stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_paths(node.executedPlan(), above)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_paths(node.plan(), above)
+        return
+    path = (*above, name)
+    children = node.children()
+    if children.size() == 0:
+        yield path
+    for i in range(children.size()):
+        yield from _plan_paths(children.apply(i), path)
+
+
+def _snapshot_join(paths):
+    """``(join class, classes between the join and the snapshot's
+    InMemoryTableScan)`` for the join that reads the snapshot."""
+    path = next(p for p in paths if p[-1] == "InMemoryTableScanExec")
+    i = max(i for i, n in enumerate(path) if n.endswith("JoinExec"))
+    return path[i], list(path[i + 1:-1])
+
+
+def _drain_enriched(spark, tmp_path, dim, batches, on, how):
+    """Stream ``batches`` (one file, hence one micro-batch, each) through
+    ``start_enriched_stream`` against ``dim``; return the rows and the
+    snapshot join of each batch's executed plan."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    src = str(tmp_path / "src")
+    for rows in batches:
+        rows.coalesce(1).write.mode("append").parquet(src)
+    dim_path = str(tmp_path / "dim")
+    dim.write.parquet(dim_path)
+    mgr = SnapshotManager(spark, lambda: spark.read.parquet(dim_path))
+    seen: dict[int, tuple] = {}
+
+    def sink(df, batch_id):
+        rows = df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        seen[batch_id] = (rows, _snapshot_join(list(_plan_paths(plan))))
+
+    stream = (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    q = start_enriched_stream(stream, mgr, on, sink, how=how, available_now=True)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+        mgr.stop()
+    assert sorted(seen) == list(range(len(batches)))
+    return seen
+
+
+def _events(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr("id % 100 AS k", "id AS event")
+
+
+@pytest.mark.streaming
+def test_enrichment_merge_join_reuses_snapshot_layout(spark, tmp_path):
+    """Every batch, the first included, joins the snapshot by sort-merge
+    with no exchange or sort on the snapshot's side: only the batch is
+    shuffled."""
+    dim = spark.range(50).selectExpr("id AS k", "id * 10 AS attr")
+    seen = _drain_enriched(
+        spark, tmp_path, dim,
+        [_events(spark, 0, 10), _events(spark, 10, 20)], "k", "inner",
+    )
+    for batch_id in (0, 1):
+        join, between = seen[batch_id][1]
+        assert join == "SortMergeJoinExec"
+        assert not {"ShuffleExchangeExec", "SortExec",
+                    "BroadcastExchangeExec"} & set(between), between
+
+
+@pytest.mark.streaming
+def test_enrichment_left_join_on_two_columns_matches_batch(spark, tmp_path):
+    """``how="left"`` with a two-column key returns what the batch join
+    returns; unmatched stream rows keep null dimension columns."""
+    dim = spark.range(40).selectExpr(
+        "id % 20 AS k", "id % 3 AS part", "id AS attr"
+    )
+    batches = [
+        spark.range(lo, lo + 10).selectExpr(
+            "id % 25 AS k", "id % 3 AS part", "id AS event"
+        )
+        for lo in (0, 10, 20)
+    ]
+    seen = _drain_enriched(
+        spark, tmp_path, dim, batches, ["k", "part"], "left"
+    )
+    got = sorted(tuple(r) for rows, _ in seen.values() for r in rows)
+    everything = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = sorted(
+        tuple(r) for r in everything.join(dim, ["k", "part"], "left").collect()
+    )
+    assert got == want
+    assert any(r[-1] is None for r in got)  # unmatched rows survive
+    assert len(got) == 30
+
+
+@pytest.mark.streaming
+def test_enrichment_sink_error_propagates_without_retry(spark, tmp_path):
+    """An error that is not a missing file is not retried: the sink runs
+    once and the query stops with that error."""
+    src = str(tmp_path / "src")
+    _events(spark, 0, 10).coalesce(1).write.parquet(src)
+    mgr = SnapshotManager(
+        spark, lambda: spark.range(5).selectExpr("id AS k")
+    )
+    calls = []
+
+    def sink(df, batch_id):
+        calls.append(batch_id)
+        raise ValueError("sink rejected the batch")
+
+    stream = spark.readStream.schema("k long, event long").parquet(src)
+    q = start_enriched_stream(stream, mgr, "k", sink, available_now=True)
+    try:
+        with pytest.raises(StreamingQueryException, match="sink rejected"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+        mgr.stop()
+    assert calls == [0]
+
+
+@pytest.mark.streaming
+def test_enrichment_retries_missing_file_and_logs(spark, tmp_path, caplog):
+    """A batch that fails on a missing file is logged with its batch id
+    and retried once against a fresh snapshot scan."""
+    src = str(tmp_path / "src")
+    _events(spark, 0, 10).coalesce(1).write.parquet(src)
+    dim_path = str(tmp_path / "dim")
+    spark.range(5).selectExpr("id AS k").write.parquet(dim_path)
+    mgr = SnapshotManager(spark, lambda: spark.read.parquet(dim_path))
+    calls = []
+
+    def sink(df, batch_id):
+        calls.append(batch_id)
+        if len(calls) == 1:
+            spark.read.parquet(str(tmp_path / "gone")).count()
+        df.collect()
+
+    stream = spark.readStream.schema("k long, event long").parquet(src)
+    with caplog.at_level("WARNING"):
+        q = start_enriched_stream(stream, mgr, "k", sink, available_now=True)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+    assert q.exception() is None
+    assert calls == [0, 0]
+    assert mgr.stats()["refreshes"] == 2
+    assert any("batch 0" in r.getMessage() for r in caplog.records)
+    mgr.stop()
 
 
 @pytest.mark.streaming

@@ -3,6 +3,7 @@
 optimistic-concurrency conflicts, time travel, and lossless manifest
 pruning."""
 
+import json
 import os
 
 import pytest
@@ -465,6 +466,35 @@ def test_publish_loses_race_like_any_commit(spark, table):
     )
     with pytest.raises(TF.CommitConflict):
         TF.commit_publish(path, audit_id="aud3")
+
+
+def test_commit_race_keeps_the_winner(tmp_path, monkeypatch):
+    """A competing writer publishes the same version just before this
+    writer's publish: this writer gets CommitConflict, the competitor's
+    commit stays intact, and no scratch file is left in the log."""
+    path = str(tmp_path / "tbl")
+    TF.create_table(path)
+    final = os.path.join(path, "_log", "1.json")
+    winner = {"version": 1, "files": [], "parent": 0, "writer": "winner"}
+    real_link = os.link
+
+    def race_then_link(src, dst):
+        if dst == final:  # the winner lands first
+            with open(final, "w") as fh:
+                json.dump(winner, fh)
+        real_link(src, dst)
+
+    monkeypatch.setattr(TF.os, "link", race_then_link)
+    with pytest.raises(TF.CommitConflict):
+        TF._write_commit(
+            path, 1, {"version": 1, "files": [], "parent": 0, "writer": "loser"}
+        )
+    monkeypatch.undo()
+    with open(final) as fh:
+        assert json.load(fh) == winner
+    assert sorted(os.listdir(os.path.join(path, "_log"))) == [
+        "0.json", "1.json",
+    ]
 
 
 # ---------------------------------------------------------------------------

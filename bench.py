@@ -34,8 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # renaming any existing entry (round-over-round comparability), so the
 # final shape is the UNION: all 57 pre-r15 entries keep running and the
 # 10 table-format/CDF/router/text/multimodal hot paths are ADDED
-# (67 total).  The pre-r15 set stays runnable via
-# SPARK_GRAFT_BENCH_SET=pre-r15.
+# (67 total).
 HEADLINE_ADDED_R15 = [
     # the table format's write/read hot paths: stats-targeted MERGE,
     # batch CDF derivation, incremental (changelog) read, MOR delete
@@ -144,9 +143,7 @@ HEADLINE = [
     "scan_parquet_footer",
 ]
 
-HEADLINE_PRE_R15 = list(HEADLINE)
-if os.environ.get("SPARK_GRAFT_BENCH_SET") != "pre-r15":
-    HEADLINE = HEADLINE + HEADLINE_ADDED_R15
+HEADLINE = HEADLINE + HEADLINE_ADDED_R15
 
 
 def main() -> None:

@@ -12,10 +12,9 @@ serves the same RDD to every batch within a TTL window,
 - **Scan amortization.**  Interactive/bench workloads touch the same
   tables repeatedly; in-memory columnar batches skip parquet decode.
 
-Set ``SPARK_GRAFT_SNAPSHOT_CACHE=0`` to read straight from parquet
-(streaming-refresh tests that mutate the backing files do this, as does
-any workload whose tables exceed cluster memory — persist falls back to
-disk spill via MEMORY_AND_DISK either way).
+Pass ``cached=False`` to read straight from parquet (tests do this to
+observe real file scans).  A table that exceeds cluster memory still
+caches: MEMORY_AND_DISK spills to disk.
 """
 
 from __future__ import annotations
@@ -108,11 +107,9 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(
-    spark: SparkSession, sf_dir: str, name: str, cached: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, cached: bool = True
 ) -> DataFrame:
     """One fixture table, served from the process snapshot cache."""
-    if cached is None:
-        cached = os.environ.get("SPARK_GRAFT_SNAPSHOT_CACHE", "1") != "0"
     if not cached:
         return _read_table(spark, sf_dir, name)
 

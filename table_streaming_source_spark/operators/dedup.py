@@ -26,7 +26,6 @@ Design decisions for 100 TB:
 
 from __future__ import annotations
 
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -193,19 +192,16 @@ def minhash_lsh_pairs(
     max_bucket: Optional[int] = None,
     mega_bucket: str = "drop",
     verify_broadcast_max_keys: int = 1_000_000,
-    pin_verify: Optional[bool] = None,
+    pin_verify: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding, verified with exact
     Jaccard.
 
-    ``pin_verify`` (default on; ``SPARK_GRAFT_MINHASH_PIN=0`` flips the
-    default for A/B runs) localCheckpoints the candidate-shingle
-    table so the verify prefilter's semi-join + candidate shingling run
-    once instead of once per join leg; tests that introspect the verify
-    plan (the broadcast gate's branches) pass ``False`` to keep the
-    semi-join visible in the final plan.  A localCheckpoint is
-    non-reliable storage: on a multi-executor deployment where executor
-    loss mid-query matters more than the recompute, disable the pin.
+    ``pin_verify`` localCheckpoints the candidate-shingle table so the
+    verify prefilter's semi-join + candidate shingling run once instead
+    of once per join leg; tests that introspect the verify plan (the
+    broadcast gate's branches) pass ``False`` to keep the semi-join
+    visible in the final plan.
 
     ``verify_broadcast_max_keys`` gates the verify prefilter's broadcast:
     the candidate pairs are counted (a scalar job over the checkpointed
@@ -245,8 +241,6 @@ def minhash_lsh_pairs(
     Jaccard — the shingle table is never exploded or shuffled.
     """
     rows_per_band = num_hashes // bands
-    if pin_verify is None:
-        pin_verify = os.environ.get("SPARK_GRAFT_MINHASH_PIN", "1") != "0"
 
     def band_keys_of(sig: "F.Column") -> "F.Column":
         # 60-bit integer band keys (round 4): the banding shuffle keys on
@@ -489,19 +483,15 @@ def _shingle_intersections(
     localCheckpoint (guide §2.4 multi-consumer materialization, the
     round-15 pattern); the doc-scale ``sizes`` aggregate likewise feeds
     two broadcast legs and is pinned so the fact-scale aggregation runs
-    once.  ``SPARK_GRAFT_SHINGLE_PIN=0`` restores the unpinned shape
-    (A/B hatch; also the multi-executor deployment escape — a lazy
-    localCheckpoint is non-reliable storage)."""
-    shingled = shingle_table(_spread(df), text_col, key, n)
-    if os.environ.get("SPARK_GRAFT_SHINGLE_PIN", "1") != "0":
-        shingled = shingled.localCheckpoint(eager=False)
-        sizes = (
-            shingled.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .localCheckpoint(eager=False)
-        )
-    else:
-        sizes = shingled.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
+    once."""
+    shingled = shingle_table(_spread(df), text_col, key, n).localCheckpoint(
+        eager=False
+    )
+    sizes = (
+        shingled.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("sz"))
+        .localCheckpoint(eager=False)
+    )
     a = shingled.select(F.col(key).alias("key_a"), "shingle")
     b = shingled.select(F.col(key).alias("key_b"), "shingle")
     pair_pred = (

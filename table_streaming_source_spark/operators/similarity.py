@@ -20,7 +20,6 @@ Scale path (100 TB / billions of vectors):
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -180,20 +179,10 @@ def cosine_pairs_blocked(
     # re-executes that derivation — materialize it once.  A persisted
     # input (the snapshot cache) skips the pin: re-scanning cache is
     # cheaper than copying it into a second materialization.
-    # SPARK_GRAFT_COSINE_PIN: "0" never pins, "1" always pins, unset →
-    # the auto branch above (A/B hatch; a localCheckpoint is
-    # non-reliable storage, so deployments that prefer recompute over
-    # lineage truncation can disable it)
-    _pin_env = os.environ.get("SPARK_GRAFT_COSINE_PIN")
-    if _pin_env == "0":
-        _cached = True  # treat as cached: skip the pin
-    elif _pin_env == "1":
+    try:
+        _cached = df.storageLevel.useMemory or df.storageLevel.useDisk
+    except Exception:
         _cached = False
-    else:
-        try:
-            _cached = df.storageLevel.useMemory or df.storageLevel.useDisk
-        except Exception:
-            _cached = False
     if not _cached:
         df = df.localCheckpoint(eager=False)
     a = df.select(
@@ -1487,10 +1476,8 @@ def nn_descent_round(
     # the hop self-join + the final union with the rescored candidates)
     # and each re-derivation replays every blocking's cell self-join +
     # cosine pass — pin once (guide §2.4, the round-15/16 multi-consumer
-    # pattern).  SPARK_GRAFT_NND_PIN=0 restores the unpinned shape (A/B
-    # hatch; lazy localCheckpoint is non-reliable storage off local).
-    if os.environ.get("SPARK_GRAFT_NND_PIN", "1") != "0":
-        base = base.localCheckpoint(eager=False)
+    # pattern).
+    base = base.localCheckpoint(eager=False)
     edges = base.select(F.col(key).alias("u"), F.col("neighbor_id").alias("v"))
     cand = (
         edges.alias("e1")

@@ -11,7 +11,6 @@ pre-filter stopwords, which is also the right quality call).
 
 from __future__ import annotations
 
-import os
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -237,13 +236,12 @@ def tfidf_top_terms(
     tok = tokenize(df, text_col, key)
     # consumed twice (df derivation + score join) — pin so the corpus
     # tokenize+aggregate runs once (round 15, guide §2.4); lazy, no job
-    # until the operator's output is consumed.  SPARK_GRAFT_TEXT_PIN=0
-    # disables (A/B hatch; localCheckpoint is non-reliable storage —
-    # a deployment that prefers recompute over truncated lineage on
-    # executor loss turns the pins off)
-    tf = tok.groupBy(key, "token").agg(F.count(F.lit(1)).alias("tf"))
-    if os.environ.get("SPARK_GRAFT_TEXT_PIN", "1") != "0":
-        tf = tf.localCheckpoint(eager=False)
+    # until the operator's output is consumed.
+    tf = (
+        tok.groupBy(key, "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=False)
+    )
     n_docs = df.count()  # scalar; computed once driver-side
     # document frequency FROM the tf table: tf already holds one row
     # per (doc, token), so COUNT(*) per token ≡ the old
@@ -1257,10 +1255,8 @@ def line_dedup(df: DataFrame, lines_col: str, key: str) -> DataFrame:
     # two consumers (owner election + ownership probe): without the pin
     # the caller's line derivation (reflow/split of every document) and
     # the explode execute once per leg (round 15, guide §2.4); lazy —
-    # materializes inside the first consuming job.  SPARK_GRAFT_TEXT_PIN=0
-    # disables (see tfidf_top_terms)
-    if os.environ.get("SPARK_GRAFT_TEXT_PIN", "1") != "0":
-        ex = ex.localCheckpoint(eager=False)
+    # materializes inside the first consuming job.
+    ex = ex.localCheckpoint(eager=False)
     owner = ex.groupBy("line").agg(
         F.min(
             F.struct(F.col(key).alias("k"), F.col("pos").alias("p"))

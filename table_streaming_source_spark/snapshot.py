@@ -201,8 +201,8 @@ class SnapshotManager:
                 )
             new = new.persist(self._storage_level)
             try:
-                # the eager count materializes the cache and is the exact
-                # size the enrichment join selects its strategy by
+                # the eager count materializes the cache; its exact row
+                # count feeds stats()["rows"]
                 self._rows = new.count() if self.eager else None
             except Exception:
                 new.unpersist()

@@ -139,13 +139,21 @@ def _tsr_chunks_from_batches(iterator) -> tuple[list[bytes], int]:
     """Arrow record batches → packed TSR1 record byte chunks (guide §4:
     columns cross the boundary, and the 24-byte records are assembled
     by one vectorized structured-array fill per batch — byte-identical
-    to the per-row ``_REC.pack`` loop in :func:`write_tsr`)."""
+    to the per-row ``_REC.pack`` loop in :func:`write_tsr`).  The format
+    has no null encoding, so a batch with a null raises ``ValueError``
+    instead of writing ``INT64_MIN`` or NaN in its place."""
     import numpy as np
 
     dt = np.dtype([("key", "<i8"), ("grp", "<i8"), ("value", "<f8")])
     chunks: list[bytes] = []
     n = 0
     for batch in iterator:
+        for i, name in enumerate(batch.schema.names):
+            if batch.column(i).null_count > 0:
+                raise ValueError(
+                    f"tsr sink: column {name!r} holds nulls; the TSR1 "
+                    "format cannot encode them"
+                )
         arr = np.empty(batch.num_rows, dtype=dt)
         arr["key"] = batch.column(0).to_numpy(zero_copy_only=False)
         arr["grp"] = batch.column(1).to_numpy(zero_copy_only=False)
@@ -192,8 +200,9 @@ class FixedWidthWriter(DataSourceArrowWriter):
             os.replace(m.staged, m.staged[: -len(".tmp")])
 
     def abort(self, messages) -> None:
+        # a failed task reports no message (None)
         for m in messages:
-            if os.path.exists(m.staged):
+            if m is not None and os.path.exists(m.staged):
                 os.remove(m.staged)
 
 

@@ -536,11 +536,6 @@ class ChangesReader(DataSourceReader):
             self._to = int(to)
         else:
             self._to = TF.resolve_ref(self._path, ref)
-        # A/B hatch, read on the DRIVER at plan time (executor env is
-        # frozen at worker spawn): 0 = legacy per-row tuple emission
-        self._arrow = os.environ.get(
-            "SPARK_GRAFT_CDF_ARROW", "1"
-        ) != "0"
 
     def partitions(self) -> Sequence[InputPartition]:
         from table_streaming_source_spark.streaming.format_tail import (
@@ -563,12 +558,6 @@ class ChangesReader(DataSourceReader):
         path, v, cols = partition.value
         if v is None:
             return iter(())
-        if not self._arrow:
-            from table_streaming_source_spark.streaming.format_cdf import (
-                _cdf_rows,
-            )
-
-            return iter(_cdf_rows(path, v, list(cols)))
         # Arrow batches, not per-row pickled tuples (guide §4)
         return _cdf_batches(
             path, v, list(cols), to_arrow_schema(self._schema)

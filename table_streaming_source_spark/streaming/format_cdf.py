@@ -23,7 +23,7 @@ Spark-side implementation this module is parity-tested against
 from __future__ import annotations
 
 import os
-from typing import Iterator, Sequence, Tuple
+from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -488,9 +488,9 @@ def _cdf_rows(
 ) -> list[tuple]:
     """The CDF image tuples of commit ``v``.  Tuple layout: ``cols...,
     _change_type, _commit_version`` — the row-wise flattening of
-    ``_cdf_frames`` (kept for tests and driver-side callers; the data
-    source readers ship ``_cdf_batches`` instead, so row values never
-    cross the Python→JVM boundary one pickled tuple at a time)."""
+    ``_cdf_frames`` (kept for tests; the data source readers ship
+    ``_cdf_batches`` instead, so row values never cross the Python→JVM
+    boundary one pickled tuple at a time)."""
     out: list[tuple] = []
     for pdf, ctype in _cdf_frames(path, v, cols, ref=ref, types=types):
         out += [
@@ -535,11 +535,6 @@ class CdfStreamReader(DataSourceStreamReader):
         ]
         self._path = options["path"]
         self._ref = options.get("ref")
-        # A/B hatch, read on the DRIVER at plan time (executor env is
-        # frozen at worker spawn): 0 = legacy per-row tuple emission
-        self._arrow = os.environ.get(
-            "SPARK_GRAFT_CDF_ARROW", "1"
-        ) != "0"
 
     def initialOffset(self) -> dict:
         return {"version": 0}
@@ -566,17 +561,12 @@ class CdfStreamReader(DataSourceStreamReader):
             InputPartition((self._path, None, (), None, ()))
         ]
 
-    def read(self, partition: InputPartition) -> Iterator[Tuple]:
+    def read(self, partition: InputPartition) -> Iterator:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         path, v, cols, ref, types = partition.value
         if v is None:
             return iter(())
-        if not self._arrow:
-            return iter(
-                _cdf_rows(path, v, list(cols), ref=ref,
-                          types=list(types))
-            )
         # Arrow batches, not per-row pickled tuples (guide §4): whole
         # columns cross the Python-worker boundary once per leg
         return _cdf_batches(

@@ -261,9 +261,7 @@ def _read_data(
 #: the 128 MB–1 GB band).  The default uses the plan's in-memory size
 #: estimate, which overshoots parquet bytes ~2-4×, so 128 MB estimated
 #: lands near the band's low end on disk.
-_TARGET_FILE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TARGET_FILE_BYTES", str(128 << 20))
-)
+_TARGET_FILE_BYTES = 128 << 20
 
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
@@ -276,10 +274,7 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     problem (guide §6).  ``coalesce`` is narrow (no added shuffle) and
     never raises the partition count, so a large rewrite keeps its
     parallelism — only estimated-small outputs collapse.  Estimation is
-    best-effort: on any failure the frame is returned unchanged.
-    ``SPARK_GRAFT_SIZED_WRITE=0`` disables (A/B and escape hatch)."""
-    if os.environ.get("SPARK_GRAFT_SIZED_WRITE", "1") == "0":
-        return df
+    best-effort: on any failure the frame is returned unchanged."""
     try:
         est = int(
             str(
@@ -1266,13 +1261,10 @@ def commit_update_where(
     # pre-image, CDF post-image) executed across TWO write actions —
     # without a pin the candidate files (and any MOR subtraction) are
     # scanned once per action (round 16, guide §2.4).  Scoped persist,
-    # released after the sidecar write; SPARK_GRAFT_UPDATE_PIN=0 is the
-    # A/B hatch.  ``persist`` (not localCheckpoint) keeps the logical
-    # plan so ``_sized_for_write`` sees measured bytes (the
-    # commit_merge discipline).
-    _upd_pin = os.environ.get("SPARK_GRAFT_UPDATE_PIN", "1") != "0"
-    if _upd_pin:
-        cur = cur.persist()
+    # released after the sidecar write.  ``persist`` (not
+    # localCheckpoint) keeps the logical plan so ``_sized_for_write``
+    # sees measured bytes (the commit_merge discipline).
+    cur = cur.persist()
     updated = cur.select(
         *[
             (
@@ -1318,8 +1310,7 @@ def commit_update_where(
         cdf_df = _sized_for_write(cdf_df)
         cdf_df.write.mode("overwrite").parquet(cdf_staging)
     finally:
-        if _upd_pin:
-            cur.unpersist()
+        cur.unpersist()
     cdf_files = [
         os.path.relpath(os.path.join(cdf_staging, n), path)
         for n in sorted(os.listdir(cdf_staging))
@@ -1446,8 +1437,8 @@ def commit_replace_where(
       untouched paths, untouched stats.
 
     ``df`` must satisfy the predicate: any row outside ``[lo, hi]``
-    raises before anything is staged (Delta's replaceWhere
-    constraint).  Outstanding equality deletes are carried for the
+    raises before anything is committed, and the refused commit's
+    staged files are removed (Delta's replaceWhere constraint).  Outstanding equality deletes are carried for the
     untouched files (the replaced region's are materialized by the
     rewrite); positional deletes naming a dropped/rewritten file
     expire with it.  Optimistic concurrency as everywhere: a
@@ -1465,8 +1456,8 @@ def commit_replace_where(
     # full pass over the incoming batch (limit(1).count() scans
     # everything when the data is valid — the common case) before a
     # second full pass wrote it.  The violation still raises before
-    # anything is COMMITTED (below, before ``_write_commit``); a
-    # staged-then-refused directory is unreferenced scratch.
+    # anything is COMMITTED (below, before ``_write_commit``), and the
+    # refused commit's staging dirs are removed.
     _obs = Observation(f"replw-{uuid.uuid4().hex[:8]}")
     df = df.observe(
         _obs,
@@ -1500,6 +1491,7 @@ def commit_replace_where(
     pos_outstanding = _snapshot_pos_deletes(path, base)
     entries: list[dict] = []
     schemas: dict[str, str] = {}
+    staged_dirs: list[str] = []
     if straddle:
         if outstanding or pos_outstanding:
             if any_ops:  # unreachable by the commit guards
@@ -1526,6 +1518,7 @@ def commit_replace_where(
             _data_dir(path), f"replw-{new_v}-{uuid.uuid4().hex[:8]}"
         )
         survivors = _sized_for_write(survivors)
+        staged_dirs.append(stag)
         survivors.write.mode("overwrite").parquet(stag)
         entries += _manifest_entries(path, stag, stat_cols, seq=new_v)
         schemas[os.path.basename(stag)] = _schema_json(survivors)
@@ -1533,10 +1526,12 @@ def commit_replace_where(
         _data_dir(path), f"replw-{new_v}-{uuid.uuid4().hex[:8]}"
     )
     df = _sized_for_write(df)
+    staged_dirs.append(staging)
     df.write.mode("overwrite").parquet(staging)
     bad = _obs.get["bad"]
     if bad is not None and bad > 0:
-        shutil.rmtree(staging, ignore_errors=True)
+        for d in staged_dirs:
+            shutil.rmtree(d, ignore_errors=True)
         raise ValueError(
             f"replaceWhere violation: incoming rows fall outside "
             f"{col} in [{lo}, {hi}]"
@@ -1814,23 +1809,20 @@ def commit_merge(
     # persist (MEMORY_AND_DISK, released in ``finally``) materializes
     # it once; unlike a localCheckpoint it keeps the logical plan, so
     # ``_sized_for_write``'s estimate sees the cache's MEASURED bytes
-    # instead of a lineage-truncated unknown (round 15, guide §2.4/§5)
-    pin = os.environ.get("SPARK_GRAFT_MERGE_PIN", "1") != "0"
-    if pin:
-        # CDC batches are typically unions of several derivation legs
-        # whose partition fan-out (sum of the legs') every downstream
-        # stage would inherit through the cache — bound the cached
-        # batch at the session's parallelism.  The coalesce is applied
-        # ONLY when the batch's plan actually exceeds the bound
-        # (ADVICE r15): coalesce propagates up through narrow stages,
-        # so an unconditional one would collapse a many-file narrow
-        # scan's parallelism even when no fan-out problem exists.
-        # ``persist()`` defaults to MEMORY_AND_DISK_DESER — spills
-        # rather than OOMs on an oversized batch.
-        bound = int(spark.sparkContext.defaultParallelism)
-        if changes.rdd.getNumPartitions() > bound:
-            changes = changes.coalesce(bound)
-        changes = changes.persist()
+    # instead of a lineage-truncated unknown (round 15, guide §2.4/§5).
+    # CDC batches are typically unions of several derivation legs whose
+    # partition fan-out (sum of the legs') every downstream stage would
+    # inherit through the cache — bound the cached batch at the
+    # session's parallelism.  The coalesce is applied ONLY when the
+    # batch's plan actually exceeds the bound (ADVICE r15): coalesce
+    # propagates up through narrow stages, so an unconditional one would
+    # collapse a many-file narrow scan's parallelism even when no fan-out
+    # problem exists.  ``persist()`` defaults to MEMORY_AND_DISK_DESER —
+    # spills rather than OOMs on an oversized batch.
+    bound = int(spark.sparkContext.defaultParallelism)
+    if changes.rdd.getNumPartitions() > bound:
+        changes = changes.coalesce(bound)
+    changes = changes.persist()
     try:
         return _commit_merge_pinned(
             spark, path, changes, key=key, stat_cols=stat_cols,
@@ -1839,8 +1831,7 @@ def commit_merge(
             new_v=new_v,
         )
     finally:
-        if pin:
-            changes.unpersist()
+        changes.unpersist()
 
 
 def _commit_merge_pinned(
@@ -2840,8 +2831,8 @@ def commit_delete_positions(
     # either way), where round 15 ran an eager localCheckpoint PLUS a
     # distinct+collect job before the write (3 extra jobs per commit and
     # a second pass over the positions).  Validation still happens
-    # before anything is COMMITTED: a staged-but-refused directory is
-    # unreferenced scratch, exactly like any aborted write.
+    # before anything is COMMITTED, and a refused commit removes its
+    # staging dir.
     if encoding == "dv":
         _write_dv_file(pos, staging)
         entries = _manifest_entries(path, staging, [], seq=new_v)
@@ -2870,6 +2861,7 @@ def commit_delete_positions(
     known = {os.path.abspath(os.path.join(path, f["path"])) for f in snapshot}
     unknown = [p for p in named if p not in known]
     if unknown:
+        shutil.rmtree(staging, ignore_errors=True)
         raise ValueError(
             f"positions name files outside snapshot {base}: {unknown[:3]}"
         )
@@ -3798,7 +3790,6 @@ def read_cdf(
         # is an insert, a null-key pre row a delete, never an update
         # pair) and lazily pins the diff for its four consumer legs.
         pre_cols = [c for c in pre.columns if c != key]
-        post_cols = [c for c in post.columns if c != key]
         pre_m = pre.select(
             key,
             *[F.col(c).alias(f"__pre_{c}") for c in pre_cols],

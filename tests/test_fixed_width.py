@@ -96,6 +96,32 @@ def test_writer_commit_protocol_and_directory_read(spark, tmp_path):
     assert not [n for n in os.listdir(out) if n.endswith(".tmp")]
 
 
+def test_writer_rejects_null_and_leaves_no_file(spark, tmp_path):
+    """TSR1 has no null encoding: a null key must fail the write, not
+    land as INT64_MIN, and the failed job must publish nothing."""
+    import os
+
+    out = str(tmp_path / "out")
+    FW.register(spark)
+    df = spark.createDataFrame([(None, 1, 1.0)], FW.TSR_SCHEMA)
+    with pytest.raises(Exception, match="column .key. holds nulls"):
+        df.write.format("tsr").mode("overwrite").option("path", out).save()
+    left = os.listdir(out) if os.path.isdir(out) else []
+    assert not [n for n in left if n.endswith(".tsr")]
+
+
+def test_writer_abort_skips_failed_tasks_missing_message(tmp_path):
+    """A failed task reports ``None``; abort still sweeps the stages
+    the other tasks reported."""
+    import os
+
+    w = FW.FixedWidthWriter({"path": str(tmp_path)})
+    msg = w.write(iter([]))
+    assert os.path.exists(msg.staged)
+    w.abort([None, msg])
+    assert os.listdir(tmp_path) == []
+
+
 def test_stream_writer_commit_is_idempotent_per_batch(tmp_path):
     """Checkpoint recovery replays the last micro-batch: a second
     commit of the same batchId must discard its stage, not

@@ -1974,6 +1974,43 @@ def test_positional_delete_unknown_file_raises(spark, ranged_table):
         TF.commit_delete_positions(spark, path, bogus)
 
 
+def _data_listing(path: str) -> list[str]:
+    root = TF._data_dir(path)
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, subdirs, names in os.walk(root)
+        for n in names + subdirs
+    )
+
+
+def test_refused_positional_delete_leaves_no_scratch(spark, ranged_table):
+    path, _ = ranged_table
+    bogus = spark.createDataFrame(
+        [("/nope/missing.parquet", 0)], "file_path string, pos long"
+    )
+    before = _data_listing(path)
+    for encoding in ("dv", "tuples"):
+        with pytest.raises(ValueError, match="outside snapshot"):
+            TF.commit_delete_positions(
+                spark, path, bogus, encoding=encoding
+            )
+        assert _data_listing(path) == before
+
+
+def test_refused_replace_where_leaves_no_scratch(spark, ranged_table):
+    """The straddling files' survivors are staged before the incoming
+    rows are checked: a violation must remove both staging dirs."""
+    path, _ = ranged_table
+    before = _data_listing(path)
+    with pytest.raises(ValueError, match="replaceWhere violation"):
+        TF.commit_replace_where(
+            spark, path,
+            spark.createDataFrame([(5, 0.0)], "k long, v double"),
+            col="k", lo=100, hi=300, stat_cols=["k"],
+        )
+    assert _data_listing(path) == before
+
+
 def test_vacuum_keeps_positional_delete_files(spark, ranged_table):
     path, _ = ranged_table
     TF.commit_delete_positions(

@@ -12,12 +12,31 @@ sniffs and parses container headers with :mod:`struct` alone (PNG IHDR,
 GIF87a/89a screen+image descriptors, RIFF/WAVE fmt+data, RIFF/AVI avih —
 :func:`parse_container`), and the fixture adapter
 :func:`attach_container_payload` synthesizes spec-valid container bytes
-to parse.  Full pixel/sample decode is REAL for the formats stdlib can
-express: PNG (zlib inflate + unfilter, :func:`png_pixels`), GIF
-(variable-width LZW + palette, :func:`gif_pixels`), WAV PCM
-(:func:`wav_pcm`).  Only true lossy codecs are stubbed
-(``decoder='real'`` raises — Pillow/av/ffmpeg are not in this container);
+to parse.
+
+Full pixel/sample decode is REAL, written to the public specs with
+stdlib + numpy: PNG (every filter, Adam7, palette), GIF (LZW, interlace,
+animation), JPEG (baseline, progressive, 4:2:0), MJPEG-in-AVI, BMP (incl.
+RLE8), TGA, QOI, Netpbm, PCX, ICO, WebP lossless, WAV PCM, IMA-ADPCM,
+G.711 mu-law and FLAC.  Only the lossy A/V codecs that need a codec
+library (H.264, MP3 audio) are not decoded: ``decoder='real'`` raises,
+and MP3/MP4/MKV get header and container walks instead.
 ``decoder='fake'`` remains for non-container fixture payloads.
+
+Two module-private helpers hold the Arrow batch framing (key column,
+dtype mapping, per-batch loop) that the public functions share:
+
+- :func:`_keyed_payload` backs the ``attach_*_payload`` fixture
+  adapters: one ``(key, payload)`` row per input row.
+- :func:`_per_payload` backs every stats/meta function that emits
+  exactly one row per payload.
+
+Both preserve partitioning (no shuffle).  A decoder raises
+``ValueError`` on malformed bytes, which fails the task; that is the
+quarantine path (:mod:`table_streaming_source_spark.malformed`,
+:func:`quarantine_decode`).  The functions that emit several rows per
+payload (``audio_features``, ``*_frame_stats``, ``srt_cue_rows``, ...)
+keep their own loops.
 """
 
 from __future__ import annotations
@@ -25,7 +44,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 
@@ -33,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -51,6 +71,88 @@ from table_streaming_source_spark.malformed import (  # noqa: F401
     check_dims as _check_dims,
     quarantinable,
 )
+from table_streaming_source_spark.operators.hof import spread
+
+_KEYED_PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("key", LongType(), False),
+        StructField("payload", BinaryType(), False),
+    ]
+)
+
+#: pandas dtype for a Spark column type: (NOT NULL, nullable); a type not
+#: listed (string, binary) stays an object column
+_PANDAS_DTYPES = {
+    LongType(): ("int64", "Int64"),
+    IntegerType(): ("int32", "Int32"),
+    DoubleType(): ("float64", "float64"),
+    BooleanType(): ("bool", "boolean"),
+}
+
+
+def _keyed_payload(
+    df: DataFrame, key: str, synth: Callable[[int], bytes]
+) -> DataFrame:
+    """Fixture adapter body: one ``(key, payload)`` row per input row,
+    ``payload = synth(key)`` built on the executor by Arrow-batched
+    ``mapInPandas``.  Schema ``key bigint NOT NULL, payload binary NOT
+    NULL``."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "key": pdf[key].astype("int64"),
+                    "payload": [synth(int(k)) for k in pdf[key]],
+                }
+            )
+
+    return df.select(key).mapInPandas(batches, schema=_KEYED_PAYLOAD_SCHEMA)
+
+
+def _per_payload(
+    df: DataFrame,
+    one: Callable[[bytes], "tuple | dict"],
+    schema: "StructType | str",
+    *,
+    key: str,
+    payload_col: str,
+) -> DataFrame:
+    """Exactly one output row per ``(key, payload)`` input row:
+    ``(int(key), *one(bytes(payload)))``, by Arrow-batched
+    ``mapInPandas`` over ``df`` as given (no projection, no shuffle).
+
+    ``schema`` names ``key`` first, then the columns ``one`` returns:
+    a tuple in schema order, or a dict keyed by column name.  Each
+    column is built with the pandas dtype of its Spark type.  ``one``
+    raises ``ValueError`` on malformed bytes, which fails the task: the
+    quarantine path (see :mod:`table_streaming_source_spark.malformed`).
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    dtypes = [
+        _PANDAS_DTYPES.get(f.dataType, (None, None))[f.nullable]
+        for f in schema.fields
+    ]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for k, payload in zip(pdf[key], pdf[payload_col]):
+                vals = one(bytes(payload))
+                if isinstance(vals, dict):
+                    vals = [vals[n] for n in names[1:]]
+                rows.append((int(k), *vals))
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(c, dtype=d)
+                    for n, c, d in zip(names, cols, dtypes)
+                }
+            )
+
+    return df.mapInPandas(batches, schema=schema)
 
 
 def attach_payload(df: DataFrame, text_col: str, key: str) -> DataFrame:
@@ -470,26 +572,7 @@ def synth_wav_tone(n_samples: int, seed: int) -> bytes:
 def attach_tone_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_wav_tone` per key
     (``n_samples = 100 + key % 400``, ``seed = key``), Arrow-batched."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_wav_tone(100 + int(k) % 400, int(k))
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, lambda k: synth_wav_tone(100 + k % 400, k))
 
 
 def _riff_chunks(payload: bytes):
@@ -591,6 +674,11 @@ AUDIO_RESAMPLE_SCHEMA = StructType(
 )
 
 
+def _pcm_stats(s: "object") -> tuple:
+    """``(n, Σs², min, max)`` of a decoded sample array."""
+    return len(s), int((s * s).sum()), int(s.min()), int(s.max())
+
+
 def audio_resample_stats(
     df: DataFrame,
     *,
@@ -610,32 +698,13 @@ def audio_resample_stats(
     stats row per clip — media bytes never shuffle."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "n_in", "n_out", "sum_sq", "min_s", "max_s",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                s = wav_pcm(bytes(payload)).astype(np.int64)
-                d = s[::factor]
-                rows["key"].append(int(k))
-                rows["n_in"].append(len(s))
-                rows["n_out"].append(len(d))
-                rows["sum_sq"].append(int((d * d).sum()))
-                rows["min_s"].append(int(d.min()))
-                rows["max_s"].append(int(d.max()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_in": pd.Series(rows["n_in"], dtype="int64"),
-                    "n_out": pd.Series(rows["n_out"], dtype="int64"),
-                    "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                    "min_s": pd.Series(rows["min_s"], dtype="int32"),
-                    "max_s": pd.Series(rows["max_s"], dtype="int32"),
-                }
-            )
+    def one(payload: bytes) -> tuple:
+        s = wav_pcm(payload).astype(np.int64)
+        return (len(s), *_pcm_stats(s[::factor]))
 
-    return df.mapInPandas(batches, schema=AUDIO_RESAMPLE_SCHEMA)
+    return _per_payload(
+        df, one, AUDIO_RESAMPLE_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -777,25 +846,7 @@ def adpcm_pcm(payload: bytes) -> "object":
 def attach_adpcm_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_wav_adpcm` per key,
     Arrow-batched."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_wav_adpcm(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_wav_adpcm)
 
 
 ADPCM_STATS_SCHEMA = StructType(
@@ -810,6 +861,11 @@ ADPCM_STATS_SCHEMA = StructType(
 )
 
 
+def _adpcm_one(payload: bytes) -> tuple:
+    s = adpcm_pcm(payload)
+    return (*_pcm_stats(s), int(s[-1]))
+
+
 def adpcm_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -819,35 +875,9 @@ def adpcm_stats(
     prefix-sum chain and is value-visible.  Arrow-batched
     ``mapInPandas``, partition-preserving; compressed audio bytes never
     shuffle."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "n_samples", "sum_sq", "min_s", "max_s", "last_s",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                s = adpcm_pcm(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_samples"].append(len(s))
-                rows["sum_sq"].append(int((s * s).sum()))
-                rows["min_s"].append(int(s.min()))
-                rows["max_s"].append(int(s.max()))
-                rows["last_s"].append(int(s[-1]))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_samples": pd.Series(
-                        rows["n_samples"], dtype="int64"
-                    ),
-                    "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                    "min_s": pd.Series(rows["min_s"], dtype="int32"),
-                    "max_s": pd.Series(rows["max_s"], dtype="int32"),
-                    "last_s": pd.Series(rows["last_s"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=ADPCM_STATS_SCHEMA)
+    return _per_payload(
+        df, _adpcm_one, ADPCM_STATS_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -918,30 +948,15 @@ def png_pixels(payload: bytes) -> "object":
 def attach_pixel_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_png_pixels` per key
     (``w = 16 + (7k) % 48``, ``h = 16 + (13k) % 48``, ``seed = k``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_pixels(
+            16 + (7 * k) % 48,
+            16 + (13 * k) % 48,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_pixels(
-                            16 + (7 * int(k)) % 48,
-                            16 + (13 * int(k)) % 48,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 PIXEL_STATS_SCHEMA = StructType(
@@ -957,6 +972,20 @@ PIXEL_STATS_SCHEMA = StructType(
 )
 
 
+def _pixel_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    px = decode_pixels(payload).astype(np.int64)
+    return (
+        px.shape[1],
+        px.shape[0],
+        int(px.sum()),
+        int(px.min()),
+        int(px.max()),
+        int(np.abs(np.diff(px, axis=1)).sum()),
+    )
+
+
 def image_pixel_stats(
     df: DataFrame,
     *,
@@ -968,46 +997,15 @@ def image_pixel_stats(
     (``Σ |p(x+1,y) − p(x,y)|`` — the gradient magnitude quality
     filters threshold on).  All-integer → engine-exact; Arrow-batched
     ``mapInPandas``, no shuffle."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "key", "width", "height", "sum_px", "min_px", "max_px",
-                "edge_energy",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = decode_pixels(bytes(payload)).astype(np.int64)
-                out["key"].append(int(k))
-                out["height"].append(px.shape[0])
-                out["width"].append(px.shape[1])
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-                out["edge_energy"].append(
-                    int(np.abs(np.diff(px, axis=1)).sum())
-                )
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "sum_px": pd.Series(out["sum_px"], dtype="int64"),
-                    "min_px": pd.Series(out["min_px"], dtype="int32"),
-                    "max_px": pd.Series(out["max_px"], dtype="int32"),
-                    "edge_energy": pd.Series(
-                        out["edge_energy"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        df, _pixel_one, PIXEL_STATS_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
 # image: real GIF (LZW) pixel decode — the second true-codec path the
 # sandbox permits stdlib-only (variable-width LZW per the public GIF89a
-# spec), alongside PNG zlib-inflate.  JPEG/H.264/MP3 remain stubbed.
+# spec), alongside PNG zlib-inflate.
 # ---------------------------------------------------------------------------
 
 def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
@@ -1295,30 +1293,15 @@ def attach_gif_interlaced_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_gif_interlaced` per key
     (``w = 10 + (7k) % 30``, ``h = 9 + (11k) % 26`` — heights cover all
     four interlace passes)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_gif_interlaced(
+            10 + (7 * k) % 30,
+            9 + (11 * k) % 26,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_gif_interlaced(
-                            10 + (7 * int(k)) % 30,
-                            9 + (11 * int(k)) % 26,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 @quarantinable("GIF")
@@ -1378,31 +1361,16 @@ def attach_gif_animation_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_gif_animation` per key
     (``w = 16 + (7k) % 32``, ``h = 16 + (13k) % 32``,
     ``n_frames = 2 + k % 4``, ``seed = k``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_gif_animation(
+            16 + (7 * k) % 32,
+            16 + (13 * k) % 32,
+            2 + k % 4,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_gif_animation(
-                            16 + (7 * int(k)) % 32,
-                            16 + (13 * int(k)) % 32,
-                            2 + int(k) % 4,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 FRAME_STATS_SCHEMA = StructType(
@@ -1629,31 +1597,16 @@ def attach_avi_video_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_avi_video` per key
     (``w = 8 + (5k) % 16``, ``h = 8 + (3k) % 16``,
     ``n_frames = 2 + k % 4``, ``seed = k``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_avi_video(
+            8 + (5 * k) % 16,
+            8 + (3 * k) % 16,
+            2 + k % 4,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_avi_video(
-                            8 + (5 * int(k)) % 16,
-                            8 + (3 * int(k)) % 16,
-                            2 + int(k) % 4,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 VIDEO_FRAME_STATS_SCHEMA = StructType(
@@ -1731,30 +1684,15 @@ def avi_frame_stats(
 def attach_gif_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_gif_pixels` per key (same
     geometry formulas as :func:`attach_pixel_payload`)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_gif_pixels(
+            16 + (7 * k) % 48,
+            16 + (13 * k) % 48,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_gif_pixels(
-                            16 + (7 * int(k)) % 48,
-                            16 + (13 * int(k)) % 48,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def attach_pixel_payload_dups(df: DataFrame, key: str) -> DataFrame:
@@ -1763,30 +1701,15 @@ def attach_pixel_payload_dups(df: DataFrame, key: str) -> DataFrame:
     ``seed = k%7``), so distinct keys frequently carry byte-identical
     images — the shape a perceptual-dedup entry needs true duplicates
     for."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_pixels(
+            16 + (k % 5) * 4,
+            16 + (k % 3) * 4,
+            k % 7,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_pixels(
-                            16 + (int(k) % 5) * 4,
-                            16 + (int(k) % 3) * 4,
-                            int(k) % 7,
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 AHASH_SCHEMA = StructType(
@@ -1834,23 +1757,13 @@ def image_ahash(
                         bits_hi |= 1 << (k - 32)
         return bits_hi, bits_lo
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"key": [], "hash_hi": [], "hash_lo": []}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                hi, lo = ahash(decode_pixels(bytes(payload)))
-                out["key"].append(int(k))
-                out["hash_hi"].append(hi)
-                out["hash_lo"].append(lo)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "hash_hi": pd.Series(out["hash_hi"], dtype="int64"),
-                    "hash_lo": pd.Series(out["hash_lo"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=AHASH_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: ahash(decode_pixels(p)),
+        AHASH_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 QUARANTINE_SCHEMA = StructType(
@@ -1865,6 +1778,15 @@ QUARANTINE_SCHEMA = StructType(
         StructField("n_bytes", LongType(), False),
     ]
 )
+
+
+def _quarantine_one(payload: bytes) -> tuple:
+    n = len(payload)
+    try:
+        mt, w, h, nf = parse_container(payload)
+    except ValueError:
+        return "error", "invalid_container", None, None, None, None, n
+    return "ok", None, mt, w, h, nf, n
 
 
 def quarantine_decode(
@@ -1882,46 +1804,13 @@ def quarantine_decode(
     ``mapInPandas``; route ``status='error'`` rows to a quarantine sink
     downstream and reprocess after codec fixes.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "status", "error_kind", "media_type", "width",
-                "height", "n_frames", "n_bytes",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                b = bytes(payload)
-                rows["key"].append(int(k))
-                rows["n_bytes"].append(len(b))
-                try:
-                    mt, w, h, nf = parse_container(b)
-                    rows["status"].append("ok")
-                    rows["error_kind"].append(None)
-                    rows["media_type"].append(mt)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_frames"].append(nf)
-                except ValueError:
-                    rows["status"].append("error")
-                    rows["error_kind"].append("invalid_container")
-                    rows["media_type"].append(None)
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["n_frames"].append(None)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "status": rows["status"],
-                    "error_kind": rows["error_kind"],
-                    "media_type": rows["media_type"],
-                    "width": pd.Series(rows["width"], dtype="Int32"),
-                    "height": pd.Series(rows["height"], dtype="Int32"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="Int32"),
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=QUARANTINE_SCHEMA)
+    return _per_payload(
+        df,
+        _quarantine_one,
+        QUARANTINE_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1931,8 +1820,9 @@ def quarantine_decode(
 # media as opaque payloads and delegates decode to the host framework
 # (reference src/main has no codec surface); this is the north-star
 # training-pipeline extension, same extension point as PNG/GIF above.
-# Progressive (SOF2) and arithmetic-coded JPEGs raise ValueError → route
-# through quarantine_decode; only H.264/MP3 remain library-gated.
+# Arithmetic-coded and the unsupported progressive/subsampled forms
+# raise ValueError → route through quarantine_decode; only H.264/MP3
+# remain library-gated.
 # ---------------------------------------------------------------------------
 
 #: zigzag scan position → linear (row-major) coefficient index (T.81 fig 5)
@@ -2294,18 +2184,19 @@ def _next_marker(payload: bytes, pos: int) -> int:
 @quarantinable("JPEG")
 def jpeg_planes(payload: bytes) -> "list":
     """Decode a baseline sequential JPEG (SOF0/SOF1, huffman) to its
-    per-component uint8 planes (Y, or Y/Cb/Cr for 4:4:4 color), AFTER
+    per-component uint8 planes (Y, or Y/Cb/Cr for 4:4:4 and 4:2:0
+    color, chroma at its own resolution), AFTER
     level shift + clip but BEFORE color conversion — the REAL pipeline:
     marker parse → canonical huffman decode → dequant → 2-D IDCT, with
     restart markers honored.  Component planes are the bit-exact
     contract (the DC path round-trips integers exactly); the float
     YCbCr→RGB conversion layers on top in :func:`jpeg_pixels`.
 
-    Progressive (SOF2) grayscale decodes for REAL (round 4): per-scan
-    coefficient accumulation across DC first/refinement passes and AC
-    spectral bands with EOBn runs (T.81 Annex G), then the shared
-    dequant+IDCT.  Progressive color, AC successive-approximation
-    refinement, arithmetic-coded, and subsampled JPEGs raise
+    Progressive (SOF2) grayscale and 4:4:4 color decode for REAL:
+    per-scan coefficient accumulation across DC first/refinement passes
+    and AC spectral bands with EOBn runs (T.81 Annex G), then the shared
+    dequant+IDCT.  Subsampled progressive, AC successive-approximation
+    refinement, arithmetic-coded JPEGs and other chroma geometries raise
     ``ValueError`` — route through :func:`quarantine_decode`."""
     import numpy as np
 
@@ -2726,59 +2617,29 @@ def synth_jpeg_progressive(width: int, height: int, seed: int) -> bytes:
 def attach_jpeg_progressive_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_jpeg_progressive` per key (same
     geometry formulas as :func:`attach_jpeg_payload`)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_jpeg_progressive(
+            8 * (2 + (7 * k) % 6),
+            8 * (2 + (13 * k) % 6),
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_jpeg_progressive(
-                            8 * (2 + (7 * int(k)) % 6),
-                            8 * (2 + (13 * int(k)) % 6),
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def attach_jpeg_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_jpeg_blocks` per key
     (``w = 8·(2 + (7k) % 6)``, ``h = 8·(2 + (13k) % 6)``, ``seed = k``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_jpeg_blocks(
+            8 * (2 + (7 * k) % 6),
+            8 * (2 + (13 * k) % 6),
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_jpeg_blocks(
-                            8 * (2 + (7 * int(k)) % 6),
-                            8 * (2 + (13 * int(k)) % 6),
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def encode_jpeg_color_coeffs(
@@ -2878,30 +2739,15 @@ def synth_jpeg_color(width: int, height: int, seed: int) -> bytes:
 def attach_jpeg_color_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_jpeg_color` per key
     (``w = 8·(2 + (7k) % 5)``, ``h = 8·(2 + (11k) % 5)``, ``seed = k``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_jpeg_color(
+            8 * (2 + (7 * k) % 5),
+            8 * (2 + (11 * k) % 5),
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_jpeg_color(
-                            8 * (2 + (7 * int(k)) % 5),
-                            8 * (2 + (11 * int(k)) % 5),
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 JPEG_COLOR_STATS_SCHEMA = StructType(
@@ -2918,6 +2764,21 @@ JPEG_COLOR_STATS_SCHEMA = StructType(
 )
 
 
+def _jpeg_color_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    y, cb, cr = (p.astype(np.int64) for p in jpeg_planes(payload))
+    return (
+        y.shape[1],
+        y.shape[0],
+        int(y.sum()),
+        int(cb.sum()),
+        int(cr.sum()),
+        int(y.max()),
+        int(cr.min()),
+    )
+
+
 def jpeg_color_stats(
     df: DataFrame,
     *,
@@ -2931,40 +2792,13 @@ def jpeg_color_stats(
     float YCbCr→RGB conversion, so every value is an exact integer a SQL
     oracle can restate; the RGB layer is covered by unit tests.
     Arrow-batched ``mapInPandas``, no shuffle."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "key", "width", "height", "sum_y", "sum_cb", "sum_cr",
-                "max_y", "min_cr",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                y, cb, cr = (
-                    p.astype(np.int64) for p in jpeg_planes(bytes(payload))
-                )
-                out["key"].append(int(k))
-                out["height"].append(y.shape[0])
-                out["width"].append(y.shape[1])
-                out["sum_y"].append(int(y.sum()))
-                out["sum_cb"].append(int(cb.sum()))
-                out["sum_cr"].append(int(cr.sum()))
-                out["max_y"].append(int(y.max()))
-                out["min_cr"].append(int(cr.min()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "sum_y": pd.Series(out["sum_y"], dtype="int64"),
-                    "sum_cb": pd.Series(out["sum_cb"], dtype="int64"),
-                    "sum_cr": pd.Series(out["sum_cr"], dtype="int64"),
-                    "max_y": pd.Series(out["max_y"], dtype="int32"),
-                    "min_cr": pd.Series(out["min_cr"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=JPEG_COLOR_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        _jpeg_color_one,
+        JPEG_COLOR_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3310,23 +3144,7 @@ def flac_pcm(payload: bytes) -> "object":
 
 def attach_flac_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_flac` per key, Arrow-batched."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_flac(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_flac)
 
 
 FLAC_STATS_SCHEMA = StructType(
@@ -3342,6 +3160,11 @@ FLAC_STATS_SCHEMA = StructType(
 )
 
 
+def _flac_one(payload: bytes) -> tuple:
+    s = flac_pcm(payload)
+    return (*_pcm_stats(s), int(s[0]), int(s[-1]))
+
+
 def flac_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -3350,36 +3173,9 @@ def flac_stats(
     reconstruction, warm-up handling, or frame stitching diverges from
     the synthesis formula and is value-visible.  Arrow-batched
     ``mapInPandas``, partition-preserving."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "n_samples", "sum_sq", "min_s", "max_s",
-                "first_s", "last_s",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                s = flac_pcm(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_samples"].append(len(s))
-                rows["sum_sq"].append(int((s * s).sum()))
-                rows["min_s"].append(int(s.min()))
-                rows["max_s"].append(int(s.max()))
-                rows["first_s"].append(int(s[0]))
-                rows["last_s"].append(int(s[-1]))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                    "sum_sq": pd.Series(rows["sum_sq"], dtype="int64"),
-                    "min_s": pd.Series(rows["min_s"], dtype="int32"),
-                    "max_s": pd.Series(rows["max_s"], dtype="int32"),
-                    "first_s": pd.Series(rows["first_s"], dtype="int32"),
-                    "last_s": pd.Series(rows["last_s"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=FLAC_STATS_SCHEMA)
+    return _per_payload(
+        df, _flac_one, FLAC_STATS_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3403,25 +3199,7 @@ def synth_mixed_audio(key: int) -> bytes:
 
 def attach_mixed_audio_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_mixed_audio` per key."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_mixed_audio(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_mixed_audio)
 
 
 MIXED_AUDIO_SCHEMA = StructType(
@@ -3463,6 +3241,14 @@ def _sniff_decode_audio_inner(payload: bytes):
     raise ValueError("unrecognized audio container")
 
 
+def _mixed_audio_one(payload: bytes) -> tuple:
+    try:
+        codec, s = _sniff_decode_audio(payload)
+        return codec, len(s), int((s * s).sum())
+    except ValueError:
+        return "quarantined", 0, 0
+
+
 def mixed_audio_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -3472,29 +3258,13 @@ def mixed_audio_stats(
     ``codec='quarantined'`` rows instead of failing the job — the
     format-dispatch front door every crawled-audio pipeline needs.
     Arrow-batched ``mapInPandas``, partition-preserving."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys, codecs, ns, sqs = [], [], [], []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                try:
-                    codec, s = _sniff_decode_audio(bytes(payload))
-                    n, sq = len(s), int((s * s).sum())
-                except ValueError:
-                    codec, n, sq = "quarantined", 0, 0
-                keys.append(int(k))
-                codecs.append(codec)
-                ns.append(n)
-                sqs.append(sq)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(keys, dtype="int64"),
-                    "codec": pd.Series(codecs, dtype="object"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "sum_sq": pd.Series(sqs, dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=MIXED_AUDIO_SCHEMA)
+    return _per_payload(
+        df,
+        _mixed_audio_one,
+        MIXED_AUDIO_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3577,31 +3347,16 @@ def avi_mjpeg_frames(payload: bytes, *, step: int = 1) -> list:
 def attach_mjpeg_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_avi_mjpeg` per key —
     ``w = 8·(2 + k%3)``, ``h = 8·(2 + k%2)``, ``2 + k%3`` frames."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_avi_mjpeg(
+            8 * (2 + k % 3),
+            8 * (2 + k % 2),
+            2 + k % 3,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_avi_mjpeg(
-                            8 * (2 + int(k) % 3),
-                            8 * (2 + int(k) % 2),
-                            2 + int(k) % 3,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 MJPEG_STATS_SCHEMA = StructType(
@@ -3775,30 +3530,15 @@ def synth_jpeg_420(width: int, height: int, seed: int) -> bytes:
 def attach_jpeg_420_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_jpeg_420` per key —
     ``w = 16·(1 + k%3)``, ``h = 16·(1 + k%2)``."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_jpeg_420(
+            16 * (1 + k % 3),
+            16 * (1 + k % 2),
+            k % 256,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_jpeg_420(
-                            16 * (1 + int(k) % 3),
-                            16 * (1 + int(k) % 2),
-                            int(k) % 256,
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 JPEG420_STATS_SCHEMA = StructType(
@@ -3816,6 +3556,30 @@ JPEG420_STATS_SCHEMA = StructType(
 )
 
 
+def _plane_sums(y: "object", cb: "object", cr: "object") -> tuple:
+    """``(Σy, Σcb, Σcr, Σ y·(bx + 2·by))`` of decoded JPEG planes, where
+    ``(bx, by)`` is the luma pixel's 8×8 block position."""
+    import numpy as np
+
+    yy = y.astype(np.int64)
+    h, w = yy.shape
+    wgt = (
+        np.arange(w, dtype=np.int64)[None, :] // 8
+        + 2 * (np.arange(h, dtype=np.int64)[:, None] // 8)
+    )
+    return (
+        int(yy.sum()),
+        int(cb.astype(np.int64).sum()),
+        int(cr.astype(np.int64).sum()),
+        int((yy * wgt).sum()),
+    )
+
+
+def _jpeg_420_one(payload: bytes) -> tuple:
+    y, cb, cr = jpeg_planes(payload)
+    return (*y.shape[::-1], *cb.shape[::-1], *_plane_sums(y, cb, cr))
+
+
 def jpeg_420_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -3824,46 +3588,13 @@ def jpeg_420_stats(
     resolution), Σ per plane proves the three DC predictor chains, and
     the block-position-weighted luma sum catches any block placement
     slip in the 2×2 interleave.  Arrow-batched ``mapInPandas``."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "y_w", "y_h", "c_w", "c_h",
-                "sum_y", "sum_cb", "sum_cr", "wsum_y",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                y, cb, cr = jpeg_planes(bytes(payload))
-                yy = y.astype(np.int64)
-                h, w = yy.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :] // 8
-                    + 2 * (np.arange(h, dtype=np.int64)[:, None] // 8)
-                )
-                rows["key"].append(int(k))
-                rows["y_w"].append(w)
-                rows["y_h"].append(h)
-                rows["c_w"].append(cb.shape[1])
-                rows["c_h"].append(cb.shape[0])
-                rows["sum_y"].append(int(yy.sum()))
-                rows["sum_cb"].append(int(cb.astype(np.int64).sum()))
-                rows["sum_cr"].append(int(cr.astype(np.int64).sum()))
-                rows["wsum_y"].append(int((yy * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "y_w": pd.Series(rows["y_w"], dtype="int32"),
-                    "y_h": pd.Series(rows["y_h"], dtype="int32"),
-                    "c_w": pd.Series(rows["c_w"], dtype="int32"),
-                    "c_h": pd.Series(rows["c_h"], dtype="int32"),
-                    "sum_y": pd.Series(rows["sum_y"], dtype="int64"),
-                    "sum_cb": pd.Series(rows["sum_cb"], dtype="int64"),
-                    "sum_cr": pd.Series(rows["sum_cr"], dtype="int64"),
-                    "wsum_y": pd.Series(rows["wsum_y"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=JPEG420_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        _jpeg_420_one,
+        JPEG420_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3998,25 +3729,7 @@ TIFF_META_SCHEMA = StructType(
 
 def attach_tiff_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_tiff_exif` per key."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_tiff_exif(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_tiff_exif)
 
 
 def tiff_meta_stats(
@@ -4026,34 +3739,9 @@ def tiff_meta_stats(
     -time layer an image-prep pipeline reads before any pixel decode
     (orientation decides the resize transform; capture time drives
     dedup windows).  Arrow-batched ``mapInPandas``."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "orientation",
-                "datetime_original",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = tiff_exif_meta(bytes(payload))
-                rows["key"].append(int(k))
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["orientation"].append(m["orientation"])
-                rows["datetime_original"].append(m["datetime_original"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "orientation": pd.Series(
-                        rows["orientation"], dtype="int32"
-                    ),
-                    "datetime_original": pd.Series(
-                        rows["datetime_original"], dtype="object"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=TIFF_META_SCHEMA)
+    return _per_payload(
+        df, tiff_exif_meta, TIFF_META_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 def encode_jpeg_color_progressive(
@@ -4206,30 +3894,20 @@ def synth_jpeg_progressive_color(width: int, height: int, seed: int) -> bytes:
 def attach_jpeg_progressive_color_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_jpeg_progressive_color` per key
     — ``w = 8·(1 + k%4)``, ``h = 8·(1 + k%3)``."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_jpeg_progressive_color(
+            8 * (1 + k % 4),
+            8 * (1 + k % 3),
+            k % 256,
+        ),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_jpeg_progressive_color(
-                            8 * (1 + int(k) % 4),
-                            8 * (1 + int(k) % 3),
-                            int(k) % 256,
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
 
-    return df.select(key).mapInPandas(batches, schema=schema)
+def _jpeg_444_one(payload: bytes) -> tuple:
+    y, cb, cr = jpeg_planes(payload)
+    return (*y.shape[::-1], *_plane_sums(y, cb, cr))
 
 
 def jpeg_color_plane_stats(
@@ -4238,8 +3916,6 @@ def jpeg_color_plane_stats(
     """Per-component plane sums of a decoded color JPEG (baseline or
     progressive) — the integer-exact contract shared by the 4:4:4
     entries.  Arrow-batched ``mapInPandas``."""
-    import numpy as np
-
     schema = StructType(
         [
             StructField("key", LongType(), False),
@@ -4252,39 +3928,9 @@ def jpeg_color_plane_stats(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "w", "h", "sum_y", "sum_cb", "sum_cr", "wsum_y",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                y, cb, cr = jpeg_planes(bytes(payload))
-                yy = y.astype(np.int64)
-                h, w = yy.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :] // 8
-                    + 2 * (np.arange(h, dtype=np.int64)[:, None] // 8)
-                )
-                rows["key"].append(int(k))
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["sum_y"].append(int(yy.sum()))
-                rows["sum_cb"].append(int(cb.astype(np.int64).sum()))
-                rows["sum_cr"].append(int(cr.astype(np.int64).sum()))
-                rows["wsum_y"].append(int((yy * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "w": pd.Series(rows["w"], dtype="int32"),
-                    "h": pd.Series(rows["h"], dtype="int32"),
-                    "sum_y": pd.Series(rows["sum_y"], dtype="int64"),
-                    "sum_cb": pd.Series(rows["sum_cb"], dtype="int64"),
-                    "sum_cr": pd.Series(rows["sum_cr"], dtype="int64"),
-                    "wsum_y": pd.Series(rows["wsum_y"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _jpeg_444_one, schema, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4361,28 +4007,9 @@ def attach_bmp_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_bmp` per key —
     ``w = 4 + k%13``, ``h = 3 + k%7`` (deliberately not multiples of 4,
     so the row stride genuinely matters)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df, key, lambda k: synth_bmp(4 + k % 13, 3 + k % 7, k % 256)
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_bmp(
-                            4 + int(k) % 13, 3 + int(k) % 7, int(k) % 256
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 BMP_STATS_SCHEMA = StructType(
@@ -4398,6 +4025,52 @@ BMP_STATS_SCHEMA = StructType(
 )
 
 
+def _xy_weight(h: int, w: int) -> "object":
+    """The ``(h, w)`` position weight ``x + 2y``: a checksum under it
+    changes when a decoder misplaces a pixel, not only when it gets a
+    value wrong."""
+    import numpy as np
+
+    return (
+        np.arange(w, dtype=np.int64)[None, :]
+        + 2 * np.arange(h, dtype=np.int64)[:, None]
+    )
+
+
+def _gray_one(px: "object") -> tuple:
+    """``(width, height, Σp, min, max, Σ p·(x + 2y))`` of decoded gray
+    ``(h, w)`` pixels."""
+    import numpy as np
+
+    px = px.astype(np.int64)
+    h, w = px.shape
+    return (
+        w,
+        h,
+        int(px.sum()),
+        int(px.min()),
+        int(px.max()),
+        int((px * _xy_weight(h, w)).sum()),
+    )
+
+
+def _rgb_one(px: "object") -> tuple:
+    """``(width, height, Σr, Σg, Σb, Σ r·(x + 2y))`` of decoded
+    ``(h, w, 3)`` pixels: the RGB checksum."""
+    import numpy as np
+
+    px = px.astype(np.int64)
+    h, w, _ = px.shape
+    return (
+        w,
+        h,
+        int(px[:, :, 0].sum()),
+        int(px[:, :, 1].sum()),
+        int(px[:, :, 2].sum()),
+        int((px[:, :, 0] * _xy_weight(h, w)).sum()),
+    )
+
+
 def bmp_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -4405,40 +4078,13 @@ def bmp_stats(
     position-weighted ``Σ r·(x + 2y)`` that makes a forgotten flip,
     BGR swap, or stride slip value-visible.  Arrow-batched
     ``mapInPandas``."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "w", "h", "sum_r", "sum_g", "sum_b", "wsum_r",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = bmp_pixels(bytes(payload)).astype(np.int64)
-                h, w, _ = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["wsum_r"].append(int((px[:, :, 0] * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "w": pd.Series(rows["w"], dtype="int32"),
-                    "h": pd.Series(rows["h"], dtype="int32"),
-                    "sum_r": pd.Series(rows["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(rows["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(rows["sum_b"], dtype="int64"),
-                    "wsum_r": pd.Series(rows["wsum_r"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=BMP_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _rgb_one(bmp_pixels(p)),
+        BMP_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4491,26 +4137,7 @@ def ulaw_expand(codes: "object") -> "object":
 def attach_ulaw_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_wav_ulaw` per key
     (``n_samples = 80 + key % 300``, ``seed = key``), Arrow-batched."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_wav_ulaw(80 + int(k) % 300, int(k))
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, lambda k: synth_wav_ulaw(80 + k % 300, k))
 
 
 def ulaw_features(
@@ -4606,25 +4233,7 @@ def synth_mp3_frames(seed: int) -> bytes:
 
 def attach_mp3_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_mp3_frames` per key."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_mp3_frames(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_mp3_frames)
 
 
 MPEG_META_SCHEMA = StructType(
@@ -4678,37 +4287,9 @@ def mpeg_audio_meta(
     Arrow-batched ``mapInPandas``, partition-preserving, zero shuffles;
     a malformed header raises rather than silently resyncing — the
     quarantine entry is the place malformed media routes to."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "n_frames", "samplerate", "total_bytes",
-                "sum_bitrate_kbps",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                n, sr, total, brs = _mpeg_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_frames"].append(n)
-                rows["samplerate"].append(sr)
-                rows["total_bytes"].append(total)
-                rows["sum_bitrate_kbps"].append(brs)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int32"),
-                    "samplerate": pd.Series(
-                        rows["samplerate"], dtype="int32"
-                    ),
-                    "total_bytes": pd.Series(
-                        rows["total_bytes"], dtype="int64"
-                    ),
-                    "sum_bitrate_kbps": pd.Series(
-                        rows["sum_bitrate_kbps"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=MPEG_META_SCHEMA)
+    return _per_payload(
+        df, _mpeg_one, MPEG_META_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4829,30 +4410,15 @@ def attach_interlaced_payload(df: DataFrame, key: str) -> DataFrame:
     (``w = 8 + (7k) % 17``, ``h = 8 + (13k) % 19``, ``seed = k``) —
     small enough that every Adam7 pass is non-empty and the SQL oracle
     can enumerate pixels cheaply."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_interlaced(
+            8 + (7 * k) % 17,
+            8 + (13 * k) % 19,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_interlaced(
-                            8 + (7 * int(k)) % 17,
-                            8 + (13 * int(k)) % 19,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def interlaced_pixel_stats(
@@ -4864,41 +4430,13 @@ def interlaced_pixel_stats(
     change the answer, so the deinterlace scatter is value-checked, not
     just the pixel multiset.  mapInPandas, partition-preserving, zero
     shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_px", "min_px", "max_px",
-                "wsum_px",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = png_pixels_adam7(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_px"].append(int(px.sum()))
-                rows["min_px"].append(int(px.min()))
-                rows["max_px"].append(int(px.max()))
-                rows["wsum_px"].append(int((px * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_px": pd.Series(rows["sum_px"], dtype="int64"),
-                    "min_px": pd.Series(rows["min_px"], dtype="int32"),
-                    "max_px": pd.Series(rows["max_px"], dtype="int32"),
-                    "wsum_px": pd.Series(rows["wsum_px"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=INTERLACED_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _gray_one(png_pixels_adam7(p)),
+        INTERLACED_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5048,30 +4586,15 @@ def attach_filtered_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_png_filtered` per key
     (``w = 9 + (7k) % 20``, ``h = 9 + (13k) % 22`` — ≥5 rows, so every
     filter type occurs in every payload)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_filtered(
+            9 + (7 * k) % 20,
+            9 + (13 * k) % 22,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_filtered(
-                            9 + (7 * int(k)) % 20,
-                            9 + (13 * int(k)) % 22,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def filtered_pixel_stats(
@@ -5081,41 +4604,13 @@ def filtered_pixel_stats(
     as :func:`interlaced_pixel_stats` (position-weighted checksum makes
     any unfilter mistake change the answer); mapInPandas, zero
     shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_px", "min_px", "max_px",
-                "wsum_px",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = png_pixels_filtered(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_px"].append(int(px.sum()))
-                rows["min_px"].append(int(px.min()))
-                rows["max_px"].append(int(px.max()))
-                rows["wsum_px"].append(int((px * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_px": pd.Series(rows["sum_px"], dtype="int64"),
-                    "min_px": pd.Series(rows["min_px"], dtype="int32"),
-                    "max_px": pd.Series(rows["max_px"], dtype="int32"),
-                    "wsum_px": pd.Series(rows["wsum_px"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=INTERLACED_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _gray_one(png_pixels_filtered(p)),
+        INTERLACED_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 def synth_png_rgb_filtered(width: int, height: int, seed: int) -> bytes:
@@ -5193,30 +4688,15 @@ def attach_rgb_filtered_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_png_rgb_filtered` per key
     (``w = 9 + (7k) % 18``, ``h = 9 + (13k) % 20`` — ≥5 rows so every
     filter type occurs)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_rgb_filtered(
+            9 + (7 * k) % 18,
+            9 + (13 * k) % 20,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_rgb_filtered(
-                            9 + (7 * int(k)) % 18,
-                            9 + (13 * int(k)) % 20,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def rgb_filtered_stats(
@@ -5225,41 +4705,13 @@ def rgb_filtered_stats(
     """Per-channel stats over REAL truecolor all-filter PNG decode —
     the position-weighted red sum catches both unfilter and channel-
     interleave mistakes.  mapInPandas, zero shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_r", "sum_g", "sum_b",
-                "wsum_r",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = png_pixels_filtered(bytes(payload)).astype(np.int64)
-                h, w, _ = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["wsum_r"].append(int((px[:, :, 0] * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_r": pd.Series(rows["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(rows["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(rows["sum_b"], dtype="int64"),
-                    "wsum_r": pd.Series(rows["wsum_r"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RGB_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _rgb_one(png_pixels_filtered(p)),
+        RGB_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5386,30 +4838,15 @@ def tga_pixels(payload: bytes) -> "object":
 def attach_tga_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_tga_rle` per key
     (``w = 9 + (7k) % 18``, ``h = 9 + (13k) % 20``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_tga_rle(
+            9 + (7 * k) % 18,
+            9 + (13 * k) % 20,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_tga_rle(
-                            9 + (7 * int(k)) % 18,
-                            9 + (13 * int(k)) % 20,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def tga_stats(
@@ -5418,41 +4855,13 @@ def tga_stats(
     """Per-channel stats over REAL TGA RLE decode — same contract as
     :func:`rgb_filtered_stats` (position-weighted red checksum catches
     RLE, flip, and channel-swap mistakes)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_r", "sum_g", "sum_b",
-                "wsum_r",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = tga_pixels(bytes(payload)).astype(np.int64)
-                h, w, _ = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["wsum_r"].append(int((px[:, :, 0] * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_r": pd.Series(rows["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(rows["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(rows["sum_b"], dtype="int64"),
-                    "wsum_r": pd.Series(rows["wsum_r"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RGB_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _rgb_one(tga_pixels(p)),
+        RGB_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 def synth_ico(images: "list[tuple[int, int, int, int]]") -> bytes:
@@ -5561,31 +4970,16 @@ def attach_ico_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one two-resolution :func:`synth_ico` per key —
     image 0 ``(5 + k%12) × (4 + k%9)``, image 1 ``(3 + k%5) × (3 +
     k%4)``, seeds ``(k + 17·j) % 256``."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_ico(
+            [
+                (5 + k % 12, 4 + k % 9, k % 256, k),
+                (3 + k % 5, 3 + k % 4, (k + 17) % 256, k),
+            ]
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for k in pdf[key]:
-                k = int(k)
-                payloads.append(
-                    synth_ico(
-                        [
-                            (5 + k % 12, 4 + k % 9, k % 256, k),
-                            (3 + k % 5, 3 + k % 4, (k + 17) % 256, k),
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {"key": pdf[key].astype("int64"), "payload": payloads}
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 ICO_STATS_SCHEMA = StructType(
@@ -5602,6 +4996,22 @@ ICO_STATS_SCHEMA = StructType(
 )
 
 
+def _ico_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    frames = ico_frames(payload)
+    sr = sg = sb = nt = 0
+    for rgb, mask in frames:
+        px = rgb.astype(np.int64)
+        opaque = ~mask
+        sr += int(px[:, :, 0][opaque].sum())
+        sg += int(px[:, :, 1][opaque].sum())
+        sb += int(px[:, :, 2][opaque].sum())
+        nt += int(mask.sum())
+    h0, w0 = frames[0][0].shape[:2]
+    return len(frames), w0, h0, sr, sg, sb, nt
+
+
 def ico_stats(
     df: DataFrame, *, payload_col: str = "payload", key: str = "key"
 ) -> DataFrame:
@@ -5609,37 +5019,13 @@ def ico_stats(
     in the container (the AND mask genuinely gates the sums — a decoder
     that ignores it is value-visible) plus the transparent-pixel count.
     Arrow-batched ``mapInPandas``, zero shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "n_images", "width0", "height0",
-                "sum_r", "sum_g", "sum_b", "n_transparent",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                frames = ico_frames(bytes(payload))
-                sr = sg = sb = nt = 0
-                for rgb, mask in frames:
-                    px = rgb.astype(np.int64)
-                    opaque = ~mask
-                    sr += int(px[:, :, 0][opaque].sum())
-                    sg += int(px[:, :, 1][opaque].sum())
-                    sb += int(px[:, :, 2][opaque].sum())
-                    nt += int(mask.sum())
-                rows["key"].append(int(k))
-                rows["n_images"].append(len(frames))
-                rows["width0"].append(frames[0][0].shape[1])
-                rows["height0"].append(frames[0][0].shape[0])
-                rows["sum_r"].append(sr)
-                rows["sum_g"].append(sg)
-                rows["sum_b"].append(sb)
-                rows["n_transparent"].append(nt)
-            yield pd.DataFrame(rows)
-
-    from table_streaming_source_spark.operators.hof import spread
-
-    return spread(df).mapInPandas(batches, schema=ICO_STATS_SCHEMA)
+    return _per_payload(
+        spread(df),
+        _ico_one,
+        ICO_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 def synth_png_palette(width: int, height: int, seed: int) -> bytes:
@@ -5800,30 +5186,37 @@ def attach_palette_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_png_palette` per key
     (``w = 8 + (5k) % 17``, ``h = 8 + (11k) % 19`` — ≥5 rows, every
     filter type occurs)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_png_palette(
+            8 + (5 * k) % 17,
+            8 + (11 * k) % 19,
+            k,
+        ),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_palette(
-                            8 + (5 * int(k)) % 17,
-                            8 + (11 * int(k)) % 19,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
 
-    return df.select(key).mapInPandas(batches, schema=schema)
+def _palette_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    rgb, alpha = png_pixels_palette(payload)
+    h, w = alpha.shape
+    px = rgb.astype(np.int64)
+    # index checksum: g = (5·idx + 1) % 256 is injective on 0..63
+    # (gcd(5, 256) = 1), so the index is recovered by lookup
+    inv = {(5 * i + 1) % 256: i for i in range(64)}
+    idxs = np.vectorize(inv.__getitem__)(px[:, :, 1])
+    return (
+        w,
+        h,
+        64,
+        int(px[:, :, 0].sum()),
+        int(px[:, :, 1].sum()),
+        int(px[:, :, 2].sum()),
+        int((alpha.astype(np.int64) < 255).sum()),
+        int((idxs * _xy_weight(h, w)).sum()),
+    )
 
 
 def palette_pixel_stats(
@@ -5834,46 +5227,13 @@ def palette_pixel_stats(
     prefix-tRNS rule, and a position-weighted INDEX checksum (catches
     unfilter mistakes before the palette hides them).  Arrow-batched
     ``mapInPandas``, zero shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "n_palette",
-                "sum_r", "sum_g", "sum_b", "n_transparent", "wsum_idx",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                rgb, alpha = png_pixels_palette(bytes(payload))
-                h, w = alpha.shape
-                px = rgb.astype(np.int64)
-                # recover indexes for the checksum via the alpha/rgb
-                # inverse is ambiguous; recompute from the decode path
-                # instead: re-walk indices
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_palette"].append(64)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["n_transparent"].append(
-                    int((alpha.astype(np.int64) < 255).sum())
-                )
-                # index checksum: g = (5·idx + 1) % 256 is injective on
-                # 0..63?  gcd(5,256)=1 ⇒ yes; invert via lookup
-                g = px[:, :, 1]
-                inv = {(5 * i + 1) % 256: i for i in range(64)}
-                idxs = np.vectorize(inv.__getitem__)(g)
-                rows["wsum_idx"].append(int((idxs * wgt).sum()))
-            yield pd.DataFrame(rows)
-
-    from table_streaming_source_spark.operators.hof import spread
-
-    return spread(df).mapInPandas(batches, schema=PALETTE_STATS_SCHEMA)
+    return _per_payload(
+        spread(df),
+        _palette_one,
+        PALETTE_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6421,32 +5781,29 @@ def synth_webp_image(width: int, height: int, seed: int) -> "object":
 def attach_webp_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one VP8L-encoded :func:`synth_webp_image` per
     key (``w = 12 + (5k) % 21``, ``h = 9 + (7k) % 17``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: webp_lossless_encode(
+            synth_webp_image(12 + (5 * k) % 21, 9 + (7 * k) % 17, k)
+        ),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        webp_lossless_encode(
-                            synth_webp_image(
-                                12 + (5 * int(k)) % 21,
-                                9 + (7 * int(k)) % 17,
-                                int(k),
-                            )
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
 
-    return df.select(key).mapInPandas(batches, schema=schema)
+def _webp_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    px = webp_lossless_decode(payload).astype(np.int64)
+    h, w = px.shape[:2]
+    return (
+        w,
+        h,
+        int(px[:, :, 0].sum()),
+        int(px[:, :, 1].sum()),
+        int(px[:, :, 2].sum()),
+        int((px[:, :, 1] * _xy_weight(h, w)).sum()),
+        int((px[:, :, 3] == 255).sum()),
+    )
 
 
 def webp_pixel_stats(
@@ -6456,38 +5813,13 @@ def webp_pixel_stats(
     weighted green checksum (any bitstream mistake — prefix tables,
     LZ77 copies, cache state — shifts it), and the opaque count.
     Arrow-batched ``mapInPandas``, zero shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_r", "sum_g", "sum_b",
-                "wsum_g", "n_opaque",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = webp_lossless_decode(bytes(payload)).astype(
-                    np.int64
-                )
-                h, w = px.shape[:2]
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["wsum_g"].append(int((px[:, :, 1] * wgt).sum()))
-                rows["n_opaque"].append(
-                    int((px[:, :, 3] == 255).sum())
-                )
-            yield pd.DataFrame(rows)
-
-    from table_streaming_source_spark.operators.hof import spread
-
-    return spread(df).mapInPandas(batches, schema=WEBP_STATS_SCHEMA)
+    return _per_payload(
+        spread(df),
+        _webp_one,
+        WEBP_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6613,30 +5945,15 @@ def bmp_rle8_pixels(payload: bytes) -> "object":
 def attach_bmp_rle_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_bmp_rle8` per key
     (``w = 8 + (5k) % 19``, ``h = 6 + (7k) % 15``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_bmp_rle8(
+            8 + (5 * k) % 19,
+            6 + (7 * k) % 15,
+            k,
+        ),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_bmp_rle8(
-                            8 + (5 * int(k)) % 19,
-                            6 + (7 * int(k)) % 15,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 GRAY_STATS_SCHEMA = StructType(
@@ -6653,35 +5970,16 @@ GRAY_STATS_SCHEMA = StructType(
 
 
 def _gray_stats(decode):
-    """Factory: a mapInPandas stats pass over a gray (h, w) decoder."""
-    import numpy as np
+    """Factory: :func:`_gray_one` stats over a gray ``(h, w)`` decoder."""
 
     def op(df: DataFrame, *, payload_col="payload", key="key"):
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = {k: [] for k in (
-                    "key", "width", "height", "sum_px", "min_px",
-                    "max_px", "wsum_px",
-                )}
-                for k, payload in zip(pdf[key], pdf[payload_col]):
-                    px = decode(bytes(payload)).astype(np.int64)
-                    h, w = px.shape
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 2 * np.arange(h, dtype=np.int64)[:, None]
-                    )
-                    rows["key"].append(int(k))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_px"].append(int(px.sum()))
-                    rows["min_px"].append(int(px.min()))
-                    rows["max_px"].append(int(px.max()))
-                    rows["wsum_px"].append(int((px * wgt).sum()))
-                yield pd.DataFrame(rows)
-
-        from table_streaming_source_spark.operators.hof import spread
-
-        return spread(df).mapInPandas(batches, schema=GRAY_STATS_SCHEMA)
+        return _per_payload(
+            spread(df),
+            lambda p: _gray_one(decode(p)),
+            GRAY_STATS_SCHEMA,
+            key=key,
+            payload_col=payload_col,
+        )
 
     return op
 
@@ -6864,30 +6162,9 @@ def synth_qoi(width: int, height: int, seed: int) -> bytes:
 def attach_qoi_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_qoi` per key
     (``w = 8 + (5k) % 21``, ``h = 8 + (11k) % 17``)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df, key, lambda k: synth_qoi(8 + (5 * k) % 21, 8 + (11 * k) % 17, k)
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_qoi(
-                            8 + (5 * int(k)) % 21,
-                            8 + (11 * int(k)) % 17,
-                            int(k),
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
 
 
 def qoi_stats(
@@ -6896,41 +6173,13 @@ def qoi_stats(
     """Per-channel stats over REAL QOI decode — same contract as
     :func:`tga_stats` (the position-weighted red checksum catches op
     mis-decodes, cache corruption, and run misalignment)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "sum_r", "sum_g", "sum_b",
-                "wsum_r",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = qoi_pixels(bytes(payload)).astype(np.int64)
-                h, w, _ = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(int(px[:, :, 0].sum()))
-                rows["sum_g"].append(int(px[:, :, 1].sum()))
-                rows["sum_b"].append(int(px[:, :, 2].sum()))
-                rows["wsum_r"].append(int((px[:, :, 0] * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_r": pd.Series(rows["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(rows["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(rows["sum_b"], dtype="int64"),
-                    "wsum_r": pd.Series(rows["wsum_r"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RGB_STATS_SCHEMA)
+    return _per_payload(
+        df,
+        lambda p: _rgb_one(qoi_pixels(p)),
+        RGB_STATS_SCHEMA,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 def synth_pnm(width: int, height: int, seed: int, kind: int) -> bytes:
@@ -7030,31 +6279,30 @@ def attach_pnm_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_pnm` per key (``w = 9 +
     (7k) % 18``, ``h = 9 + (13k) % 20``, kind = k % 3 — every batch
     mixes binary RGB, ASCII RGB, and binary grayscale)."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
+    return _keyed_payload(
+        df,
+        key,
+        lambda k: synth_pnm(
+            9 + (7 * k) % 18,
+            9 + (13 * k) % 20,
+            k,
+            k % 3,
+        ),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_pnm(
-                            9 + (7 * int(k)) % 18,
-                            9 + (13 * int(k)) % 20,
-                            int(k),
-                            int(k) % 3,
-                        )
-                        for k in pdf[key]
-                    ],
-                }
-            )
 
-    return df.select(key).mapInPandas(batches, schema=schema)
+def _pnm_one(payload: bytes) -> tuple:
+    import numpy as np
+
+    px = pnm_pixels(payload).astype(np.int64)
+    h, w, c = px.shape
+    return (
+        w,
+        h,
+        c,
+        int(px.sum()),
+        int((px[:, :, 0] * _xy_weight(h, w)).sum()),
+    )
 
 
 def pnm_stats(
@@ -7064,38 +6312,9 @@ def pnm_stats(
     count, total sample sum, and the position-weighted channel-0
     checksum (catches raster-order, comment-skip, and ASCII-token
     mistakes)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "width", "height", "channels", "sum_all", "wsum0",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                px = pnm_pixels(bytes(payload)).astype(np.int64)
-                h, w, c = px.shape
-                wgt = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 2 * np.arange(h, dtype=np.int64)[:, None]
-                )
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(c)
-                rows["sum_all"].append(int(px.sum()))
-                rows["wsum0"].append(int((px[:, :, 0] * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "sum_all": pd.Series(rows["sum_all"], dtype="int64"),
-                    "wsum0": pd.Series(rows["wsum0"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=PNM_STATS_SCHEMA)
+    return _per_payload(
+        df, _pnm_one, PNM_STATS_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7119,23 +6338,7 @@ def synth_au(key: int) -> bytes:
 
 
 def attach_au_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_au(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_au)
 
 
 @quarantinable("AU")
@@ -7172,41 +6375,15 @@ def au_stats(
     bad magic, unsupported encoding, or size mismatch raises — the
     quarantine path, as for every other container here.  Arrow-batched,
     zero shuffles."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                sr, n, ssum, sabs, smax = _au_one(bytes(payload))
-                rows.append((int(k), sr, n, ssum, sabs, smax))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key",
-                    "samplerate",
-                    "n_samples",
-                    "sum_s",
-                    "sum_abs",
-                    "max_abs",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "samplerate": "int32",
-                    "n_samples": "int64",
-                    "sum_s": "int64",
-                    "sum_abs": "int64",
-                    "max_abs": "int64",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        _au_one,
+        (
             "key long, samplerate int, n_samples long, sum_s long, "
             "sum_abs long, max_abs long"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -7257,23 +6434,7 @@ def synth_mp4(key: int) -> bytes:
 
 
 def attach_mp4_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_mp4(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_mp4)
 
 
 def _walk_boxes(buf: bytes, start: int, end: int):
@@ -7349,43 +6510,16 @@ def mp4_meta(
     (largesize, nesting, overrun checks); only codec payload decode is
     out of scope.  Arrow-batched, zero shuffles — at 100 TB each
     container is one row-local walk over its leading/trailing KBs."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                rows.append((int(k),) + _mp4_one(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key",
-                    "major_brand",
-                    "n_top_boxes",
-                    "timescale",
-                    "duration",
-                    "n_tracks",
-                    "track_id_sum",
-                    "mdat_bytes",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "n_top_boxes": "int32",
-                    "timescale": "int64",
-                    "duration": "int64",
-                    "n_tracks": "int32",
-                    "track_id_sum": "int64",
-                    "mdat_bytes": "int64",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        _mp4_one,
+        (
             "key long, major_brand string, n_top_boxes int, "
             "timescale long, duration long, n_tracks int, "
             "track_id_sum long, mdat_bytes long"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -7429,23 +6563,7 @@ def _midi_varint(v: int) -> bytes:
 
 
 def attach_midi_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_midi(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_midi)
 
 
 def _smf_varint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -7516,41 +6634,15 @@ def midi_meta(
     (status byte omitted when repeated).  A length mismatch between
     the declared MTrk size and the walked events raises — quarantine
     path.  Arrow-batched, zero shuffles."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                rows.append((int(k),) + _midi_one(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key",
-                    "format",
-                    "n_tracks",
-                    "division",
-                    "tempo_us",
-                    "n_note_on",
-                    "max_track_ticks",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "format": "int32",
-                    "n_tracks": "int32",
-                    "division": "int32",
-                    "tempo_us": "int64",
-                    "n_note_on": "int64",
-                    "max_track_ticks": "int64",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        _midi_one,
+        (
             "key long, format int, n_tracks int, division int, "
             "tempo_us long, n_note_on long, max_track_ticks long"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -7622,23 +6714,7 @@ def synth_ogg(key: int) -> bytes:
 
 
 def attach_ogg_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_ogg(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_ogg)
 
 
 @quarantinable("OGG")
@@ -7685,39 +6761,15 @@ def ogg_meta(
     polynomial (computed over the page with the checksum field zeroed).
     Any violation raises — quarantine path.  Arrow-batched, zero
     shuffles."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                n, tot, gr, ser = _ogg_one(bytes(payload))
-                rows.append((int(k), n, tot, gr, ser, True))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key",
-                    "n_pages",
-                    "payload_bytes",
-                    "last_granule",
-                    "serial",
-                    "crc_ok",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "n_pages": "int32",
-                    "payload_bytes": "int64",
-                    "last_granule": "int64",
-                    "serial": "int64",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        lambda p: (*_ogg_one(p), True),
+        (
             "key long, n_pages int, payload_bytes long, "
             "last_granule long, serial long, crc_ok boolean"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -7777,23 +6829,7 @@ def synth_aiff(key: int) -> bytes:
 
 
 def attach_aiff_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_aiff(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_aiff)
 
 
 @quarantinable("AIFF")
@@ -7845,35 +6881,15 @@ def aiff_stats(
     big-endian expansion, exact-integer per-stream stats.  Truncated
     chunks, frame-count mismatches, and non-integral rates raise —
     quarantine path."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                rate, n, ssum, smax = _aiff_one(bytes(payload))
-                rows.append((int(k), rate, n, ssum, smax))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key", "samplerate", "n_frames", "sum_s", "max_abs",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "samplerate": "int32",
-                    "n_frames": "int64",
-                    "sum_s": "int64",
-                    "max_abs": "int64",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        _aiff_one,
+        (
             "key long, samplerate int, n_frames long, sum_s long, "
             "max_abs long"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -7937,23 +6953,7 @@ def synth_mkv(key: int) -> bytes:
 
 
 def attach_mkv_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_mkv(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_mkv)
 
 
 def _ebml_read_vint(buf: bytes, pos: int, *, keep_marker: bool):
@@ -8039,33 +7039,15 @@ def mkv_meta(
     string leaves, skipping unknown elements by their declared size —
     the forward-compatibility contract EBML exists for.  Overruns
     raise (quarantine).  Arrow-batched, zero shuffles."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                rows.append((int(k),) + _mkv_one(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key", "doctype", "timestamp_scale", "n_tracks",
-                    "track_number_sum", "title_len",
-                ],
-            ).astype(
-                {
-                    "key": "int64",
-                    "timestamp_scale": "int64",
-                    "n_tracks": "int32",
-                    "track_number_sum": "int64",
-                    "title_len": "int32",
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
+    return _per_payload(
+        df,
+        _mkv_one,
+        (
             "key long, doctype string, timestamp_scale long, "
             "n_tracks int, track_number_sum long, title_len int"
         ),
+        key=key,
+        payload_col=payload_col,
     )
 
 
@@ -8183,23 +7165,7 @@ SRT_CUES_SCHEMA = StructType(
 
 def attach_srt_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_srt` per key."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_srt(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_srt)
 
 
 def srt_cue_stats(
@@ -8210,33 +7176,9 @@ def srt_cue_stats(
     aligns against audio before any sample decode.  Arrow-batched
     ``mapInPandas``, zero shuffles: subtitle bytes never leave the
     executor that scanned them."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {
-                k: []
-                for k in ("key", "n_cues", "total_ms", "span_ms",
-                          "n_words")
-            }
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _srt_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_cues"].append(m["n_cues"])
-                rows["total_ms"].append(m["total_ms"])
-                rows["span_ms"].append(m["span_ms"])
-                rows["n_words"].append(m["n_words"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_cues": pd.Series(rows["n_cues"], dtype="int32"),
-                    "total_ms": pd.Series(
-                        rows["total_ms"], dtype="int64"
-                    ),
-                    "span_ms": pd.Series(rows["span_ms"], dtype="int64"),
-                    "n_words": pd.Series(rows["n_words"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=SRT_CUES_SCHEMA)
+    return _per_payload(
+        df, _srt_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 def srt_cue_rows(
@@ -8388,25 +7330,7 @@ def _webvtt_one(payload: bytes) -> dict:
 
 def attach_webvtt_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: one :func:`synth_webvtt` per key."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_webvtt(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_webvtt)
 
 
 def webvtt_cue_stats(
@@ -8416,37 +7340,13 @@ def webvtt_cue_stats(
     :func:`srt_cue_stats` so the two timed-text dialects feed one
     downstream pipeline.  Arrow-batched ``mapInPandas``, zero
     shuffles."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {
-                k: []
-                for k in ("key", "n_cues", "total_ms", "span_ms",
-                          "n_words")
-            }
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _webvtt_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_cues"].append(m["n_cues"])
-                rows["total_ms"].append(m["total_ms"])
-                rows["span_ms"].append(m["span_ms"])
-                rows["n_words"].append(m["n_words"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_cues": pd.Series(rows["n_cues"], dtype="int32"),
-                    "total_ms": pd.Series(
-                        rows["total_ms"], dtype="int64"
-                    ),
-                    "span_ms": pd.Series(rows["span_ms"], dtype="int64"),
-                    "n_words": pd.Series(rows["n_words"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=SRT_CUES_SCHEMA)
+    return _per_payload(
+        df, _webvtt_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 # --------------------------------------------------------------------------
-# round 11: PCX raster decode, magic-byte sniffing, ASS subtitles,
+# PCX raster decode, magic-byte sniffing, ASS subtitles,
 # CUR cursor metadata, WAV cue markers
 # --------------------------------------------------------------------------
 
@@ -8543,23 +7443,7 @@ def _pcx_one(payload: bytes) -> dict:
 
 
 def attach_pcx_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_pcx(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_pcx)
 
 
 def pcx_stats(
@@ -8577,25 +7461,7 @@ def pcx_stats(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("key", "width", "height", "pix_sum")}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _pcx_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["pix_sum"].append(m["pix_sum"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "pix_sum": pd.Series(rows["pix_sum"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _pcx_one, schema, key=key, payload_col=payload_col)
 
 
 #: magic-byte table for content sniffing (public file signatures)
@@ -8632,13 +7498,6 @@ def sniff_type(payload: bytes) -> str:
 def attach_sniff_payload(df: DataFrame, key: str) -> DataFrame:
     """Fixture adapter: key % 6 selects PNG / JPEG / GIF / WAV /
     text / high-bit binary payloads — every sniffing branch fires."""
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
     def synth(key: int) -> bytes:
         r = key % 6
         if r == 0:
@@ -8655,16 +7514,7 @@ def attach_sniff_payload(df: DataFrame, key: str) -> DataFrame:
             return f"plain text {key}\n".encode("ascii")
         return b"\x00\xfe" + bytes([key % 256]) * 3
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth)
 
 
 def sniff_types(
@@ -8680,18 +7530,13 @@ def sniff_types(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "detected": [
-                        sniff_type(bytes(p)) for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df,
+        lambda p: (sniff_type(p),),
+        schema,
+        key=key,
+        payload_col=payload_col,
+    )
 
 
 def synth_ass(key: int) -> bytes:
@@ -8788,23 +7633,7 @@ def _ass_one(payload: bytes) -> dict:
 
 
 def attach_ass_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_ass(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_ass)
 
 
 def ass_cue_stats(
@@ -8813,33 +7642,9 @@ def ass_cue_stats(
     """Per-file ASS/SSA cue statistics, shape-compatible with
     `srt_cue_stats`/`webvtt_cue_stats` — the third timed-text dialect
     feeding the same downstream pipeline."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {
-                k: []
-                for k in ("key", "n_cues", "total_ms", "span_ms",
-                          "n_words")
-            }
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _ass_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_cues"].append(m["n_cues"])
-                rows["total_ms"].append(m["total_ms"])
-                rows["span_ms"].append(m["span_ms"])
-                rows["n_words"].append(m["n_words"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_cues": pd.Series(rows["n_cues"], dtype="int32"),
-                    "total_ms": pd.Series(
-                        rows["total_ms"], dtype="int64"
-                    ),
-                    "span_ms": pd.Series(rows["span_ms"], dtype="int64"),
-                    "n_words": pd.Series(rows["n_words"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=SRT_CUES_SCHEMA)
+    return _per_payload(
+        df, _ass_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    )
 
 
 def synth_cur(key: int) -> bytes:
@@ -8910,53 +7715,11 @@ def cur_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                w, h, hx, hy, xs = _cur_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["hotspot_x"].append(hx)
-                rows["hotspot_y"].append(hy)
-                rows["xor_sum"].append(xs)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "hotspot_x": pd.Series(
-                        rows["hotspot_x"], dtype="int32"
-                    ),
-                    "hotspot_y": pd.Series(
-                        rows["hotspot_y"], dtype="int32"
-                    ),
-                    "xor_sum": pd.Series(rows["xor_sum"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _cur_one, schema, key=key, payload_col=payload_col)
 
 
 def attach_cur_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_cur(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_cur)
 
 
 def synth_wav_cues(key: int) -> bytes:
@@ -9033,55 +7796,13 @@ def wav_cue_markers(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                n, fo, lo, osum = _wav_cues_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["n_markers"].append(n)
-                rows["first_off"].append(fo)
-                rows["last_off"].append(lo)
-                rows["off_sum"].append(osum)
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_markers": pd.Series(
-                        rows["n_markers"], dtype="int32"
-                    ),
-                    "first_off": pd.Series(
-                        rows["first_off"], dtype="int64"
-                    ),
-                    "last_off": pd.Series(
-                        rows["last_off"], dtype="int64"
-                    ),
-                    "off_sum": pd.Series(rows["off_sum"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _wav_cues_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def attach_wav_cue_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_wav_cues(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_wav_cues)
 
 
 def synth_dds(key: int) -> bytes:
@@ -9131,23 +7852,7 @@ def _dds_one(payload: bytes) -> dict:
 
 
 def attach_dds_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_dds(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_dds)
 
 
 def dds_meta(
@@ -9166,43 +7871,14 @@ def dds_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _dds_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["mipmaps"].append(m["mipmaps"])
-                rows["fourcc"].append(m["fourcc"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "mipmaps": pd.Series(rows["mipmaps"], dtype="int32"),
-                    "fourcc": pd.Series(rows["fourcc"], dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _dds_one, schema, key=key, payload_col=payload_col)
 
 
 # ---------------------------------------------------------------------------
-# round 12: PNG textual metadata chunks, sfnt/TrueType table directory,
+# PNG textual metadata chunks, sfnt/TrueType table directory,
 # and ID3v2 tag frames — all written to the public specs, all under the
 # malformed-bytes contract.
 # ---------------------------------------------------------------------------
-
-
-def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + tag
-        + data
-        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-    )
 
 
 def synth_png_text(key: int) -> bytes:
@@ -9305,25 +7981,7 @@ def _png_text_one(payload: bytes) -> dict:
 
 
 def attach_png_text_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_png_text(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_png_text)
 
 
 def png_text_stats(
@@ -9343,33 +8001,9 @@ def png_text_stats(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _png_text_one(bytes(payload))
-                rows["key"].append(int(k))
-                for n in (
-                    "n_text", "n_ztxt", "n_itxt", "kw_chars",
-                    "text_chars",
-                ):
-                    rows[n].append(m[n])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_text": pd.Series(rows["n_text"], dtype="int32"),
-                    "n_ztxt": pd.Series(rows["n_ztxt"], dtype="int32"),
-                    "n_itxt": pd.Series(rows["n_itxt"], dtype="int32"),
-                    "kw_chars": pd.Series(
-                        rows["kw_chars"], dtype="int64"
-                    ),
-                    "text_chars": pd.Series(
-                        rows["text_chars"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _png_text_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def _sfnt_checksum(data: bytes) -> int:
@@ -9498,23 +8132,7 @@ def _ttf_one(payload: bytes) -> dict:
 
 
 def attach_ttf_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_ttf(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_ttf)
 
 
 def ttf_meta(
@@ -9533,36 +8151,7 @@ def ttf_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _ttf_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_tables", "units_per_em", "name_count",
-                    "name_chars",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_tables": pd.Series(
-                        rows["n_tables"], dtype="int32"
-                    ),
-                    "units_per_em": pd.Series(
-                        rows["units_per_em"], dtype="int32"
-                    ),
-                    "name_count": pd.Series(
-                        rows["name_count"], dtype="int32"
-                    ),
-                    "name_chars": pd.Series(
-                        rows["name_chars"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _ttf_one, schema, key=key, payload_col=payload_col)
 
 
 def _syncsafe(n: int) -> bytes:
@@ -9656,23 +8245,7 @@ def _id3_one(payload: bytes) -> dict:
 
 
 def attach_id3_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_id3(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_id3)
 
 
 def id3_meta(
@@ -9691,39 +8264,11 @@ def id3_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _id3_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_frames", "title_chars", "text_chars", "has_comm",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_frames": pd.Series(
-                        rows["n_frames"], dtype="int32"
-                    ),
-                    "title_chars": pd.Series(
-                        rows["title_chars"], dtype="int32"
-                    ),
-                    "text_chars": pd.Series(
-                        rows["text_chars"], dtype="int64"
-                    ),
-                    "has_comm": pd.Series(
-                        rows["has_comm"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _id3_one, schema, key=key, payload_col=payload_col)
 
 
 # ---------------------------------------------------------------------------
-# round-13 backlog: GIF comment-extension walk and ANI animated-cursor
+# GIF comment-extension walk and ANI animated-cursor
 # (RIFF 'ACON') composition over the existing CUR decoder.
 # ---------------------------------------------------------------------------
 
@@ -9825,25 +8370,7 @@ def _gif_comments_one(payload: bytes) -> dict:
 
 
 def attach_gif_comments_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_gif_comments(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_gif_comments)
 
 
 def gif_comment_stats(
@@ -9862,30 +8389,9 @@ def gif_comment_stats(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _gif_comments_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in ("n_comments", "comment_chars", "n_images"):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_comments": pd.Series(
-                        rows["n_comments"], dtype="int32"
-                    ),
-                    "comment_chars": pd.Series(
-                        rows["comment_chars"], dtype="int64"
-                    ),
-                    "n_images": pd.Series(
-                        rows["n_images"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _gif_comments_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_ani(key: int) -> bytes:
@@ -9972,23 +8478,7 @@ def _ani_one(payload: bytes) -> dict:
 
 
 def attach_ani_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_ani(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_ani)
 
 
 def ani_meta(
@@ -10008,35 +8498,7 @@ def ani_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _ani_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_frames", "n_steps", "disp_rate", "hotspot_sum",
-                    "xor_sum",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_frames": pd.Series(
-                        rows["n_frames"], dtype="int32"
-                    ),
-                    "n_steps": pd.Series(rows["n_steps"], dtype="int32"),
-                    "disp_rate": pd.Series(
-                        rows["disp_rate"], dtype="int32"
-                    ),
-                    "hotspot_sum": pd.Series(
-                        rows["hotspot_sum"], dtype="int64"
-                    ),
-                    "xor_sum": pd.Series(rows["xor_sum"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _ani_one, schema, key=key, payload_col=payload_col)
 
 
 def synth_ico_png(key: int) -> bytes:
@@ -10132,25 +8594,7 @@ def _ico_png_one(payload: bytes) -> dict:
 
 
 def attach_ico_png_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_ico_png(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_ico_png)
 
 
 def ico_png_meta(
@@ -10171,35 +8615,9 @@ def ico_png_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _ico_png_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_entries", "n_png", "n_dib", "png_pixels",
-                    "dib_pixels",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_entries": pd.Series(
-                        rows["n_entries"], dtype="int32"
-                    ),
-                    "n_png": pd.Series(rows["n_png"], dtype="int32"),
-                    "n_dib": pd.Series(rows["n_dib"], dtype="int32"),
-                    "png_pixels": pd.Series(
-                        rows["png_pixels"], dtype="int64"
-                    ),
-                    "dib_pixels": pd.Series(
-                        rows["dib_pixels"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _ico_png_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_wav_info(key: int) -> bytes:
@@ -10285,25 +8703,7 @@ def _wav_info_one(payload: bytes) -> dict:
 
 
 def attach_wav_info_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_wav_info(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_wav_info)
 
 
 def wav_info_tags(
@@ -10321,28 +8721,9 @@ def wav_info_tags(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _wav_info_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in ("n_tags", "name_chars", "tag_chars"):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_tags": pd.Series(rows["n_tags"], dtype="int32"),
-                    "name_chars": pd.Series(
-                        rows["name_chars"], dtype="int32"
-                    ),
-                    "tag_chars": pd.Series(
-                        rows["tag_chars"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _wav_info_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_apng(key: int) -> bytes:
@@ -10444,23 +8825,7 @@ def _apng_one(payload: bytes) -> dict:
 
 
 def attach_apng_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_apng(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_apng)
 
 
 def apng_meta(
@@ -10478,30 +8843,9 @@ def apng_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _apng_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in ("n_frames", "num_plays", "delay_num_sum"):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_frames": pd.Series(
-                        rows["n_frames"], dtype="int32"
-                    ),
-                    "num_plays": pd.Series(
-                        rows["num_plays"], dtype="int32"
-                    ),
-                    "delay_num_sum": pd.Series(
-                        rows["delay_num_sum"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _apng_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_flac_tags(key: int) -> bytes:
@@ -10605,25 +8949,7 @@ def _flac_tags_one(payload: bytes) -> dict:
 
 
 def attach_flac_tags_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [
-                        synth_flac_tags(int(k)) for k in pdf[key]
-                    ],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_flac_tags)
 
 
 def flac_tag_stats(
@@ -10642,36 +8968,9 @@ def flac_tag_stats(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _flac_tags_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_blocks", "n_comments", "comment_chars",
-                    "has_padding",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_blocks": pd.Series(
-                        rows["n_blocks"], dtype="int32"
-                    ),
-                    "n_comments": pd.Series(
-                        rows["n_comments"], dtype="int32"
-                    ),
-                    "comment_chars": pd.Series(
-                        rows["comment_chars"], dtype="int64"
-                    ),
-                    "has_padding": pd.Series(
-                        rows["has_padding"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _flac_tags_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_edid(key: int) -> bytes:
@@ -10722,23 +9021,7 @@ def _edid_one(payload: bytes) -> dict:
 
 
 def attach_edid_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_edid(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_edid)
 
 
 def edid_meta(
@@ -10757,29 +9040,9 @@ def edid_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _edid_one(bytes(payload))
-                rows["key"].append(int(k))
-                rows["manufacturer"].append(m["manufacturer"])
-                rows["product"].append(m["product"])
-                rows["week"].append(m["week"])
-                rows["year"].append(m["year"])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "manufacturer": pd.Series(
-                        rows["manufacturer"], dtype="object"
-                    ),
-                    "product": pd.Series(rows["product"], dtype="int32"),
-                    "week": pd.Series(rows["week"], dtype="int32"),
-                    "year": pd.Series(rows["year"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(
+        df, _edid_one, schema, key=key, payload_col=payload_col
+    )
 
 
 def synth_stl(key: int) -> bytes:
@@ -10840,23 +9103,7 @@ def _stl_one(payload: bytes) -> dict:
 
 
 def attach_stl_payload(df: DataFrame, key: str) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("key", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth_stl(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return _keyed_payload(df, key, synth_stl)
 
 
 def stl_meta(
@@ -10874,25 +9121,4 @@ def stl_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f.name: [] for f in schema.fields}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = _stl_one(bytes(payload))
-                rows["key"].append(int(k))
-                for nm in ("n_triangles", "volume", "attr_sum"):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_triangles": pd.Series(
-                        rows["n_triangles"], dtype="int32"
-                    ),
-                    "volume": pd.Series(rows["volume"], dtype="float64"),
-                    "attr_sum": pd.Series(
-                        rows["attr_sum"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return _per_payload(df, _stl_one, schema, key=key, payload_col=payload_col)

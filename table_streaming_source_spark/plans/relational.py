@@ -1019,15 +1019,17 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|statuses| buffers) and the distinct pass shuffles bare keys;
     # measured 3.48 → ~1.2 s at sf0.1, and at 100 TB the fused form's
     # sketch-per-customer shuffle is the difference between KBs and TBs.
-    # Values are identical — same aggregates, joined on the group key.
+    # Values are identical — same aggregates, joined on the group key,
+    # null-safe so a NULL status stays one group as in the fused form.
     exact = o.groupBy("o_orderstatus").agg(
         F.count_distinct("o_custkey").alias("exact_custs"),
         F.count(F.lit(1)).alias("n_orders"),
     )
-    apx = o.groupBy("o_orderstatus").agg(
+    apx = o.groupBy(F.col("o_orderstatus").alias("__status")).agg(
         F.approx_count_distinct("o_custkey", rsd=0.01).alias("__apx")
     )
-    return exact.join(apx, "o_orderstatus").select(
+    on = F.col("o_orderstatus").eqNullSafe(F.col("__status"))
+    return exact.join(apx, on).select(
         "o_orderstatus",
         "exact_custs",
         (

@@ -288,14 +288,17 @@ def snapshot_diff(
     ])
 
 
+#: changed-key count up to which :func:`snapshot_apply` broadcasts the
+#: key set into its anti-join
+_APPLY_BROADCAST_MAX_KEYS = 1_000_000
+
+
 def snapshot_apply(
     old: DataFrame,
     changeset: DataFrame,
     *,
     key: str,
     change_col: str = "change",
-    broadcast_max_keys: int = 1_000_000,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Replay a changeset (``snapshot_diff(..., include_values=True)``
     shape: key, change, new-side values) onto a snapshot: drop every
@@ -313,23 +316,13 @@ def snapshot_apply(
     need anyway; in the small-delta steady state the hinted broadcast
     keeps the old payload from ever shuffling, and past the gate the
     plan degrades to a shuffled anti-join that AQE still converts when
-    runtime stats allow.
-
-    The default gate makes plan CONSTRUCTION eager (the count runs
-    when the function is called, not when the result executes).  A
-    caller composing many apply plans speculatively can pass
-    ``broadcast=True/False`` to decide statically and keep construction
-    fully lazy.
+    runtime stats allow.  The gate makes plan construction eager: the
+    count runs when the function is called.
     """
     value_cols = [c for c in changeset.columns if c not in (key, change_col)]
     changeset = changeset.localCheckpoint(eager=False)
     changed_keys = changeset.select(key)
-    small = (
-        broadcast
-        if broadcast is not None
-        else changeset.count() <= broadcast_max_keys
-    )
-    if small:
+    if changeset.count() <= _APPLY_BROADCAST_MAX_KEYS:
         changed_keys = F.broadcast(changed_keys)
     upserts = changeset.filter(
         F.col(change_col).isin("insert", "update")

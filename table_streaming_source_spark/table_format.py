@@ -2824,15 +2824,13 @@ def commit_delete_positions(
     staging = os.path.join(
         _data_dir(path), f"posdelete-{new_v}-{uuid.uuid4().hex[:8]}"
     )
-    # ONE pass (round 16, guide §1): the staging write is the only Spark
-    # action — the named-file list is read back off the staged delete
-    # file's own ``file_path`` column (driver-side pyarrow, one row per
-    # touched file for DV / one per ordinal for tuples — CDC-bounded
-    # either way), where round 15 ran an eager localCheckpoint PLUS a
-    # distinct+collect job before the write (3 extra jobs per commit and
-    # a second pass over the positions).  Validation still happens
-    # before anything is COMMITTED, and a refused commit removes its
-    # staging dir.
+    # ONE pass: the staging write is the only Spark action.  The
+    # named-file set is read back off the staged delete file's own
+    # ``file_path`` column on the driver, one record batch at a time
+    # (one row per touched file for DV, one per ordinal for tuples), so
+    # the driver holds one batch plus the distinct paths.  Validation
+    # still happens before anything is COMMITTED, and a refused commit
+    # removes its staging dir.
     if encoding == "dv":
         _write_dv_file(pos, staging)
         entries = _manifest_entries(path, staging, [], seq=new_v)
@@ -2847,16 +2845,15 @@ def commit_delete_positions(
         raise ValueError(f"unknown positional-delete encoding {encoding!r}")
     import pyarrow.parquet as pq
 
-    named = sorted(
-        {
-            str(v)
-            for name in os.listdir(staging)
-            if name.endswith(".parquet")
-            for v in pq.read_table(
-                os.path.join(staging, name), columns=["file_path"]
-            )["file_path"].unique().to_pylist()
-        }
-    )
+    named_set: set[str] = set()
+    for name in os.listdir(staging):
+        if name.endswith(".parquet"):
+            with pq.ParquetFile(os.path.join(staging, name)) as f:
+                for batch in f.iter_batches(columns=["file_path"]):
+                    named_set.update(
+                        map(str, batch.column(0).unique().to_pylist())
+                    )
+    named = sorted(named_set)
     snapshot = _snapshot_file_dicts(path, base)
     known = {os.path.abspath(os.path.join(path, f["path"])) for f in snapshot}
     unknown = [p for p in named if p not in known]

@@ -235,6 +235,34 @@ def test_approx_distinct_within_error_bound(spark, sf_dir):
         assert abs(approx[k] - n) <= max(3, 0.05 * n), (k, approx[k], n)
 
 
+def test_approx_distinct_keeps_null_status_group(spark, tmp_path):
+    """A NULL ``o_orderstatus`` is one group, as in a single aggregate:
+    the entry joins its exact and approximate halves null-safely."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from table_streaming_source_spark.plans.relational import (
+        q_agg_approx_distinct,
+    )
+
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([1, 2, 3, 4, 5], pa.int64()),
+                "o_custkey": pa.array([10, 11, 10, 12, 13], pa.int64()),
+                "o_orderstatus": pa.array(["F", None, None, "O", None]),
+            }
+        ),
+        tmp_path / "orders.parquet",
+    )
+    rows = q_agg_approx_distinct(spark, str(tmp_path)).collect()
+    got = sorted(
+        (r.o_orderstatus or "", r.exact_custs, r.n_orders) for r in rows
+    )
+    assert got == [("", 3, 3), ("F", 1, 1), ("O", 1, 1)], rows
+    assert all(r.approx_within_5pct for r in rows), rows
+
+
 def test_corpus_prep_pipeline_two_shuffles(spark, sf_dir):
     """The composed clean→gate→dedup→pack pipeline must cost exactly two
     hash shuffles (dedup fingerprint window + pack shard window); all

@@ -31,8 +31,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from table_streaming_source_spark.operators.hof import bind_once as _bind
-from table_streaming_source_spark.operators.hof import spread as _spread
+from table_streaming_source_spark.operators.hof import (
+    bind_once as _bind,
+    explode_at_least as _explode_at_least,
+    spread as _spread,
+)
 
 
 def exact_dedup(
@@ -72,19 +75,29 @@ def fingerprint(df: DataFrame, text_col: str, key: str) -> DataFrame:
 
 
 def _shingles(text_col: str, n: int) -> "F.Column":
-    """Distinct word ``n``-gram shingles of a text column (JVM-side:
-    split + sequence + transform + array_distinct)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
-    # docs shorter than n tokens produce NO shingles (idx would be an
-    # empty/invalid sequence) rather than a bogus (n-1)-gram
-    full = F.array_distinct(F.filter(grams, lambda g: F.length(g) > F.lit(0)))
-    return F.when(F.size(toks) >= n, full).otherwise(
-        F.array().cast("array<string>")
-    )
+    """Distinct word ``n``-gram shingles of a text column, in first-
+    occurrence order (JVM-side: split + sequence + transform +
+    array_distinct).
+
+    The text is split once per row and the token array is bound as a
+    lambda variable (:func:`_bind`), so each ``n``-gram slices that one
+    array instead of re-splitting the text.  A document shorter than
+    ``n`` tokens has no shingles (not a bogus shorter gram).
+    """
+
+    def grams_of(toks: "F.Column") -> "F.Column":
+        grams = F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+        full = F.array_distinct(
+            F.filter(grams, lambda g: F.length(g) > F.lit(0))
+        )
+        return F.when(F.size(toks) >= n, full).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return _bind(F.split(F.trim(F.col(text_col)), r"\s+"), grams_of)
 
 
 def shingle_table(
@@ -243,7 +256,7 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
 
     def band_keys_of(sig: "F.Column") -> "F.Column":
-        # 60-bit integer band keys (round 4): the banding shuffle keys on
+        # 60-bit integer band keys: the banding shuffle keys on
         # (band, band_key) for docs × bands rows, so an 8-byte long in
         # place of the 32-char md5 hex string quarters that exchange at
         # corpus scale.  Same portable mapping as the shingle ints —
@@ -328,9 +341,9 @@ def minhash_lsh_pairs(
     # exact-Jaccard verification of candidates only: prune the corpus to
     # candidate documents first (semi-join on keys), THEN shingle just
     # those rows — at near-dup rates the verify-side shingling touches a
-    # tiny fraction of the corpus.  The broadcast hint is COUNT-GATED
-    # (round 4): candidate-key cardinality grows with the corpus
-    # duplication rate, so it is not bounded by design — an unconditional
+    # tiny fraction of the corpus.  The broadcast hint is COUNT-GATED:
+    # candidate-key cardinality grows with the corpus duplication rate,
+    # so it is not bounded by design — an unconditional
     # hint would bypass autoBroadcastJoinThreshold on a pathologically
     # duplicated corpus.  Counting the (already-checkpointed) candidate
     # pairs materializes work the verify join needs anyway, and the
@@ -365,8 +378,8 @@ def minhash_lsh_pairs(
         # consumed twice (key_a leg + key_b leg): without the pin the
         # semi-join AND the candidate shingling execute once per leg —
         # the table is candidate-scale (tiny at real dup rates), the
-        # recompute is corpus-scan + md5-per-shingle (round 15,
-        # guide §2.4); lazy so no job runs until the verify join does
+        # recompute is corpus-scan + md5-per-shingle; lazy so no job
+        # runs until the verify join does
         cand_sh = cand_sh.localCheckpoint(eager=False)
     sh_a = cand_sh.select(
         F.col(key).alias("key_a"), F.col("__sh").alias("__sh_a")
@@ -374,9 +387,14 @@ def minhash_lsh_pairs(
     sh_b = cand_sh.select(
         F.col(key).alias("key_b"), F.col("__sh").alias("__sh_b")
     )
-    inter = F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b")))
-    union = (
-        F.size(F.col("__sh_a")) + F.size(F.col("__sh_b")) - inter
+    # the intersection is bound once per pair and the score is kept by
+    # a generator, so no pushed-down filter recomputes either; two
+    # shingle-less documents share a bucket, and their 0/0 is NULL
+    jaccard = _bind(
+        F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b"))),
+        lambda inter: F.try_divide(
+            inter, F.size(F.col("__sh_a")) + F.size(F.col("__sh_b")) - inter
+        ),
     )
     return (
         candidates.join(sh_a, "key_a")
@@ -384,9 +402,8 @@ def minhash_lsh_pairs(
         .select(
             "key_a",
             "key_b",
-            (inter / union).alias("jaccard"),
+            _explode_at_least(jaccard, threshold).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -480,10 +497,9 @@ def _shingle_intersections(
     The shingle explode (split + n-gram transform + array_distinct per
     document) is consumed FOUR times downstream — both self-join sides
     plus the two size legs — so it is pinned once with a lazy
-    localCheckpoint (guide §2.4 multi-consumer materialization, the
-    round-15 pattern); the doc-scale ``sizes`` aggregate likewise feeds
-    two broadcast legs and is pinned so the fact-scale aggregation runs
-    once."""
+    localCheckpoint (multi-consumer materialization); the doc-scale
+    ``sizes`` aggregate likewise feeds two broadcast legs and is pinned
+    so the fact-scale aggregation runs once."""
     shingled = shingle_table(_spread(df), text_col, key, n).localCheckpoint(
         eager=False
     )
@@ -777,7 +793,7 @@ def jaccard_prefix_pairs(
     # the shingle explode feeds the frequency agg AND the rarity join;
     # checkpoint so the explode (split + n-gram transform over every
     # document) runs once, not once per consumer.  Shingle STRINGS are
-    # hashed to 64-bit ids at the explode (round 4, xxhash64 — one cheap
+    # hashed to 64-bit ids at the explode (xxhash64 — one cheap
     # JVM-side hash per shingle) — every downstream exchange, sort, and
     # intersection then moves 8-byte longs instead of multi-word
     # strings.  Collisions would merge two shingles corpus-wide; at 10⁶
@@ -791,8 +807,8 @@ def jaccard_prefix_pairs(
     freq = shingled.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("__df")
     )
-    # Rarity ranking WITHOUT window functions (round 4: the former
-    # row_number/count window pair cost a full SortExec over every
+    # Rarity ranking WITHOUT window functions (a row_number/count
+    # window pair cost a full SortExec over every
     # (key, __df, shingle) row — ~20% of the operator): group each doc's
     # (df, shingle) pairs and sort the per-doc ARRAY row-locally.  Same
     # two exchanges (join on shingle, agg on key), no wide sort, and the
@@ -963,8 +979,8 @@ def sorted_neighborhood_pairs(
         .select(
             "key_a",
             F.col("__nb.kb").alias("key_b"),
-            # banded DP (guide §1.2, the r15 precedent): the
-            # thresholded form returns -1 past max_distance instead of
+            # banded DP: the thresholded form returns -1 past
+            # max_distance instead of
             # finishing the full O(len²) table; kept rows carry the
             # exact distance either way, so the output is bit-identical
             F.levenshtein(

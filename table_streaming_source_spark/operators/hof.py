@@ -32,7 +32,7 @@ def spread(df: DataFrame, parallelism: Optional[int] = None) -> DataFrame:
       few partitions (``maxPartitionBytes``/``openCostInBytes``), so for
       local files the probe mirrors ``FilePartition.maxSplitBytes`` to
       estimate the packed partition count from the actual byte sizes
-      (ADVICE round 3: a thousand tiny files can read as 1-2 partitions).
+      (a thousand tiny files can read as 1-2 partitions).
       Non-local URIs (no cheap size lookup) fall back to the file count;
       plans with no file root (in-memory fixtures, streaming) report zero
       files and take the repartition: correct for their actual fixture
@@ -118,6 +118,19 @@ def bind_once(expr: Column, fn) -> Column:
     lambda over the one element.
     """
     return F.transform(F.array(expr), fn)[0]
+
+
+def explode_at_least(score: Column, threshold: float) -> Column:
+    """Generator that emits ``score`` once when it is ≥ ``threshold`` and
+    nothing otherwise; a NULL score emits nothing.
+
+    Projecting a score and then filtering on it evaluates the score
+    twice: the optimizer pushes the predicate below the projection, and
+    through it into a join condition, as a second copy of the whole
+    expression.  A generator's argument is not split that way, so
+    ``select(..., explode_at_least(score, t))`` scores each row once.
+    """
+    return F.explode(F.filter(F.array(score), lambda s: s >= threshold))
 
 
 def morton_key(a, b, *, bits: int = 10):

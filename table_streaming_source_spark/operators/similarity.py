@@ -24,7 +24,11 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from table_streaming_source_spark.operators.hof import bind_once, spread
+from table_streaming_source_spark.operators.hof import (
+    bind_once,
+    explode_at_least,
+    spread,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -38,6 +42,7 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 def _norm(a: Column) -> Column:
+    """‖a‖₂ in double precision, sequential fold like :func:`_dot`."""
     return F.sqrt(
         F.aggregate(
             a,
@@ -47,9 +52,37 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine_normed(
+    a: Column, a_norm: Column, b: Column, b_norm: Column
+) -> Column:
+    """:func:`cosine` of ``a`` and ``b`` given their :func:`_norm` columns.
+
+    Pairwise callers compute each vector's norm once, in a per-row
+    projection before their join, so only the dot product is evaluated
+    per pair."""
+    return F.try_divide(_dot(a, b), a_norm * b_norm)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two ``array<numeric>`` columns (double)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine similarity of two ``array<numeric>`` columns (double):
+    ``dot(a, b) / (‖a‖·‖b‖)``, each a sequential double fold.
+
+    NULL when either vector has zero norm: the score is undefined there,
+    and ANSI division would fail the whole query.  This expression folds
+    both norms inline; an operator that scores many pairs per vector
+    uses :func:`_norm` per row and :func:`_cosine_normed` per pair
+    instead, which runs the same folds in the same order and so returns
+    the same bits.
+    """
+    return _cosine_normed(a, _norm(a), b, _norm(b))
+
+
+def _query_corpus_cosine() -> Column:
+    """Cosine of the ``__qv`` query and ``__cv`` corpus vectors, whose
+    ``__qn``/``__cn`` norms the caller projected per row."""
+    return _cosine_normed(
+        F.col("__qv"), F.col("__qn"), F.col("__cv"), F.col("__cn")
+    )
 
 
 def cosine_topk(
@@ -70,26 +103,38 @@ def cosine_topk(
     float summation orders.
     """
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col(key).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
     )
     c = spread(corpus).select(
-        F.col(key).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col(key).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        _norm(F.col(vec_col)).alias("__cn"),
     )
     sim = F.col("__sim")
     scored = (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
+        .withColumn("__sim", _query_corpus_cosine())
     )
     if round_digits is not None:
         scored = scored.withColumn("__sim", F.round(sim, round_digits))
+    return _rank_scored(scored, k)
+
+
+def _rank_scored(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-``k`` of ``scored``'s ``__sim``, ties broken by
+    neighbor id.  A NULL score (zero-norm vector) sorts last and is then
+    dropped, so it takes no rank from a defined one."""
+    sim = F.col("__sim")
     w = Window.partitionBy("query_id").orderBy(
         sim.desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & sim.isNotNull())
         .select(
             "query_id",
             "neighbor_id",
@@ -120,23 +165,27 @@ def cosine_range(
     any corpus size.  Returns ``(query_id, neighbor_id, cos_sim)``.
     """
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col(key).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
     )
     c = spread(corpus).select(
-        F.col(key).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col(key).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        _norm(F.col(vec_col)).alias("__cn"),
     )
-    scored = (
+    sim = _query_corpus_cosine()
+    if round_digits is not None:
+        sim = F.round(sim, round_digits)
+    return (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
-    )
-    if round_digits is not None:
-        scored = scored.withColumn(
-            "__sim", F.round(F.col("__sim"), round_digits)
+        .select(
+            "query_id",
+            "neighbor_id",
+            explode_at_least(sim, threshold).alias("cos_sim"),
         )
-    return scored.filter(F.col("__sim") >= threshold).select(
-        "query_id", "neighbor_id", F.col("__sim").alias("cos_sim")
     )
 
 
@@ -209,15 +258,22 @@ def cosine_pairs_blocked(
                 | (F.col("key_a") == F.col("__hub"))
             )
         a = a.select("__blk", "key_a", "__va")
-    sim = cosine(F.col("__va"), F.col("__vb"))
+    # norms per vector before the join, the score once per pair after it
+    a = a.withColumn("__na", _norm(F.col("__va")))
+    b = b.withColumn("__nb", _norm(F.col("__vb")))
+    sim = _cosine_normed(
+        F.col("__va"), F.col("__na"), F.col("__vb"), F.col("__nb")
+    )
     if round_digits is not None:
         sim = F.round(sim, round_digits)
     return (
         a.join(b, "__blk")
         .filter(F.col("key_a") < F.col("key_b"))
-        .withColumn("cos_sim", sim)
-        .filter(F.col("cos_sim") >= threshold)
-        .select("key_a", "key_b", "cos_sim")
+        .select(
+            "key_a",
+            "key_b",
+            explode_at_least(sim, threshold).alias("cos_sim"),
+        )
     )
 
 
@@ -537,10 +593,11 @@ def ann_topk_lsh(
     planes = lsh_planes(num_planes, dim)
     c = ann_index(
         corpus, vec_col=vec_col, key=key, num_planes=num_planes, dim=dim
-    )
+    ).withColumn("__cn", _norm(F.col("__cv")))
     q = queries.select(
         F.col(key).alias("query_id"),
         F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
         hyperplane_bucket(F.col(vec_col), planes).alias("__b0"),
     )
     if multi_probe:
@@ -552,32 +609,21 @@ def ann_topk_lsh(
             ],
         )
         q = q.select(
-            "query_id", "__qv", F.explode(probe_arr).alias("__b")
+            "query_id", "__qv", "__qn", F.explode(probe_arr).alias("__b")
         )
     else:
         q = q.withColumnRenamed("__b0", "__b")
-    sim = F.col("__sim")
     scored = (
         F.broadcast(q)
         .join(c, "__b")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
+        .withColumn("__sim", _query_corpus_cosine())
     )
     if round_digits is not None:
-        scored = scored.withColumn("__sim", F.round(sim, round_digits))
-    w = Window.partitionBy("query_id").orderBy(
-        sim.desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            sim.alias("cos_sim"),
-            F.col("rank").cast("int").alias("rank"),
+        scored = scored.withColumn(
+            "__sim", F.round(F.col("__sim"), round_digits)
         )
-    )
+    return _rank_scored(scored, k)
 
 
 def embedding_dedup(
@@ -1077,6 +1123,7 @@ def prefix_rerank_topk(
     q = queries.select(
         F.col(key).alias("query_id"),
         F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
         F.slice(F.col(vec_col), 1, prefix_dim).alias("__qp"),
     )
     c1 = spread(corpus).select(
@@ -1099,24 +1146,16 @@ def prefix_rerank_topk(
     cv = corpus.select(
         F.col(key).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
-    exact = F.round(
-        cosine(F.col("__qv"), F.col("__cv")), round_digits
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
+    exact = F.round(_query_corpus_cosine(), round_digits)
+    # corpus norms only for shortlisted rows, never the whole corpus
+    return _rank_scored(
         short.join(cv, "neighbor_id")
-        .join(F.broadcast(q.select("query_id", "__qv")), "query_id")
-        .withColumn("cos_sim", exact)
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("int").alias("rank"),
+        .withColumn("__cn", _norm(F.col("__cv")))
+        .join(
+            F.broadcast(q.select("query_id", "__qv", "__qn")), "query_id"
         )
+        .withColumn("__sim", exact),
+        k,
     )
 
 
@@ -1186,7 +1225,14 @@ def knn_join_blocked(
             .filter(keep)
             .drop("__m")
         )
-    sim = F.round(cosine(F.col("__va"), F.col("__vb")), round_digits)
+    a = a.withColumn("__na", _norm(F.col("__va")))
+    b = b.withColumn("__nb", _norm(F.col("__vb")))
+    sim = F.round(
+        _cosine_normed(
+            F.col("__va"), F.col("__na"), F.col("__vb"), F.col("__nb")
+        ),
+        round_digits,
+    )
     w = Window.partitionBy(key).orderBy(
         F.desc("cos_sim"), F.col("neighbor_id")
     )
@@ -1195,7 +1241,8 @@ def knn_join_blocked(
         .filter(F.col(key) != F.col("neighbor_id"))
         .withColumn("cos_sim", sim)
         .withColumn("knn_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("knn_rank") <= k)
+        # a NULL score (zero-norm vector) ranks last and is dropped
+        .filter((F.col("knn_rank") <= k) & F.col("cos_sim").isNotNull())
         .select(key, "neighbor_id", "knn_rank", "cos_sim")
     )
 
@@ -1246,16 +1293,18 @@ def mmr_rerank(
     vecs = corpus.select(
         F.col(key).alias("cand_id"), F.col(vec_col).alias("__v")
     )
-    cv = cand.join(vecs, "cand_id")
+    cv = cand.join(vecs, "cand_id").withColumn("__n", _norm(F.col("__v")))
     a = cv.select(
         "query_id",
         F.col("cand_id").alias("ca"),
         F.col("__v").alias("__va"),
+        F.col("__n").alias("__na"),
     )
     b = cv.select(
         "query_id",
         F.col("cand_id").alias("cb"),
         F.col("__v").alias("__vb"),
+        F.col("__n").alias("__nb"),
     )
     ps = (
         a.join(b, "query_id")
@@ -1265,7 +1314,10 @@ def mmr_rerank(
             "ca",
             "cb",
             F.round(
-                cosine(F.col("__va"), F.col("__vb")), round_digits
+                _cosine_normed(
+                    F.col("__va"), F.col("__na"), F.col("__vb"), F.col("__nb")
+                ),
+                round_digits,
             ).alias("sim"),
         )
         .localCheckpoint(eager=True)
@@ -1475,8 +1527,7 @@ def nn_descent_round(
     # the seeded graph feeds FOUR fact-scale consumers (both sides of
     # the hop self-join + the final union with the rescored candidates)
     # and each re-derivation replays every blocking's cell self-join +
-    # cosine pass — pin once (guide §2.4, the round-15/16 multi-consumer
-    # pattern).
+    # cosine pass — pin once.
     base = base.localCheckpoint(eager=False)
     edges = base.select(F.col(key).alias("u"), F.col("neighbor_id").alias("v"))
     cand = (
@@ -1488,16 +1539,25 @@ def nn_descent_round(
         .filter(F.col("u") != F.col("w"))
         .distinct()
     )
-    vecs = df.select(F.col(key).alias("__k"), F.col(vec_col).alias("__v"))
+    vecs = df.select(
+        F.col(key).alias("__k"),
+        F.col(vec_col).alias("__v"),
+        _norm(F.col(vec_col)).alias("__n"),
+    )
     scored = (
         cand.join(vecs, cand["u"] == vecs["__k"])
-        .select("u", "w", F.col("__v").alias("__va"))
+        .select(
+            "u", "w", F.col("__v").alias("__va"), F.col("__n").alias("__na")
+        )
         .join(vecs, F.col("w") == vecs["__k"])
         .select(
             F.col("u").alias(key),
             F.col("w").alias("neighbor_id"),
             F.round(
-                cosine(F.col("__va"), F.col("__v")), round_digits
+                _cosine_normed(
+                    F.col("__va"), F.col("__na"), F.col("__v"), F.col("__n")
+                ),
+                round_digits,
             ).alias("cos_sim"),
         )
     )
@@ -1509,7 +1569,7 @@ def nn_descent_round(
         allp.withColumn(
             "knn_rank", F.row_number().over(w).cast("int")
         )
-        .filter(F.col("knn_rank") <= k)
+        .filter((F.col("knn_rank") <= k) & F.col("cos_sim").isNotNull())
         .select(key, "neighbor_id", "knn_rank", "cos_sim")
     )
 

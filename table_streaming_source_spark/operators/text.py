@@ -16,6 +16,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_streaming_source_spark.operators.hof import bind_once
+
 #: tiny default stopword list (shared with the DuckDB oracle definitions)
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -46,28 +48,54 @@ def _tokens(text_col: str) -> Column:
     )
 
 
+def _token_fields(df: DataFrame, text_col: str, key: str, fields) -> DataFrame:
+    """``key`` plus the fields of the struct ``fields(toks)`` as columns.
+
+    The text is split once per row and the token array is bound as a
+    lambda variable (:func:`bind_once`), so every field reads that one
+    array; ratios over the fields are left to the caller's next select.
+    """
+    return df.select(
+        F.col(key), bind_once(_tokens(text_col), fields).alias("__t")
+    ).select(key, "__t.*")
+
+
+def _char_count(toks: Column) -> Column:
+    """Σ token lengths (int fold)."""
+    return F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
+
+
 def token_stats(df: DataFrame, text_col: str, key: str) -> DataFrame:
     """Per-document token counting: total tokens, distinct tokens,
     type-token ratio, plus a BPE-ish subword count (4-char pieces, an
-    engine-side proxy for token-budget estimation)."""
-    toks = _tokens(text_col)
-    n_tokens = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    total_chars = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
+    engine-side proxy for token-budget estimation).  The ratio is NULL
+    for a document without tokens."""
+    counts = _token_fields(
+        df,
+        text_col,
+        key,
+        lambda toks: F.struct(
+            F.size(toks).alias("n_tokens"),
+            F.size(F.array_distinct(toks)).alias("n_distinct"),
+            # ceil(len/4) per token ≈ BPE subword count proxy
+            F.aggregate(
+                toks,
+                F.lit(0),
+                lambda acc, t: acc
+                + F.ceil(F.length(t) / F.lit(4.0)).cast("int"),
+            ).alias("n_subwords"),
+            _char_count(toks).alias("n_token_chars"),
+        ),
     )
-    return df.select(
-        F.col(key),
-        n_tokens.alias("n_tokens"),
-        n_distinct.alias("n_distinct"),
-        (n_distinct.cast("double") / n_tokens).alias("type_token_ratio"),
-        # ceil(len/4) per token ≈ BPE subword count proxy
-        F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("int"),
-        ).alias("n_subwords"),
-        total_chars.alias("n_token_chars"),
+    return counts.select(
+        key,
+        "n_tokens",
+        "n_distinct",
+        F.try_divide(
+            F.col("n_distinct").cast("double"), F.col("n_tokens")
+        ).alias("type_token_ratio"),
+        "n_subwords",
+        "n_token_chars",
     )
 
 
@@ -125,20 +153,28 @@ def remove_repeated_tokens(df: DataFrame, text_col: str, key: str) -> DataFrame:
     order-preserving in Spark, so the whole cleanup is one row-local
     JVM expression — no explode, no shuffle, no Python.
 
-    Returns ``(key, n_tokens, n_kept, repetition_ratio, clean_text)``.
+    Returns ``(key, n_tokens, n_kept, repetition_ratio, clean_text)``;
+    the ratio is NULL for a document without tokens.
     """
-    toks = _tokens(text_col)
-    deduped = F.array_distinct(toks)
-    n_tokens = F.size(toks)
-    n_kept = F.size(deduped)
-    return df.select(
-        F.col(key),
-        n_tokens.alias("n_tokens"),
+    kept = _token_fields(
+        df,
+        text_col,
+        key,
+        lambda toks: F.struct(
+            F.size(toks).alias("n_tokens"),
+            F.array_distinct(toks).alias("deduped"),
+        ),
+    )
+    n_tokens = F.col("n_tokens")
+    n_kept = F.size("deduped")
+    return kept.select(
+        key,
+        n_tokens,
         n_kept.alias("n_kept"),
-        ((n_tokens - n_kept).cast("double") / n_tokens).alias(
+        F.try_divide((n_tokens - n_kept).cast("double"), n_tokens).alias(
             "repetition_ratio"
         ),
-        F.concat_ws(" ", deduped).alias("clean_text"),
+        F.concat_ws(" ", "deduped").alias("clean_text"),
     )
 
 
@@ -150,19 +186,29 @@ def quality_score(
 ) -> DataFrame:
     """Heuristic document quality: length, mean token length, stopword
     ratio, and a composite score.  Mirrors the classic Gopher/C4-style
-    length+stopword filters; every ratio is a deterministic double."""
-    toks = _tokens(text_col)
-    n_tokens = F.size(toks)
+    length+stopword filters; every ratio is a deterministic double, NULL
+    for a document without tokens."""
     sw = F.array([F.lit(s) for s in stopwords])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    mean_len = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    ).cast("double") / n_tokens
-    stop_ratio = n_stop.cast("double") / n_tokens
-    return df.select(
-        F.col(key),
-        F.length(F.col(text_col)).alias("n_chars_text"),
-        n_tokens.alias("n_tokens"),
+    counts = _token_fields(
+        df,
+        text_col,
+        key,
+        lambda toks: F.struct(
+            F.length(F.col(text_col)).alias("n_chars_text"),
+            F.size(toks).alias("n_tokens"),
+            F.size(
+                F.filter(toks, lambda t: F.array_contains(sw, t))
+            ).alias("n_stop"),
+            _char_count(toks).alias("n_token_chars"),
+        ),
+    )
+    n_tokens = F.col("n_tokens")
+    mean_len = F.try_divide(F.col("n_token_chars").cast("double"), n_tokens)
+    stop_ratio = F.try_divide(F.col("n_stop").cast("double"), n_tokens)
+    return counts.select(
+        key,
+        "n_chars_text",
+        n_tokens,
         F.round(mean_len, 6).alias("mean_token_len"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         # composite: long enough, not stopword-saturated
@@ -182,42 +228,52 @@ def language_id(
 ) -> DataFrame:
     """Keyword/n-gram language-ID heuristic: score(lang) = fraction of
     tokens in that language's marker list; prediction = argmax score with
-    lexicographic tiebreak.  Returns ``(key, pred_lang, pred_score)``."""
-    toks = _tokens(text_col)
-    n_tokens = F.size(toks)
-    scores = []
-    for lang in sorted(markers):
-        arr = F.array([F.lit(w) for w in markers[lang]])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        scores.append(
-            F.struct(
-                F.round(hits.cast("double") / n_tokens, 6).alias("score"),
-                # tiebreak: HIGHER score wins; equal scores → alphabetically
-                # first language.  array_max picks lexicographically-largest
-                # struct, so invert the lang for the tiebreak field.
-                F.lit(lang).alias("lang"),
+    lexicographic tiebreak.  Returns ``(key, pred_lang, pred_score)``;
+    a document without tokens scores NULL for every language and so
+    takes the alphabetically first one, with a NULL score."""
+
+    def best_of(toks: Column) -> Column:
+        n_tokens = F.size(toks)
+        scores = []
+        for lang in sorted(markers):
+            arr = F.array([F.lit(w) for w in markers[lang]])
+            hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
+            scores.append(
+                F.struct(
+                    F.round(
+                        F.try_divide(hits.cast("double"), n_tokens), 6
+                    ).alias("score"),
+                    # tiebreak: HIGHER score wins; equal scores →
+                    # alphabetically first language.  array_max picks
+                    # lexicographically-largest struct, so invert the
+                    # lang for the tiebreak field.
+                    F.lit(lang).alias("lang"),
+                )
             )
+        # argmax with deterministic tie-break: sort by (score desc, lang asc)
+        return F.element_at(
+            F.reverse(
+                F.array_sort(
+                    F.array(*scores),
+                    lambda l, r: F.when(l["score"] < r["score"], -1)
+                    .when(l["score"] > r["score"], 1)
+                    # equal scores: larger lang sorts earlier after
+                    # reverse → compare descending on lang so reverse
+                    # yields asc
+                    .when(l["lang"] > r["lang"], -1)
+                    .when(l["lang"] < r["lang"], 1)
+                    .otherwise(0),
+                )
+            ),
+            1,
         )
-    # argmax with deterministic tie-break: sort by (score desc, lang asc)
-    best = F.element_at(
-        F.reverse(
-            F.array_sort(
-                F.array(*scores),
-                lambda l, r: F.when(l["score"] < r["score"], -1)
-                .when(l["score"] > r["score"], 1)
-                # equal scores: larger lang sorts earlier after reverse →
-                # compare descending on lang so reverse yields asc
-                .when(l["lang"] > r["lang"], -1)
-                .when(l["lang"] < r["lang"], 1)
-                .otherwise(0),
-            )
-        ),
-        1,
-    )
+
     return df.select(
+        F.col(key), bind_once(_tokens(text_col), best_of).alias("__best")
+    ).select(
         F.col(key),
-        best["lang"].alias("pred_lang"),
-        best["score"].alias("pred_score"),
+        F.col("__best.lang").alias("pred_lang"),
+        F.col("__best.score").alias("pred_score"),
     )
 
 
@@ -235,7 +291,7 @@ def tfidf_top_terms(
     """
     tok = tokenize(df, text_col, key)
     # consumed twice (df derivation + score join) — pin so the corpus
-    # tokenize+aggregate runs once (round 15, guide §2.4); lazy, no job
+    # tokenize+aggregate runs once; lazy, no job
     # until the operator's output is consumed.
     tf = (
         tok.groupBy(key, "token")
@@ -247,7 +303,7 @@ def tfidf_top_terms(
     # per (doc, token), so COUNT(*) per token ≡ the old
     # tok.distinct().groupBy(token).count() — same value, one corpus
     # explode instead of two and a tf-sized shuffle instead of a
-    # token-instance-sized one (round 15, guide §2.3/§2.4)
+    # token-instance-sized one
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     # Shuffle-join on token — NO broadcast hint.  The vocabulary is a
     # corpus-derived table (10^8–10^9 distinct tokens at 100 TB); a forced
@@ -421,8 +477,6 @@ def winnow_fingerprints(
     Returns ``(key, pos, fp)``; documents shorter than ``k+w-1`` tokens
     emit nothing.
     """
-    from table_streaming_source_spark.operators.hof import bind_once
-
     toks = _tokens(text_col)
 
     def gram_hashes(ts):
@@ -1116,29 +1170,38 @@ def gopher_quality(
 
     Returns ``(key, n_words, mean_word_len, symbol_ratio,
     alpha_fraction, stopword_hits, pass_words, pass_word_len,
-    pass_symbols, pass_alpha, pass_stopwords, pass_all)``.
+    pass_symbols, pass_alpha, pass_stopwords, pass_all)``.  A document
+    without tokens has NULL ratios, so the rules on them are NULL too
+    and ``pass_all`` is false (it fails ``pass_words``).
     """
-    toks = _tokens(text_col)
-    n_words = F.size(toks)
-    mean_len = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    ).cast("double") / n_words
-    n_symbols = F.size(
-        F.filter(
-            toks,
-            lambda t: t.contains("#") | t.contains("..."),
-        )
-    )
-    symbol_ratio = n_symbols.cast("double") / n_words
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
-    alpha_fraction = n_alpha.cast("double") / n_words
     sw = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
-    # occurrences across the published 8-word set (a stopword appearing
-    # twice counts twice — the rule is "contains at least 2", satisfied
-    # by repetition in the original formulation)
-    stopword_hits = F.size(
-        F.filter(toks, lambda t: F.array_contains(sw, t))
+    counts = _token_fields(
+        df,
+        text_col,
+        key,
+        lambda toks: F.struct(
+            F.size(toks).alias("n_words"),
+            _char_count(toks).alias("n_chars"),
+            F.size(
+                F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
+            ).alias("n_symbols"),
+            F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]"))).alias(
+                "n_alpha"
+            ),
+            # occurrences across the published 8-word set (a stopword
+            # appearing twice counts twice — the rule is "contains at
+            # least 2", satisfied by repetition in the original
+            # formulation)
+            F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).alias(
+                "stopword_hits"
+            ),
+        ),
     )
+    n_words = F.col("n_words")
+    mean_len = F.try_divide(F.col("n_chars").cast("double"), n_words)
+    symbol_ratio = F.try_divide(F.col("n_symbols").cast("double"), n_words)
+    alpha_fraction = F.try_divide(F.col("n_alpha").cast("double"), n_words)
+    stopword_hits = F.col("stopword_hits")
     pass_words = (n_words >= min_words) & (n_words <= max_words)
     pass_word_len = (mean_len >= min_mean_word_len) & (
         mean_len <= max_mean_word_len
@@ -1146,7 +1209,7 @@ def gopher_quality(
     pass_symbols = symbol_ratio <= max_symbol_ratio
     pass_alpha = alpha_fraction >= min_alpha_fraction
     pass_stopwords = stopword_hits >= min_stopword_hits
-    return df.select(
+    return counts.select(
         F.col(key),
         n_words.cast("int").alias("n_words"),
         F.round(mean_len, 6).alias("mean_word_len"),
@@ -1254,7 +1317,7 @@ def line_dedup(df: DataFrame, lines_col: str, key: str) -> DataFrame:
     )
     # two consumers (owner election + ownership probe): without the pin
     # the caller's line derivation (reflow/split of every document) and
-    # the explode execute once per leg (round 15, guide §2.4); lazy —
+    # the explode execute once per leg; lazy —
     # materializes inside the first consuming job.
     ex = ex.localCheckpoint(eager=False)
     owner = ex.groupBy("line").agg(
@@ -1322,7 +1385,7 @@ def repeated_substring_spans(
     # the window fingerprint is internal (only its collision classes
     # matter, never its value): xxhash64 instead of md5 — an 8-byte
     # long per window in every exchange instead of a 32-char hex
-    # string, and a far cheaper per-window hash (round 15; the same
+    # string, and a far cheaper per-window hash (the same
     # digest discipline jaccard_prefix_pairs documents — collisions
     # would merge two windows corpus-wide, birthday odds ~1e-7 at 1e6
     # windows, and the exhaustive md5-based oracle would catch one)

@@ -19,10 +19,13 @@ caches: MEMORY_AND_DISK spills to disk.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+log = logging.getLogger(__name__)
 
 TABLES = (
     "region",
@@ -139,8 +142,9 @@ def clear_snapshot_cache(spark: SparkSession | None = None) -> None:
         if spark is None or key[0] == id(spark._jsparkSession):
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception as exc:
+                log.warning("clear_snapshot_cache: unpersist of %s failed: %r",
+                            key[1], exc)
             del _SNAPSHOT_CACHE[key]
 
 

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def spread(df: DataFrame, parallelism: Optional[int] = None) -> DataFrame:
@@ -50,8 +53,8 @@ def spread(df: DataFrame, parallelism: Optional[int] = None) -> DataFrame:
             est = len(files)
         if est >= max(2, n // 2):
             return df
-    except Exception:
-        pass
+    except Exception as exc:
+        log.warning("spread: partition probe failed, repartitioning: %r", exc)
     return df.repartition(n)
 
 

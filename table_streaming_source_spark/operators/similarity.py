@@ -20,6 +20,7 @@ Scale path (100 TB / billions of vectors):
 from __future__ import annotations
 
 import hashlib
+import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +30,8 @@ from table_streaming_source_spark.operators.hof import (
     explode_at_least,
     spread,
 )
+
+log = logging.getLogger(__name__)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -553,8 +556,8 @@ def clear_ann_index_cache() -> None:
     for k, df in list(_ANN_INDEX_CACHE.items()):
         try:
             df.unpersist()
-        except Exception:
-            pass
+        except Exception as exc:
+            log.warning("clear_ann_index_cache: unpersist failed: %r", exc)
         del _ANN_INDEX_CACHE[k]
 
 

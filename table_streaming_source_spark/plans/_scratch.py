@@ -27,9 +27,12 @@ from __future__ import annotations
 
 import atexit
 import hashlib
+import logging
 import os
 import shutil
 import tempfile
+
+log = logging.getLogger(__name__)
 
 _TABLES: list[tuple[object, str]] = []
 _SWEPT = False
@@ -102,7 +105,7 @@ def _cleanup() -> None:
     for spark, name in _TABLES:
         try:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
-        except Exception:
-            pass
+        except Exception as exc:
+            log.warning("scratch cleanup: DROP TABLE %s failed: %r", name, exc)
     _TABLES.clear()
     shutil.rmtree(_proc_root(), ignore_errors=True)

@@ -13,22 +13,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Size of Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# default 100): one LRU cache per JVM, sized when the JVM first generates
+# code.  Distinct classes compiled, measured with an unbounded cache: 226
+# over repeated catalog_batch passes of 7 entries, 1293 in bench.py's 67
+# queries, 10078 in the Tier-1 suite.  At 100 every repeat of the catalog
+# pass recompiled 180-184 classes; with this cap it compiles 0-16.  Guava
+# evicts per segment (4 segments of a quarter of the cap each), hence the
+# headroom.  Memory follows the classes a workload compiles, not the cap.
+# Over the default cap, the driver after System.gc() holds: catalog passes,
+# heap 123.9 -> 123.7 MB, Metaspace 160.9 -> 161.2 MB; bench.py, Metaspace
+# 197.9 -> 206.7 MB (its heap is mostly cached tables).  The Tier-1 suite
+# ends with all 10033 of its classes cached, at 414 MB heap and 298 MB
+# Metaspace.
+CODEGEN_CACHE_MAX_ENTRIES = 16384
+
 
 def _default_driver_memory() -> str:
     """Size the local-mode JVM to the machine instead of a constant.
 
     In ``local[n]`` ONE JVM holds the driver, every executor thread's
     execution memory, the block manager (snapshot caches + checkpoint
-    blocks), and all broadcasts.  The old fixed 8g default left a
-    full 67-query bench session memory-bound on a 128 GiB box: cached
-    and checkpointed blocks accumulate across queries faster than the
-    ContextCleaner's GC-driven release, and the measured effect was a
-    ~15 % whole-bench inflation with the heaviest shuffle/iteration
-    queries (pagerank, connected components, minhash verify) up to
-    1.8× their isolated times (OPTIMIZATION_r15.md, round 15).
+    blocks), and all broadcasts.  A fixed 8g left a full 67-query bench
+    session memory-bound on a 128 GiB box: cached and checkpointed
+    blocks accumulate across queries faster than the ContextCleaner's
+    GC-driven release, which inflated the whole bench by ~15 % and the
+    heaviest shuffle/iteration queries (pagerank, connected components,
+    minhash verify) up to 1.8× their isolated times.
     Default: a quarter of physical RAM, clamped to [8g, 24g] — small
-    boxes keep the old behavior, big boxes stop thrashing; any cluster
-    deploy (or A/B) still pins ``SPARK_DRIVER_MEMORY`` explicitly."""
+    boxes keep 8g, big boxes stop thrashing; any cluster deploy still
+    pins ``SPARK_DRIVER_MEMORY`` explicitly."""
     try:
         with open("/proc/meminfo") as fh:
             for line in fh:
@@ -63,16 +77,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing mode, MEASURED round 15 (OPTIMIZATION_r15.md):
-        # size-based coalescing (parallelismFirst=false, the setting
-        # Spark's config reference recommends for byte-bound production
-        # stages) was A/B'd over the 14 heaviest bench queries and
-        # REGRESSED the local bench 39.0s → 50.9s (+30%) — at test SFs
-        # the hot stages are CPU-bound on KB-scale shuffles, and
-        # respecting the 64 MB advisory collapses them to one task.
-        # Default stays parallelism-first; a cluster deploy whose
-        # reducers are byte-bound flips the env knobs instead of
-        # editing code.
+        # Size-based coalescing (parallelismFirst=false) made the bench
+        # 30 % slower, because its CPU-bound stages shuffle KBs and a
+        # 64 MB advisory size packs each into one task; a deployment
+        # whose reducers are byte-bound sets the two env settings below.
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
@@ -109,6 +117,10 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.sql.codegen.cache.maxEntries",
+            str(CODEGEN_CACHE_MAX_ENTRIES),
+        )
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),

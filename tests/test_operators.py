@@ -743,6 +743,29 @@ def test_spread_noop_on_well_split_input(spark, sf_dir):
     assert "RoundRobinPartitioning" not in out._jdf.queryExecution().toString()
 
 
+def test_spread_logs_a_failed_probe_and_repartitions(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A probe that raises is reported, and spread() falls back to the
+    repartition."""
+    import logging
+
+    from table_streaming_source_spark.operators import hof
+
+    def broken(df, files):
+        raise RuntimeError("probe exploded")
+
+    monkeypatch.setattr(hof, "_estimated_scan_partitions", broken)
+    path = str(tmp_path / "one")
+    spark.range(8).write.parquet(path)
+    df = spark.read.parquet(path)
+    with caplog.at_level(logging.WARNING, logger=hof.__name__):
+        out = hof.spread(df, 4)
+    assert "RoundRobinPartitioning" in out._jdf.queryExecution().toString()
+    [record] = [r for r in caplog.records if r.name == hof.__name__]
+    assert "RuntimeError('probe exploded')" in record.getMessage()
+
+
 def test_size_bytes_parses_spark_conf_forms():
     from table_streaming_source_spark.operators.hof import _size_bytes
 

@@ -333,8 +333,9 @@ def minhash_lsh_pairs(
         # join); checkpointing materializes the banding pipeline once
         # instead of once per branch — measured 2.3× faster than
         # recomputation at sf0.1 even though Spark can sometimes reuse
-        # the underlying exchanges.  Lazy (eager=False): no job runs
-        # until the operator's output is consumed.
+        # the underlying exchanges.  Lazy (eager=False) still runs the
+        # banding shuffles at this call under AQE; only the final stage
+        # waits for the first consumer (docs/SCALE.md §0).
         .localCheckpoint(eager=False)
     )
 
@@ -378,8 +379,8 @@ def minhash_lsh_pairs(
         # consumed twice (key_a leg + key_b leg): without the pin the
         # semi-join AND the candidate shingling execute once per leg —
         # the table is candidate-scale (tiny at real dup rates), the
-        # recompute is corpus-scan + md5-per-shingle; lazy so no job
-        # runs until the verify join does
+        # recompute is corpus-scan + md5-per-shingle; lazy, but under
+        # AQE the semi-join's shuffle or broadcast runs at this call
         cand_sh = cand_sh.localCheckpoint(eager=False)
     sh_a = cand_sh.select(
         F.col(key).alias("key_a"), F.col("__sh").alias("__sh_a")

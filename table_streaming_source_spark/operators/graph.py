@@ -20,7 +20,7 @@ and diverge from any oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point scale for contribution sums (12 decimal digits)
@@ -44,69 +44,100 @@ def pagerank(
     Σ_{(u,v)∈E} rank(u)/outdeg(u)``.  Dangling mass (vertices with no
     out-edges) is dropped rather than redistributed — deterministic, and
     the variant most link-quality uses want anyway (a page hoarding rank
-    it cannot pass on should not inflate everyone uniformly).
+    it cannot pass on should not inflate everyone uniformly).  Vertex ids
+    are unique; ``outdeg(u)`` counts every edge of ``u``, and an edge
+    whose ``src`` or ``dst`` is not a vertex passes no rank.
 
-    Scale shape: one iteration = one equi-join of the edge list with the
-    rank vector on ``src`` (both partitioned by vertex id — co-located
-    after the first shuffle) plus one hash aggregate on ``dst``.
-    ``localCheckpoint`` truncates lineage so iteration ``k`` never
-    re-runs ``1..k-1``.  The driver sees only ``N`` (a metadata scalar).
+    Scale shape: the degree-annotated edge table is built and pinned
+    once.  One iteration is then one equi-join of that table with the
+    rank vector on ``src`` plus one hash aggregate on ``dst`` (see
+    :func:`_iterate`).  The iterations are not pinned: their shuffles
+    run in the one job that consumes the result.  The driver sees only
+    ``N`` (a metadata scalar).
 
     Returns ``(key, pagerank)``.
     """
     n = vertices.count()
-    v0 = vertices.select(F.col(key).alias("__v"))
-    # materialize the caller's edge expression (typically a fact-scale
-    # join + distinct) BEFORE deriving degrees: e feeds both the degree
-    # aggregate and the join probe side below, so without truncation the
-    # derivation executes twice just to build e_deg
-    e = edges.select(
-        F.col(src).alias("__u"), F.col(dst).alias("__v")
-    ).localCheckpoint(eager=False)
-    outdeg = e.groupBy("__u").agg(F.count(F.lit(1)).alias("__outdeg"))
-    # the degree-annotated edge list is loop-invariant: checkpoint it once
-    # so no iteration re-derives the (possibly expensive) edge expression
-    # or re-shuffles the degree join — iterations then cost exactly one
-    # join with the rank vector plus one hash aggregate each
-    e_deg = e.join(outdeg, "__u").localCheckpoint(eager=False)
-    ranks = v0.select("__v", F.lit(1.0 / n).alias("__rank"))
+    ranks = _iterate(
+        vertices.select(F.col(key).alias("__v")),
+        edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v")),
+        F.lit(1.0 / n),
+        F.lit((1.0 - damping) / n),
+        damping,
+        n_iter,
+        round_digits,
+    )
+    return ranks.select(
+        F.col("__v").alias(key), F.col("__rank").alias("pagerank")
+    )
 
+
+def _iterate(
+    base: DataFrame,
+    e: DataFrame,
+    rank0: Column,
+    teleport: Column,
+    damping: float,
+    n_iter: int,
+    round_digits: int | None,
+) -> DataFrame:
+    """``n_iter`` rounds of ``rank(v) = teleport + d · Σ rank(u)/outdeg(u)``
+    from ``rank0`` over the edges ``e`` ``(__u, __v)``; ``base`` holds one
+    ``(__v, *carried)`` row per vertex.  Returns ``(__v, __rank)``.
+
+    ``outdeg`` counts every edge; an edge whose ``__v`` is not a vertex
+    is then dropped once, and one whose ``__u`` is not a vertex finds no
+    rank to join.  That degree-annotated table is loop-invariant, so it
+    is pinned: the caller's edge expression (typically a fact-scale
+    join + distinct) and the degree join run once, not once per round.
+    Each round unions a zero contribution per vertex with the edge
+    contributions and sums by ``__v``, so every vertex keeps its row with
+    no join back to ``base``; the carried columns, which ``rank0`` and
+    ``teleport`` may read, ride along as ``max`` over NULL padding."""
+    outdeg = e.groupBy("__u").agg(F.count(F.lit(1)).alias("__outdeg"))
+    e_deg = (
+        e.join(base.select("__v"), "__v", "left_semi")
+        .join(outdeg, "__u")
+        .localCheckpoint(eager=False)
+    )
+    carried = [c for c in base.columns if c != "__v"]
+    pad = [
+        F.lit(None).cast(base.schema[c].dataType).alias(c) for c in carried
+    ]
+    zero = base.select("__v", *carried, F.lit(0).cast("long").alias("__c"))
+    ranks = base.select("__v", *carried, rank0.alias("__rank"))
     for _ in range(n_iter):
-        contribs = (
-            e_deg.join(
-                ranks.select(
-                    F.col("__v").alias("__u"), F.col("__rank").alias("__ur")
-                ),
-                "__u",
-            )
-            .select(
-                "__v",
-                F.round(F.col("__ur") / F.col("__outdeg") * _SCALE)
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy("__v")
-            .agg(F.sum("__c").alias("__s"))
+        contribs = e_deg.join(
+            ranks.select(
+                F.col("__v").alias("__u"), F.col("__rank").alias("__ur")
+            ),
+            "__u",
+        ).select(
+            "__v",
+            *pad,
+            F.round(F.col("__ur") / F.col("__outdeg") * _SCALE)
+            .cast("long")
+            .alias("__c"),
         )
         ranks = (
-            v0.join(contribs, "__v", "left")
+            zero.union(contribs)
+            .groupBy("__v")
+            .agg(
+                *[F.max(c).alias(c) for c in carried],
+                F.sum("__c").alias("__s"),
+            )
             .select(
                 "__v",
+                *carried,
                 (
-                    F.lit((1.0 - damping) / n)
-                    + damping
-                    * (F.coalesce(F.col("__s"), F.lit(0)) / F.lit(_SCALE))
+                    teleport + damping * (F.col("__s") / F.lit(_SCALE))
                 ).alias("__rank"),
             )
-            .localCheckpoint(eager=False)
         )
-
     rank_col = F.col("__rank")
     if round_digits is not None:
         rank_col = F.round(rank_col, round_digits)
-    return ranks.select(
-        F.col("__v").alias(key), rank_col.alias("pagerank")
-    )
+    return ranks.select("__v", rank_col.alias("__rank"))
 
 
 def triangle_counts(
@@ -459,74 +490,34 @@ def personalized_pagerank(
     seed-set expansion for topic corpora) where global PageRank is
     topic-blind.
 
-    Same determinism discipline as :func:`pagerank` (fixed-point-scaled
-    contributions, so per-vertex sums are associative and partitioning-
-    independent) and same per-iteration shape (one edge×rank join + one
-    hash aggregate); the seed indicator joins once up front — a
-    broadcast when the seed set is small, which is the typical use.
+    Same determinism discipline, edge table and iteration as
+    :func:`pagerank`, with vertex and seed ids unique; the seed
+    indicator joins once up front — a broadcast when the seed set is
+    small, which is the typical use — and rides through the iterations.
     """
     ns = seeds.count()
-    v0 = vertices.select(F.col(key).alias("__v"))
     sd = seeds.select(F.col(key).alias("__v"), F.lit(1).alias("__is_seed"))
-    base = v0.join(F.broadcast(sd), "__v", "left").select(
-        "__v",
-        F.coalesce(F.col("__is_seed"), F.lit(0)).alias("__is_seed"),
+    base = (
+        vertices.select(F.col(key).alias("__v"))
+        .join(F.broadcast(sd), "__v", "left")
+        .select(
+            "__v", F.coalesce(F.col("__is_seed"), F.lit(0)).alias("__is_seed")
+        )
     )
-    # same loop-invariant discipline as pagerank: materialize the edge
-    # expression before the degree derivation so e's (possibly
-    # fact-scale) lineage executes once, not once per e_deg input leg
-    e = edges.select(
-        F.col(src).alias("__u"), F.col(dst).alias("__v")
-    ).localCheckpoint(eager=False)
-    outdeg = e.groupBy("__u").agg(F.count(F.lit(1)).alias("__outdeg"))
-    e_deg = e.join(outdeg, "__u").localCheckpoint(eager=False)
-    teleport = F.when(
-        F.col("__is_seed") == 1, F.lit(1.0 - damping) / F.lit(float(ns))
-    ).otherwise(F.lit(0.0))
-    ranks = base.select(
-        "__v",
-        "__is_seed",
-        F.when(
-            F.col("__is_seed") == 1, F.lit(1.0) / F.lit(float(ns))
-        )
-        .otherwise(F.lit(0.0))
-        .alias("__rank"),
+    seeded = F.col("__is_seed") == 1
+    ranks = _iterate(
+        base,
+        edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v")),
+        F.when(seeded, F.lit(1.0) / F.lit(float(ns))).otherwise(F.lit(0.0)),
+        F.when(seeded, F.lit(1.0 - damping) / F.lit(float(ns))).otherwise(
+            F.lit(0.0)
+        ),
+        damping,
+        n_iter,
+        round_digits,
     )
-    for _ in range(n_iter):
-        contribs = (
-            e_deg.join(
-                ranks.select(
-                    F.col("__v").alias("__u"), F.col("__rank").alias("__ur")
-                ),
-                "__u",
-            )
-            .select(
-                "__v",
-                F.round(F.col("__ur") / F.col("__outdeg") * _SCALE)
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy("__v")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        ranks = (
-            base.join(contribs, "__v", "left")
-            .select(
-                "__v",
-                "__is_seed",
-                (
-                    teleport
-                    + damping
-                    * (F.coalesce(F.col("__s"), F.lit(0)) / F.lit(_SCALE))
-                ).alias("__rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    rank_col = F.col("__rank")
-    if round_digits is not None:
-        rank_col = F.round(rank_col, round_digits)
     return ranks.select(
-        F.col("__v").alias(key), rank_col.alias("ppr")
+        F.col("__v").alias(key), F.col("__rank").alias("ppr")
     )
 
 

@@ -291,8 +291,8 @@ def tfidf_top_terms(
     """
     tok = tokenize(df, text_col, key)
     # consumed twice (df derivation + score join) — pin so the corpus
-    # tokenize+aggregate runs once; lazy, no job
-    # until the operator's output is consumed.
+    # tokenize+aggregate runs once; lazy, but under AQE the aggregate's
+    # shuffle runs at this call (docs/SCALE.md §0)
     tf = (
         tok.groupBy(key, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1317,8 +1317,8 @@ def line_dedup(df: DataFrame, lines_col: str, key: str) -> DataFrame:
     )
     # two consumers (owner election + ownership probe): without the pin
     # the caller's line derivation (reflow/split of every document) and
-    # the explode execute once per leg; lazy —
-    # materializes inside the first consuming job.
+    # the explode execute once per leg; lazy, but under AQE any shuffle
+    # in the caller's derivation runs at this call (docs/SCALE.md §0)
     ex = ex.localCheckpoint(eager=False)
     owner = ex.groupBy("line").agg(
         F.min(

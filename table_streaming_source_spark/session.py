@@ -117,6 +117,13 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging captures the Python call site of
+        # every Column and functions call, about ten py4j round trips
+        # each; a catalog_batch pass made 5072 calls with it and 2297
+        # without (docs/SCALE.md §0c).  Errors keep their error class and
+        # DataFrame context, less the Python call site; pass "true" in
+        # extra_conf to see call sites while debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.sql.codegen.cache.maxEntries",
             str(CODEGEN_CACHE_MAX_ENTRIES),

@@ -1818,3 +1818,125 @@ def test_common_neighbor_pairs_shuffle_count_join(spark):
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "broadcast" in plan_bc.lower()
     assert "resolvedhint" not in plan_sj.lower()
+
+
+# ---------------------------------------------------------------------------
+# PageRank: exact values and the job count of the catalog entry
+# ---------------------------------------------------------------------------
+
+#: Vertex ids are unique.  3 has no in-edges; 5 is dangling (no
+#: out-edges); (0, 1) is a double edge; (1, 9) points at a non-vertex and
+#: (8, 2) leaves one, so neither passes rank, though (1, 9) still counts
+#: in outdeg(1).
+_PR_VERTS = (0, 1, 2, 3, 4, 5)
+_PR_EDGES = (
+    (0, 1), (0, 1), (0, 2), (0, 5), (1, 2), (1, 9), (2, 0), (3, 2), (8, 2),
+)
+_PR_SCALE = 1_000_000_000_000
+
+
+def _half_up(x: float, digits: int) -> float:
+    """Spark's ``round`` of a double: HALF_UP on its decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP)
+    )
+
+
+def _pagerank_reference(rank0, teleport, damping, n_iter):
+    """Pure-Python restatement of ``operators.graph`` PageRank over
+    ``_PR_VERTS``/``_PR_EDGES``, with the same IEEE operations in the
+    same order: fixed-point contributions, exact integer sums."""
+    outdeg = {}
+    for u, _ in _PR_EDGES:
+        outdeg[u] = outdeg.get(u, 0) + 1
+    ranks = {v: rank0(v) for v in _PR_VERTS}
+    for _ in range(n_iter):
+        s = dict.fromkeys(_PR_VERTS, 0)
+        for u, v in _PR_EDGES:
+            if u in ranks and v in s:
+                s[v] += int(_half_up(ranks[u] / outdeg[u] * _PR_SCALE, 0))
+        ranks = {
+            v: teleport(v) + damping * (float(s[v]) / float(_PR_SCALE))
+            for v in _PR_VERTS
+        }
+    return ranks
+
+
+def _pr_frames(spark):
+    verts = spark.createDataFrame([(v,) for v in _PR_VERTS], "v long")
+    edges = spark.createDataFrame(list(_PR_EDGES), "src long, dst long")
+    return verts, edges
+
+
+@pytest.mark.parametrize("n_iter", [1, 3, 6])
+def test_pagerank_equals_reference_exactly(spark, n_iter):
+    from table_streaming_source_spark.operators.graph import pagerank
+
+    verts, edges = _pr_frames(spark)
+    n, d = len(_PR_VERTS), 0.85
+    want = _pagerank_reference(
+        lambda v: 1.0 / n, lambda v: (1.0 - d) / n, d, n_iter
+    )
+    raw = pagerank(verts, edges, n_iter=n_iter, round_digits=None)
+    assert sorted((r.v, r.pagerank) for r in raw.collect()) == sorted(
+        want.items()
+    )
+    rounded = pagerank(verts, edges, n_iter=n_iter)
+    assert sorted((r.v, r.pagerank) for r in rounded.collect()) == sorted(
+        (v, _half_up(x, 6)) for v, x in want.items()
+    )
+
+
+@pytest.mark.parametrize("n_iter", [1, 3, 6])
+def test_personalized_pagerank_equals_reference_exactly(spark, n_iter):
+    from table_streaming_source_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    verts, edges = _pr_frames(spark)
+    seeds = (0, 3)
+    d, ns = 0.85, float(len(seeds))
+    want = _pagerank_reference(
+        lambda v: 1.0 / ns if v in seeds else 0.0,
+        lambda v: (1.0 - d) / ns if v in seeds else 0.0,
+        d,
+        n_iter,
+    )
+    got = personalized_pagerank(
+        spark.createDataFrame([(v,) for v in seeds], "v long"),
+        verts,
+        edges,
+        n_iter=n_iter,
+        round_digits=None,
+    )
+    assert sorted((r.v, r.ppr) for r in got.collect()) == sorted(
+        want.items()
+    )
+
+
+#: Jobs of a warm ``graph_pagerank`` run at sf0.001: the vertex count, the
+#: shuffle stages the one edge-table pin runs at its call, and the final
+#: job's stages.  Measured 16; pinning each iteration as well took 24.
+GRAPH_PAGERANK_MAX_JOBS = 16
+
+
+def test_graph_pagerank_warm_run_jobs(spark, sf_dir):
+    from table_streaming_source_spark.plans.catalog import QUERIES
+
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            QUERIES["graph_pagerank"](spark, sf_dir).write.format(
+                "noop"
+            ).mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("graph_pagerank-cold")
+    warm = jobs("graph_pagerank-warm")
+    assert warm <= GRAPH_PAGERANK_MAX_JOBS, warm

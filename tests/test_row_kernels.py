@@ -45,6 +45,53 @@ def test_text_line_dedup_splits_each_document_once(spark, sf_dir):
     assert plan.count("split(") == 1, plan
 
 
+#: ``split(`` per optimized plan: one per plan branch that tokenizes the
+#: documents (pmi: two for the top-12 table, two for the pair self-join;
+#: macro_f1: the per-class rows and the macro row; ndcg: BM25's postings,
+#: document frequencies, lengths and corpus stats).  None sits in a
+#: pushed-down filter.
+_QUERY_SPLITS = {
+    "text_pmi_cooccur": 4,
+    "text_macro_f1": 2,
+    "text_ndcg_eval": 4,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_QUERY_SPLITS))
+def test_text_queries_split_once_per_branch(spark, sf_dir, name):
+    plan = _optimized(catalog.QUERIES[name](spark, sf_dir))
+    assert plan.count("split(") == _QUERY_SPLITS[name], plan
+
+
+def test_text_macro_f1_counts_each_class_once(spark, tmp_path):
+    """Every gold or predicted class gets one row; a NULL gold class
+    counts nothing."""
+    docs = [
+        (1, "the customer row table", "en"),
+        (2, "the customer row", None),
+        (3, "batch hash fast und", "de"),
+        (4, "agg join column el", "de"),
+    ]
+    spark.createDataFrame(
+        [(k, text, lang, "web", len(text)) for k, text, lang in docs],
+        "doc_id bigint, text string, lang string, source string, "
+        "n_chars bigint",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    rows = catalog.QUERIES["text_macro_f1"](spark, str(tmp_path)).collect()
+    assert sorted(
+        ((r.lang, r.tp, r.fp, r.fn) for r in rows), key=repr
+    ) == sorted(
+        [
+            ("en", 1, 1, 0),
+            ("de", 1, 0, 1),
+            ("es", 0, 1, 0),
+            (None, 0, 0, 0),
+            ("__macro__", 2, 2, 1),
+        ],
+        key=repr,
+    )
+
+
 def test_sim_pairs_blocked_scores_each_pair_once(spark, sf_dir):
     df = catalog.QUERIES["sim_pairs_blocked"](spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan()

@@ -4,7 +4,12 @@ Whole-stage codegen compiles each distinct generated class once per JVM
 and keeps it in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
 classes.  When a workload's classes outnumber the cache, every repeat of
 the workload recompiles them all; ``get_spark`` sizes the cache so the
-catalog's working set stays compiled."""
+catalog's working set stays compiled.
+
+Building a query is driver work: every ``Column`` and ``functions`` call
+is a py4j round trip or more.  ``get_spark`` turns off PySpark's
+DataFrame debugging, which would wrap each such call in about ten more
+to record its Python call site."""
 
 # perfbench/catalog.py::ENTRIES: one catalog entry per operator family.
 ENTRIES = (
@@ -54,3 +59,42 @@ def test_repeated_catalog_pass_recompiles_nothing(spark, sf_dir):
     first = _catalog_pass(spark, sf_dir)
     second = _catalog_pass(spark, sf_dir)
     assert second <= MAX_REPEAT_COMPILES, (first, second)
+
+
+# py4j calls to build pricing_summary without running it: 535 with
+# DataFrame debugging on, 135 with it off.  Python's garbage collector
+# also sends py4j commands (``m`` for memory) at times of its own; those
+# are not counted.
+MAX_BUILD_PY4J_CALLS = 200
+
+
+def test_get_spark_turns_off_dataframe_debugging(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+    assert is_debugging_enabled() is False
+
+
+def test_building_a_query_records_no_call_sites(spark, sf_dir, monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    from table_streaming_source_spark.plans.catalog import QUERIES
+
+    QUERIES["pricing_summary"](spark, sf_dir)  # load the cached tables
+    commands = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            commands.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    QUERIES["pricing_summary"](spark, sf_dir)
+    monkeypatch.undo()
+    origin = [c for c in commands if "PySparkCurrentOrigin" in c]
+    assert origin == [], origin[:3]
+    assert len(commands) <= MAX_BUILD_PY4J_CALLS, len(commands)

@@ -23,20 +23,18 @@ library (H.264, MP3 audio) are not decoded: ``decoder='real'`` raises,
 and MP3/MP4/MKV get header and container walks instead.
 ``decoder='fake'`` remains for non-container fixture payloads.
 
-Two module-private helpers hold the Arrow batch framing (key column,
-dtype mapping, per-batch loop) that the public functions share:
-
-- :func:`_keyed_payload` backs the ``attach_*_payload`` fixture
-  adapters: one ``(key, payload)`` row per input row.
-- :func:`_per_payload` backs every stats/meta function that emits
-  exactly one row per payload.
-
-Both preserve partitioning (no shuffle).  A decoder raises
-``ValueError`` on malformed bytes, which fails the task; that is the
-quarantine path (:mod:`table_streaming_source_spark.malformed`,
-:func:`quarantine_decode`).  The functions that emit several rows per
-payload (``audio_features``, ``*_frame_stats``, ``srt_cue_rows``, ...)
-keep their own loops.
+Every stats/meta function, and every fixture adapter that synthesizes
+bytes, frames its rows through
+:func:`table_streaming_source_spark._rows.map_rows` (one or several
+rows per payload; dtypes from the output schema; no shuffle): a parser
+here maps one payload's bytes to its rows, and
+:func:`_keyed_payload` synthesizes one ``(key, payload)`` row per key
+for the ``attach_*_payload`` adapters.  A decoder raises ``ValueError``
+on malformed bytes, which fails the task; that is the quarantine path
+(:mod:`table_streaming_source_spark.malformed`,
+:func:`quarantine_decode`).  ``decode_media`` and ``resize_media``
+keep their own batch loops: they work on whole pandas columns per
+batch, the unit a vectorized codec or resampler would take.
 """
 
 from __future__ import annotations
@@ -52,7 +50,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -71,6 +68,7 @@ from table_streaming_source_spark.malformed import (  # noqa: F401
     check_dims as _check_dims,
     quarantinable,
 )
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.operators.hof import spread
 
 _KEYED_PAYLOAD_SCHEMA = StructType(
@@ -80,15 +78,6 @@ _KEYED_PAYLOAD_SCHEMA = StructType(
     ]
 )
 
-#: pandas dtype for a Spark column type: (NOT NULL, nullable); a type not
-#: listed (string, binary) stays an object column
-_PANDAS_DTYPES = {
-    LongType(): ("int64", "Int64"),
-    IntegerType(): ("int32", "Int32"),
-    DoubleType(): ("float64", "float64"),
-    BooleanType(): ("bool", "boolean"),
-}
-
 
 def _keyed_payload(
     df: DataFrame, key: str, synth: Callable[[int], bytes]
@@ -97,62 +86,13 @@ def _keyed_payload(
     ``payload = synth(key)`` built on the executor by Arrow-batched
     ``mapInPandas``.  Schema ``key bigint NOT NULL, payload binary NOT
     NULL``."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [synth(int(k)) for k in pdf[key]],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=_KEYED_PAYLOAD_SCHEMA)
-
-
-def _per_payload(
-    df: DataFrame,
-    one: Callable[[bytes], "tuple | dict"],
-    schema: "StructType | str",
-    *,
-    key: str,
-    payload_col: str,
-) -> DataFrame:
-    """Exactly one output row per ``(key, payload)`` input row:
-    ``(int(key), *one(bytes(payload)))``, by Arrow-batched
-    ``mapInPandas`` over ``df`` as given (no projection, no shuffle).
-
-    ``schema`` names ``key`` first, then the columns ``one`` returns:
-    a tuple in schema order, or a dict keyed by column name.  Each
-    column is built with the pandas dtype of its Spark type.  ``one``
-    raises ``ValueError`` on malformed bytes, which fails the task: the
-    quarantine path (see :mod:`table_streaming_source_spark.malformed`).
-    """
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    names = schema.names
-    dtypes = [
-        _PANDAS_DTYPES.get(f.dataType, (None, None))[f.nullable]
-        for f in schema.fields
-    ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                vals = one(bytes(payload))
-                if isinstance(vals, dict):
-                    vals = [vals[n] for n in names[1:]]
-                rows.append((int(k), *vals))
-            cols = list(zip(*rows)) if rows else [()] * len(names)
-            yield pd.DataFrame(
-                {
-                    n: pd.Series(c, dtype=d)
-                    for n, c, d in zip(names, cols, dtypes)
-                }
-            )
-
-    return df.mapInPandas(batches, schema=schema)
+    return map_rows(
+        df.select(key),
+        lambda k: (synth(int(k)),),
+        _KEYED_PAYLOAD_SCHEMA,
+        cols=(key,),
+        key=key,
+    )
 
 
 def attach_payload(df: DataFrame, text_col: str, key: str) -> DataFrame:
@@ -366,18 +306,13 @@ def attach_container_payload(df: DataFrame, key: str) -> DataFrame:
             "video",
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            made = [synth(int(k)) for k in pdf[key]]
-            yield pd.DataFrame(
-                {
-                    "key": pdf[key].astype("int64"),
-                    "payload": [p for p, _ in made],
-                    "media_type": [m for _, m in made],
-                }
-            )
-
-    return df.select(key).mapInPandas(batches, schema=schema)
+    return map_rows(
+        df.select(key),
+        lambda k: synth(int(k)),
+        schema,
+        cols=(key,),
+        key=key,
+    )
 
 
 DECODED_SCHEMA = StructType(
@@ -635,31 +570,27 @@ def audio_features(
     silence trimming, energy-based quality filters) with the decode
     genuinely performed on the bytes.
     """
-    import numpy as np
+    return map_rows(
+        df,
+        lambda p: _window_rows(wav_pcm(p), window),
+        AUDIO_FEATURES_SCHEMA,
+        cols=(payload_col,),
+        key=key,
+        many=True,
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys, ws, ns, sqs, crs = [], [], [], [], []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                s = wav_pcm(bytes(payload))
-                for w in range(-(-len(s) // window)):
-                    seg = s[w * window : (w + 1) * window]
-                    keys.append(int(k))
-                    ws.append(w)
-                    ns.append(len(seg))
-                    sqs.append(int((seg * seg).sum()))
-                    crs.append(int(((seg[:-1] * seg[1:]) < 0).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(keys, dtype="int64"),
-                    "w": pd.Series(ws, dtype="int32"),
-                    "n": pd.Series(ns, dtype="int64"),
-                    "sum_sq": pd.Series(sqs, dtype="int64"),
-                    "crossings": pd.Series(crs, dtype="int64"),
-                }
-            )
 
-    return df.mapInPandas(batches, schema=AUDIO_FEATURES_SCHEMA)
+def _window_rows(s, window: int) -> Iterator[tuple]:
+    """``(w, n, Σ s², zero crossings)`` per ``window``-sample frame of
+    the decoded samples ``s``."""
+    for w in range(-(-len(s) // window)):
+        seg = s[w * window : (w + 1) * window]
+        yield (
+            w,
+            len(seg),
+            int((seg * seg).sum()),
+            int(((seg[:-1] * seg[1:]) < 0).sum()),
+        )
 
 
 AUDIO_RESAMPLE_SCHEMA = StructType(
@@ -702,8 +633,8 @@ def audio_resample_stats(
         s = wav_pcm(payload).astype(np.int64)
         return (len(s), *_pcm_stats(s[::factor]))
 
-    return _per_payload(
-        df, one, AUDIO_RESAMPLE_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, one, AUDIO_RESAMPLE_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -875,8 +806,8 @@ def adpcm_stats(
     prefix-sum chain and is value-visible.  Arrow-batched
     ``mapInPandas``, partition-preserving; compressed audio bytes never
     shuffle."""
-    return _per_payload(
-        df, _adpcm_one, ADPCM_STATS_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _adpcm_one, ADPCM_STATS_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -997,8 +928,8 @@ def image_pixel_stats(
     (``Σ |p(x+1,y) − p(x,y)|`` — the gradient magnitude quality
     filters threshold on).  All-integer → engine-exact; Arrow-batched
     ``mapInPandas``, no shuffle."""
-    return _per_payload(
-        df, _pixel_one, PIXEL_STATS_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _pixel_one, PIXEL_STATS_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -1400,37 +1331,28 @@ def gif_frame_stats(
     output row per sampled frame."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "key", "frame", "width", "height", "sum_px", "min_px",
-                "max_px",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                for f, px in enumerate(gif_frames(bytes(payload))):
-                    if f % stride:
-                        continue
-                    p = px.astype(np.int64)
-                    out["key"].append(int(k))
-                    out["frame"].append(f)
-                    out["height"].append(p.shape[0])
-                    out["width"].append(p.shape[1])
-                    out["sum_px"].append(int(p.sum()))
-                    out["min_px"].append(int(p.min()))
-                    out["max_px"].append(int(p.max()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "frame": pd.Series(out["frame"], dtype="int32"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "sum_px": pd.Series(out["sum_px"], dtype="int64"),
-                    "min_px": pd.Series(out["min_px"], dtype="int32"),
-                    "max_px": pd.Series(out["max_px"], dtype="int32"),
-                }
+    def frames(payload: bytes) -> Iterator[tuple]:
+        for f, px in enumerate(gif_frames(payload)):
+            if f % stride:
+                continue
+            p = px.astype(np.int64)
+            yield (
+                f,
+                p.shape[1],
+                p.shape[0],
+                int(p.sum()),
+                int(p.min()),
+                int(p.max()),
             )
 
-    return df.mapInPandas(batches, schema=FRAME_STATS_SCHEMA)
+    return map_rows(
+        df,
+        frames,
+        FRAME_STATS_SCHEMA,
+        cols=(payload_col,),
+        key=key,
+        many=True,
+    )
 
 
 def synth_avi_video(
@@ -1638,47 +1560,34 @@ def avi_frame_stats(
     features leave the executor — never media bytes."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "key", "frame", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "wsum_r",
-                )
-            }
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                for f, rgb in enumerate(avi_frames(bytes(payload))):
-                    if f % stride:
-                        continue
-                    p = rgb.astype(np.int64)
-                    h, w = p.shape[:2]
-                    pos = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + w * np.arange(h, dtype=np.int64)[:, None]
-                    )
-                    out["key"].append(int(k))
-                    out["frame"].append(f)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["sum_r"].append(int(p[:, :, 0].sum()))
-                    out["sum_g"].append(int(p[:, :, 1].sum()))
-                    out["sum_b"].append(int(p[:, :, 2].sum()))
-                    out["wsum_r"].append(int((pos * p[:, :, 0]).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "frame": pd.Series(out["frame"], dtype="int32"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                    "wsum_r": pd.Series(out["wsum_r"], dtype="int64"),
-                }
+    def frames(payload: bytes) -> Iterator[tuple]:
+        for f, rgb in enumerate(avi_frames(payload)):
+            if f % stride:
+                continue
+            p = rgb.astype(np.int64)
+            h, w = p.shape[:2]
+            pos = (
+                np.arange(w, dtype=np.int64)[None, :]
+                + w * np.arange(h, dtype=np.int64)[:, None]
+            )
+            yield (
+                f,
+                w,
+                h,
+                int(p[:, :, 0].sum()),
+                int(p[:, :, 1].sum()),
+                int(p[:, :, 2].sum()),
+                int((pos * p[:, :, 0]).sum()),
             )
 
-    return df.mapInPandas(batches, schema=VIDEO_FRAME_STATS_SCHEMA)
+    return map_rows(
+        df,
+        frames,
+        VIDEO_FRAME_STATS_SCHEMA,
+        cols=(payload_col,),
+        key=key,
+        many=True,
+    )
 
 
 def attach_gif_payload(df: DataFrame, key: str) -> DataFrame:
@@ -1757,12 +1666,12 @@ def image_ahash(
                         bits_hi |= 1 << (k - 32)
         return bits_hi, bits_lo
 
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: ahash(decode_pixels(p)),
         AHASH_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -1804,12 +1713,12 @@ def quarantine_decode(
     ``mapInPandas``; route ``status='error'`` rows to a quarantine sink
     downstream and reprocess after codec fixes.
     """
-    return _per_payload(
+    return map_rows(
         df,
         _quarantine_one,
         QUARANTINE_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -2792,12 +2701,12 @@ def jpeg_color_stats(
     float YCbCr→RGB conversion, so every value is an exact integer a SQL
     oracle can restate; the RGB layer is covered by unit tests.
     Arrow-batched ``mapInPandas``, no shuffle."""
-    return _per_payload(
+    return map_rows(
         df,
         _jpeg_color_one,
         JPEG_COLOR_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -3173,8 +3082,8 @@ def flac_stats(
     reconstruction, warm-up handling, or frame stitching diverges from
     the synthesis formula and is value-visible.  Arrow-batched
     ``mapInPandas``, partition-preserving."""
-    return _per_payload(
-        df, _flac_one, FLAC_STATS_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _flac_one, FLAC_STATS_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -3258,12 +3167,12 @@ def mixed_audio_stats(
     ``codec='quarantined'`` rows instead of failing the job — the
     format-dispatch front door every crawled-audio pipeline needs.
     Arrow-batched ``mapInPandas``, partition-preserving."""
-    return _per_payload(
+    return map_rows(
         df,
         _mixed_audio_one,
         MIXED_AUDIO_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -3386,37 +3295,24 @@ def mjpeg_frame_stats(
     video bytes never shuffle."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "frame_idx", "n_px", "sum_p", "wsum_p",
-            )}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                for f, frame in avi_mjpeg_frames(
-                    bytes(payload), step=step
-                ):
-                    px = frame.astype(np.int64)
-                    h, w = px.shape
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :] // 8
-                        + 2 * (np.arange(h, dtype=np.int64)[:, None] // 8)
-                    )
-                    rows["key"].append(int(k))
-                    rows["frame_idx"].append(f)
-                    rows["n_px"].append(h * w)
-                    rows["sum_p"].append(int(px.sum()))
-                    rows["wsum_p"].append(int((px * wgt).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "n_px": pd.Series(rows["n_px"], dtype="int64"),
-                    "sum_p": pd.Series(rows["sum_p"], dtype="int64"),
-                    "wsum_p": pd.Series(rows["wsum_p"], dtype="int64"),
-                }
+    def frames(payload: bytes) -> Iterator[tuple]:
+        for f, frame in avi_mjpeg_frames(payload, step=step):
+            px = frame.astype(np.int64)
+            h, w = px.shape
+            wgt = (
+                np.arange(w, dtype=np.int64)[None, :] // 8
+                + 2 * (np.arange(h, dtype=np.int64)[:, None] // 8)
             )
+            yield f, h * w, int(px.sum()), int((px * wgt).sum())
 
-    return df.mapInPandas(batches, schema=MJPEG_STATS_SCHEMA)
+    return map_rows(
+        df,
+        frames,
+        MJPEG_STATS_SCHEMA,
+        cols=(payload_col,),
+        key=key,
+        many=True,
+    )
 
 
 def encode_jpeg_420_coeffs(
@@ -3588,12 +3484,12 @@ def jpeg_420_stats(
     resolution), Σ per plane proves the three DC predictor chains, and
     the block-position-weighted luma sum catches any block placement
     slip in the 2×2 interleave.  Arrow-batched ``mapInPandas``."""
-    return _per_payload(
+    return map_rows(
         df,
         _jpeg_420_one,
         JPEG420_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -3739,8 +3635,8 @@ def tiff_meta_stats(
     -time layer an image-prep pipeline reads before any pixel decode
     (orientation decides the resize transform; capture time drives
     dedup windows).  Arrow-batched ``mapInPandas``."""
-    return _per_payload(
-        df, tiff_exif_meta, TIFF_META_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, tiff_exif_meta, TIFF_META_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -3928,8 +3824,8 @@ def jpeg_color_plane_stats(
         ]
     )
 
-    return _per_payload(
-        df, _jpeg_444_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _jpeg_444_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -4078,12 +3974,12 @@ def bmp_stats(
     position-weighted ``Σ r·(x + 2y)`` that makes a forgotten flip,
     BGR swap, or stride slip value-visible.  Arrow-batched
     ``mapInPandas``."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _rgb_one(bmp_pixels(p)),
         BMP_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -4156,38 +4052,26 @@ def ulaw_features(
     shuffles."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys, ws, ns, sqs, crs = [], [], [], [], []
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                fmt_tag = None
-                codes = None
-                for cid, body in _riff_chunks(bytes(payload)):
-                    if cid == b"fmt ":
-                        fmt_tag = struct.unpack("<H", body[:2])[0]
-                    elif cid == b"data":
-                        codes = np.frombuffer(body, dtype=np.uint8)
-                if fmt_tag != 7 or codes is None:
-                    raise ValueError("not a mu-law WAV")
-                s = ulaw_expand(codes)
-                for w in range(-(-len(s) // window)):
-                    seg = s[w * window : (w + 1) * window]
-                    keys.append(int(k))
-                    ws.append(w)
-                    ns.append(len(seg))
-                    sqs.append(int((seg * seg).sum()))
-                    crs.append(int(((seg[:-1] * seg[1:]) < 0).sum()))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(keys, dtype="int64"),
-                    "w": pd.Series(ws, dtype="int32"),
-                    "n": pd.Series(ns, dtype="int64"),
-                    "sum_sq": pd.Series(sqs, dtype="int64"),
-                    "crossings": pd.Series(crs, dtype="int64"),
-                }
-            )
+    def samples(payload: bytes):
+        fmt_tag = None
+        codes = None
+        for cid, body in _riff_chunks(payload):
+            if cid == b"fmt ":
+                fmt_tag = struct.unpack("<H", body[:2])[0]
+            elif cid == b"data":
+                codes = np.frombuffer(body, dtype=np.uint8)
+        if fmt_tag != 7 or codes is None:
+            raise ValueError("not a mu-law WAV")
+        return ulaw_expand(codes)
 
-    return df.mapInPandas(batches, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(
+        df,
+        lambda p: _window_rows(samples(p), window),
+        AUDIO_FEATURES_SCHEMA,
+        cols=(payload_col,),
+        key=key,
+        many=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4287,8 +4171,8 @@ def mpeg_audio_meta(
     Arrow-batched ``mapInPandas``, partition-preserving, zero shuffles;
     a malformed header raises rather than silently resyncing — the
     quarantine entry is the place malformed media routes to."""
-    return _per_payload(
-        df, _mpeg_one, MPEG_META_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _mpeg_one, MPEG_META_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -4430,12 +4314,12 @@ def interlaced_pixel_stats(
     change the answer, so the deinterlace scatter is value-checked, not
     just the pixel multiset.  mapInPandas, partition-preserving, zero
     shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _gray_one(png_pixels_adam7(p)),
         INTERLACED_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -4604,12 +4488,12 @@ def filtered_pixel_stats(
     as :func:`interlaced_pixel_stats` (position-weighted checksum makes
     any unfilter mistake change the answer); mapInPandas, zero
     shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _gray_one(png_pixels_filtered(p)),
         INTERLACED_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -4705,12 +4589,12 @@ def rgb_filtered_stats(
     """Per-channel stats over REAL truecolor all-filter PNG decode —
     the position-weighted red sum catches both unfilter and channel-
     interleave mistakes.  mapInPandas, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _rgb_one(png_pixels_filtered(p)),
         RGB_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -4855,12 +4739,12 @@ def tga_stats(
     """Per-channel stats over REAL TGA RLE decode — same contract as
     :func:`rgb_filtered_stats` (position-weighted red checksum catches
     RLE, flip, and channel-swap mistakes)."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _rgb_one(tga_pixels(p)),
         RGB_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -5019,12 +4903,12 @@ def ico_stats(
     in the container (the AND mask genuinely gates the sums — a decoder
     that ignores it is value-visible) plus the transparent-pixel count.
     Arrow-batched ``mapInPandas``, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         spread(df),
         _ico_one,
         ICO_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -5227,12 +5111,12 @@ def palette_pixel_stats(
     prefix-tRNS rule, and a position-weighted INDEX checksum (catches
     unfilter mistakes before the palette hides them).  Arrow-batched
     ``mapInPandas``, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         spread(df),
         _palette_one,
         PALETTE_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -5813,12 +5697,12 @@ def webp_pixel_stats(
     weighted green checksum (any bitstream mistake — prefix tables,
     LZ77 copies, cache state — shifts it), and the opaque count.
     Arrow-batched ``mapInPandas``, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         spread(df),
         _webp_one,
         WEBP_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -5973,12 +5857,12 @@ def _gray_stats(decode):
     """Factory: :func:`_gray_one` stats over a gray ``(h, w)`` decoder."""
 
     def op(df: DataFrame, *, payload_col="payload", key="key"):
-        return _per_payload(
+        return map_rows(
             spread(df),
             lambda p: _gray_one(decode(p)),
             GRAY_STATS_SCHEMA,
+            cols=(payload_col,),
             key=key,
-            payload_col=payload_col,
         )
 
     return op
@@ -6173,12 +6057,12 @@ def qoi_stats(
     """Per-channel stats over REAL QOI decode — same contract as
     :func:`tga_stats` (the position-weighted red checksum catches op
     mis-decodes, cache corruption, and run misalignment)."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: _rgb_one(qoi_pixels(p)),
         RGB_STATS_SCHEMA,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -6312,8 +6196,8 @@ def pnm_stats(
     count, total sample sum, and the position-weighted channel-0
     checksum (catches raster-order, comment-skip, and ASCII-token
     mistakes)."""
-    return _per_payload(
-        df, _pnm_one, PNM_STATS_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _pnm_one, PNM_STATS_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -6375,15 +6259,15 @@ def au_stats(
     bad magic, unsupported encoding, or size mismatch raises — the
     quarantine path, as for every other container here.  Arrow-batched,
     zero shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         _au_one,
         (
             "key long, samplerate int, n_samples long, sum_s long, "
             "sum_abs long, max_abs long"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -6510,7 +6394,7 @@ def mp4_meta(
     (largesize, nesting, overrun checks); only codec payload decode is
     out of scope.  Arrow-batched, zero shuffles — at 100 TB each
     container is one row-local walk over its leading/trailing KBs."""
-    return _per_payload(
+    return map_rows(
         df,
         _mp4_one,
         (
@@ -6518,8 +6402,8 @@ def mp4_meta(
             "timescale long, duration long, n_tracks int, "
             "track_id_sum long, mdat_bytes long"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -6634,15 +6518,15 @@ def midi_meta(
     (status byte omitted when repeated).  A length mismatch between
     the declared MTrk size and the walked events raises — quarantine
     path.  Arrow-batched, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         _midi_one,
         (
             "key long, format int, n_tracks int, division int, "
             "tempo_us long, n_note_on long, max_track_ticks long"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -6761,15 +6645,15 @@ def ogg_meta(
     polynomial (computed over the page with the checksum field zeroed).
     Any violation raises — quarantine path.  Arrow-batched, zero
     shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: (*_ogg_one(p), True),
         (
             "key long, n_pages int, payload_bytes long, "
             "last_granule long, serial long, crc_ok boolean"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -6881,15 +6765,15 @@ def aiff_stats(
     big-endian expansion, exact-integer per-stream stats.  Truncated
     chunks, frame-count mismatches, and non-integral rates raise —
     quarantine path."""
-    return _per_payload(
+    return map_rows(
         df,
         _aiff_one,
         (
             "key long, samplerate int, n_frames long, sum_s long, "
             "max_abs long"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -7039,15 +6923,15 @@ def mkv_meta(
     string leaves, skipping unknown elements by their declared size —
     the forward-compatibility contract EBML exists for.  Overruns
     raise (quarantine).  Arrow-batched, zero shuffles."""
-    return _per_payload(
+    return map_rows(
         df,
         _mkv_one,
         (
             "key long, doctype string, timestamp_scale long, "
             "n_tracks int, track_number_sum long, title_len int"
         ),
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -7176,8 +7060,8 @@ def srt_cue_stats(
     aligns against audio before any sample decode.  Arrow-batched
     ``mapInPandas``, zero shuffles: subtitle bytes never leave the
     executor that scanned them."""
-    return _per_payload(
-        df, _srt_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _srt_one, SRT_CUES_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -7189,6 +7073,8 @@ def srt_cue_rows(
     alignment joins (cue ↔ keyframe) start here.  Arrow-batched
     ``mapInPandas``; malformed payloads raise the quarantine
     ValueError like every decoder."""
+    import re
+
     schema = StructType(
         [
             StructField("key", LongType(), False),
@@ -7197,50 +7083,28 @@ def srt_cue_rows(
             StructField("end_ms", LongType(), False),
         ]
     )
+    ts_re = re.compile(
+        r"^(\d{2,}):([0-5]\d):([0-5]\d),(\d{3})"
+        r" --> "
+        r"(\d{2,}):([0-5]\d):([0-5]\d),(\d{3})$"
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        ts_re = re.compile(
-            r"^(\d{2,}):([0-5]\d):([0-5]\d),(\d{3})"
-            r" --> "
-            r"(\d{2,}):([0-5]\d):([0-5]\d),(\d{3})$"
-        )
-        for pdf in it:
-            rows = {k: [] for k in ("key", "cue_idx", "start_ms",
-                                    "end_ms")}
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                # reuse the strict parser for validation, then re-walk
-                # the blocks for the per-cue spans
-                _srt_one(bytes(payload))
-                for block in bytes(payload).decode("utf-8").split(
-                    "\n\n"
-                ):
-                    lines = [ln for ln in block.split("\n") if ln]
-                    if not lines:
-                        continue
-                    m = ts_re.match(lines[1])
-                    g = [int(x) for x in m.groups()]
-                    rows["key"].append(int(k))
-                    rows["cue_idx"].append(int(lines[0]) - 1)
-                    rows["start_ms"].append(
-                        ((g[0] * 60 + g[1]) * 60 + g[2]) * 1000 + g[3]
-                    )
-                    rows["end_ms"].append(
-                        ((g[4] * 60 + g[5]) * 60 + g[6]) * 1000 + g[7]
-                    )
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "cue_idx": pd.Series(rows["cue_idx"], dtype="int32"),
-                    "start_ms": pd.Series(
-                        rows["start_ms"], dtype="int64"
-                    ),
-                    "end_ms": pd.Series(rows["end_ms"], dtype="int64"),
-                }
+    def cues(payload: bytes) -> Iterator[tuple]:
+        # reuse the strict parser for validation, then re-walk the
+        # blocks for the per-cue spans
+        _srt_one(payload)
+        for block in payload.decode("utf-8").split("\n\n"):
+            lines = [ln for ln in block.split("\n") if ln]
+            if not lines:
+                continue
+            g = [int(x) for x in ts_re.match(lines[1]).groups()]
+            yield (
+                int(lines[0]) - 1,
+                ((g[0] * 60 + g[1]) * 60 + g[2]) * 1000 + g[3],
+                ((g[4] * 60 + g[5]) * 60 + g[6]) * 1000 + g[7],
             )
 
-    return df.mapInPandas(batches, schema=schema)
+    return map_rows(df, cues, schema, cols=(payload_col,), key=key, many=True)
 
 
 # ---------------------------------------------------------------------------
@@ -7340,8 +7204,8 @@ def webvtt_cue_stats(
     :func:`srt_cue_stats` so the two timed-text dialects feed one
     downstream pipeline.  Arrow-batched ``mapInPandas``, zero
     shuffles."""
-    return _per_payload(
-        df, _webvtt_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _webvtt_one, SRT_CUES_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -7461,7 +7325,7 @@ def pcx_stats(
         ]
     )
 
-    return _per_payload(df, _pcx_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _pcx_one, schema, cols=(payload_col,), key=key)
 
 
 #: magic-byte table for content sniffing (public file signatures)
@@ -7530,12 +7394,12 @@ def sniff_types(
         ]
     )
 
-    return _per_payload(
+    return map_rows(
         df,
         lambda p: (sniff_type(p),),
         schema,
+        cols=(payload_col,),
         key=key,
-        payload_col=payload_col,
     )
 
 
@@ -7642,8 +7506,8 @@ def ass_cue_stats(
     """Per-file ASS/SSA cue statistics, shape-compatible with
     `srt_cue_stats`/`webvtt_cue_stats` — the third timed-text dialect
     feeding the same downstream pipeline."""
-    return _per_payload(
-        df, _ass_one, SRT_CUES_SCHEMA, key=key, payload_col=payload_col
+    return map_rows(
+        df, _ass_one, SRT_CUES_SCHEMA, cols=(payload_col,), key=key
     )
 
 
@@ -7715,7 +7579,7 @@ def cur_meta(
         ]
     )
 
-    return _per_payload(df, _cur_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _cur_one, schema, cols=(payload_col,), key=key)
 
 
 def attach_cur_payload(df: DataFrame, key: str) -> DataFrame:
@@ -7796,8 +7660,8 @@ def wav_cue_markers(
         ]
     )
 
-    return _per_payload(
-        df, _wav_cues_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _wav_cues_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -7871,7 +7735,7 @@ def dds_meta(
         ]
     )
 
-    return _per_payload(df, _dds_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _dds_one, schema, cols=(payload_col,), key=key)
 
 
 # ---------------------------------------------------------------------------
@@ -8001,8 +7865,8 @@ def png_text_stats(
         ]
     )
 
-    return _per_payload(
-        df, _png_text_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _png_text_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -8151,7 +8015,7 @@ def ttf_meta(
         ]
     )
 
-    return _per_payload(df, _ttf_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _ttf_one, schema, cols=(payload_col,), key=key)
 
 
 def _syncsafe(n: int) -> bytes:
@@ -8264,7 +8128,7 @@ def id3_meta(
         ]
     )
 
-    return _per_payload(df, _id3_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _id3_one, schema, cols=(payload_col,), key=key)
 
 
 # ---------------------------------------------------------------------------
@@ -8389,8 +8253,8 @@ def gif_comment_stats(
         ]
     )
 
-    return _per_payload(
-        df, _gif_comments_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _gif_comments_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -8498,7 +8362,7 @@ def ani_meta(
         ]
     )
 
-    return _per_payload(df, _ani_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _ani_one, schema, cols=(payload_col,), key=key)
 
 
 def synth_ico_png(key: int) -> bytes:
@@ -8615,8 +8479,8 @@ def ico_png_meta(
         ]
     )
 
-    return _per_payload(
-        df, _ico_png_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _ico_png_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -8721,8 +8585,8 @@ def wav_info_tags(
         ]
     )
 
-    return _per_payload(
-        df, _wav_info_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _wav_info_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -8843,8 +8707,8 @@ def apng_meta(
         ]
     )
 
-    return _per_payload(
-        df, _apng_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _apng_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -8968,8 +8832,8 @@ def flac_tag_stats(
         ]
     )
 
-    return _per_payload(
-        df, _flac_tags_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _flac_tags_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -9040,8 +8904,8 @@ def edid_meta(
         ]
     )
 
-    return _per_payload(
-        df, _edid_one, schema, key=key, payload_col=payload_col
+    return map_rows(
+        df, _edid_one, schema, cols=(payload_col,), key=key
     )
 
 
@@ -9121,4 +8985,4 @@ def stl_meta(
         ]
     )
 
-    return _per_payload(df, _stl_one, schema, key=key, payload_col=payload_col)
+    return map_rows(df, _stl_one, schema, cols=(payload_col,), key=key)

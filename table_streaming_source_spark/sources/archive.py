@@ -6,9 +6,9 @@ image/text loaders; document dumps arrive zipped).
 Both readers follow the repo's container discipline
 (`sources/warc.py`, `sources/avro_ocf.py`): one archive file = one
 Spark task via the built-in ``binaryFile`` source, a pure-Python
-spec-level walker (ustar headers / ZIP central directory) inside an
-Arrow-batched ``mapInPandas``, and only parsed fields ever leave the
-executor.
+spec-level walker (ustar headers / ZIP central directory) that yields
+the rows of one archive, framed by :mod:`table_streaming_source_spark._rows`,
+and only parsed fields ever leave the executor.
 
 WebDataset contract implemented: the files of one SAMPLE share a
 basename stem and are stored CONTIGUOUSLY in the tar, so samples are
@@ -24,6 +24,7 @@ CRC or unsupported method raises ``ValueError`` (quarantine path).
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import (
     MAX_INFLATE_BYTES,
     bounded_inflate,
@@ -33,8 +34,6 @@ from table_streaming_source_spark.malformed import (
 import struct
 import zlib
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -118,47 +117,26 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     exists before the caller's own aggregation."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "sample_key", "n_files", "text", "meta_json", "cls",
-                )
-            }
-            for content in pdf["content"]:
-                samples: dict[str, dict] = {}
-                order: list[str] = []
-                for name, data in _tar_entries(bytes(content)):
-                    stem, _, ext = name.rpartition(".")
-                    if stem not in samples:
-                        samples[stem] = {}
-                        order.append(stem)
-                    samples[stem][ext] = data
-                for stem in order:
-                    files = samples[stem]
-                    rows["sample_key"].append(stem)
-                    rows["n_files"].append(len(files))
-                    rows["text"].append(
-                        files.get("txt", b"").decode("utf-8")
-                        if "txt" in files
-                        else None
-                    )
-                    rows["meta_json"].append(
-                        files["json"].decode("utf-8")
-                        if "json" in files
-                        else None
-                    )
-                    rows["cls"].append(
-                        files["cls"].decode("utf-8")
-                        if "cls" in files
-                        else None
-                    )
-            yield pd.DataFrame(rows)
-
-    return raw.select("content").mapInPandas(
-        batches, schema=WEBDATASET_SCHEMA
+    return map_rows(
+        raw.select("content"), _webdataset_samples, WEBDATASET_SCHEMA,
+        cols=("content",), many=True,
     )
+
+
+def _webdataset_samples(content: bytes) -> Iterator[tuple]:
+    samples: dict[str, dict] = {}
+    for name, data in _tar_entries(content):
+        stem, _, ext = name.rpartition(".")
+        samples.setdefault(stem, {})[ext] = data
+    for stem, files in samples.items():
+        yield (
+            stem,
+            len(files),
+            *(
+                files[ext].decode("utf-8") if ext in files else None
+                for ext in ("txt", "json", "cls")
+            ),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -271,19 +249,16 @@ def read_zip_text(spark: SparkSession, path: str) -> DataFrame:
     verified during extraction, decoded as UTF-8."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                "entry_name": [], "n_bytes": [], "text": []
-            }
-            for content in pdf["content"]:
-                for name, data in zip_entries(bytes(content)):
-                    rows["entry_name"].append(name)
-                    rows["n_bytes"].append(len(data))
-                    rows["text"].append(data.decode("utf-8"))
-            yield pd.DataFrame(rows)
-
-    return raw.select("content").mapInPandas(batches, schema=ZIP_SCHEMA)
+    return map_rows(
+        raw.select("content"),
+        lambda content: [
+            (name, len(data), data.decode("utf-8"))
+            for name, data in zip_entries(content)
+        ],
+        ZIP_SCHEMA,
+        cols=("content",),
+        many=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -402,25 +377,24 @@ def read_gzip_text(spark: SparkSession, path: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for apath, blob in zip(pdf["path"], pdf["content"]):
-                for name, content in gzip_members(bytes(blob)):
-                    rows.append(
-                        (
-                            apath.rsplit("/", 1)[-1],
-                            name,
-                            len(content),
-                            content.decode("utf-8", "replace"),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=schema.fieldNames())
-
-    return (
+    raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.gz")
         .load(path)
         .select("path", "content")
-        .mapInPandas(batches, schema=schema)
+    )
+    return map_rows(
+        raw,
+        lambda apath, blob: [
+            (
+                apath.rsplit("/", 1)[-1],
+                name,
+                len(content),
+                content.decode("utf-8", "replace"),
+            )
+            for name, content in gzip_members(blob)
+        ],
+        schema,
+        cols=("path", "content"),
+        many=True,
     )

@@ -4,8 +4,9 @@ specification (the Weka "Attribute-Relation File Format" document):
 declarations, ``%`` comments, then ``@DATA`` CSV rows (``?`` =
 missing, quoted strings honored).  ARFF is the lingua franca of the
 classic ML-dataset repositories (UCI via Weka), so an ingestion lake
-meets it constantly.  Same shape as every text source here:
-row-local parse over Arrow batches; structural errors (unknown
+meets it constantly.  Same shape as every text source here: one
+document yields its cells (:mod:`table_streaming_source_spark._rows`
+frames them); structural errors (unknown
 attribute type, arity mismatch, nominal value outside its domain)
 raise ValueError — the shared quarantine contract."""
 
@@ -13,7 +14,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 ARFF_CELLS_SCHEMA = StructType(
     [
@@ -138,42 +140,21 @@ def arff_cells(
     df: DataFrame, *, text_col: str = "arff", key: str = "key"
 ) -> DataFrame:
     """Explode ARFF documents into long-form typed cells."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                f.name: [] for f in ARFF_CELLS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                relation, attrs, data = parse_arff(str(text))
-                for ri, row in enumerate(data):
-                    for (name, typ, _dom), cell in zip(attrs, row):
-                        rows["key"].append(int(k))
-                        rows["relation"].append(relation)
-                        rows["row_idx"].append(ri)
-                        rows["attr"].append(name)
-                        rows["attr_type"].append(typ)
-                        rows["value"].append(
-                            None if cell is None else str(cell)
-                        )
-                        rows["value_num"].append(
-                            cell if isinstance(cell, float) else None
-                        )
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "relation": pd.Series(
-                        rows["relation"], dtype="object"
-                    ),
-                    "row_idx": pd.Series(rows["row_idx"], dtype="int32"),
-                    "attr": pd.Series(rows["attr"], dtype="object"),
-                    "attr_type": pd.Series(
-                        rows["attr_type"], dtype="object"
-                    ),
-                    "value": pd.Series(rows["value"], dtype="object"),
-                    "value_num": pd.Series(
-                        rows["value_num"], dtype="float64"
-                    ),
-                }
-            )
+    return map_rows(
+        df, _arff_cells, ARFF_CELLS_SCHEMA, cols=(text_col,), key=key,
+        many=True,
+    )
 
-    return df.mapInPandas(batches, schema=ARFF_CELLS_SCHEMA)
+
+def _arff_cells(text) -> Iterator[tuple]:
+    relation, attrs, data = parse_arff(str(text))
+    for ri, row in enumerate(data):
+        for (name, typ, _dom), cell in zip(attrs, row):
+            yield (
+                relation,
+                ri,
+                name,
+                typ,
+                None if cell is None else str(cell),
+                cell if isinstance(cell, float) else None,
+            )

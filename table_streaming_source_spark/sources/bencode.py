@@ -7,16 +7,14 @@ metainfo is how the large public web-scale corpora (academic crawls,
 dataset mirrors) are actually distributed; an ingest pipeline parses
 millions of these to inventory shards before fetching a byte.
 
-Row-local over Arrow batches; malformed input (unsorted or non-string
+One row per document (:mod:`table_streaming_source_spark._rows`);
+malformed input (unsorted or non-string
 dict keys, leading zeros, truncation, length prefix past the buffer,
 trailing garbage, >64-deep nesting) raises ValueError for the
 quarantine path (`tests/test_source_fuzz.py` contract)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -24,6 +22,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 _MAX_DEPTH = 64
 
@@ -169,35 +169,6 @@ def parse_bencode(data: bytes) -> dict:
 def bencode_rows(
     df: DataFrame, *, data_col: str = "payload", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                f.name: [] for f in BENCODE_ROWS_SCHEMA.fields
-            }
-            for k, data in zip(pdf[key], pdf[data_col]):
-                m = parse_bencode(bytes(data))
-                rows["key"].append(int(k))
-                for nm in (
-                    "n_keys", "n_ints", "sum_ints", "n_strs",
-                    "str_bytes", "max_depth",
-                ):
-                    rows[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_keys": pd.Series(rows["n_keys"], dtype="int32"),
-                    "n_ints": pd.Series(rows["n_ints"], dtype="int32"),
-                    "sum_ints": pd.Series(
-                        rows["sum_ints"], dtype="int64"
-                    ),
-                    "n_strs": pd.Series(rows["n_strs"], dtype="int32"),
-                    "str_bytes": pd.Series(
-                        rows["str_bytes"], dtype="int64"
-                    ),
-                    "max_depth": pd.Series(
-                        rows["max_depth"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=BENCODE_ROWS_SCHEMA)
+    return map_rows(
+        df, parse_bencode, BENCODE_ROWS_SCHEMA, cols=(data_col,), key=key
+    )

@@ -16,12 +16,11 @@ emits in a ``.bson`` file.
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import struct
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -131,61 +130,6 @@ def write_bson(path: str, docs: list[dict]) -> None:
             fh.write(encode_document(d))
 
 
-def read_bson_docs(spark: SparkSession, path: str) -> DataFrame:
-    """All documents of every ``*.bson`` under ``path`` as
-    ``(doc_id, text_md5, n_chars, lang, n_tags)`` — the dump-restore
-    projection for the fixture corpus (one file per task)."""
-    import hashlib
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("text_md5", StringType(), False),
-            StructField("n_chars", LongType(), False),
-            StructField("lang", StringType(), False),
-            StructField("n_tags", LongType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for blob in pdf["content"]:
-                buf = bytes(blob)
-                pos = 0
-                while pos < len(buf):
-                    doc, pos = decode_document(buf, pos)
-                    rows.append(
-                        (
-                            doc["doc_id"],
-                            hashlib.md5(
-                                doc["body"]["text"].encode("utf-8")
-                            ).hexdigest(),
-                            doc["body"]["n_chars"],
-                            doc["meta"]["lang"],
-                            len(doc["tags"]),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=schema.fieldNames())
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bson")
-        .load(path)
-        .select("content")
-        .mapInPandas(batches, schema=schema)
-    )
-
-
-_BINARYFILE_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("modificationTime", TimestampType(), False),
-        StructField("length", LongType(), False),
-        StructField("content", BinaryType(), True),
-    ]
-)
-
 _DOC_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -197,6 +141,46 @@ _DOC_SCHEMA = StructType(
 )
 
 
+def _doc_rows(buf: bytes) -> Iterator[tuple]:
+    """The fixture corpus's document projection, one row per document
+    of one ``.bson`` dump."""
+    import hashlib
+
+    pos = 0
+    while pos < len(buf):
+        doc, pos = decode_document(buf, pos)
+        yield (
+            doc["doc_id"],
+            hashlib.md5(doc["body"]["text"].encode("utf-8")).hexdigest(),
+            doc["body"]["n_chars"],
+            doc["meta"]["lang"],
+            len(doc["tags"]),
+        )
+
+
+def read_bson_docs(spark: SparkSession, path: str) -> DataFrame:
+    """All documents of every ``*.bson`` under ``path`` as
+    ``(doc_id, text_md5, n_chars, lang, n_tags)`` — the dump-restore
+    projection for the fixture corpus (one file per task)."""
+    raw = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bson")
+        .load(path)
+        .select("content")
+    )
+    return map_rows(raw, _doc_rows, _DOC_SCHEMA, cols=("content",), many=True)
+
+
+_BINARYFILE_SCHEMA = StructType(
+    [
+        StructField("path", StringType(), False),
+        StructField("modificationTime", TimestampType(), False),
+        StructField("length", LongType(), False),
+        StructField("content", BinaryType(), True),
+    ]
+)
+
+
 def stream_bson_docs(
     spark: SparkSession, path: str, **reader_options
 ) -> DataFrame:
@@ -204,34 +188,10 @@ def stream_bson_docs(
     each micro-batch decodes only newly arrived files with the SAME
     stateless codec as :func:`read_bson_docs` — the batch/stream twin
     is free because the parser holds no cross-file state."""
-    import hashlib
-
     reader = spark.readStream.format("binaryFile").option(
         "pathGlobFilter", "*.bson"
     )
     for k, v in reader_options.items():
         reader = reader.option(k, str(v))
-    raw = reader.schema(_BINARYFILE_SCHEMA).load(path)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for blob in pdf["content"]:
-                buf = bytes(blob)
-                pos = 0
-                while pos < len(buf):
-                    doc, pos = decode_document(buf, pos)
-                    rows.append(
-                        (
-                            doc["doc_id"],
-                            hashlib.md5(
-                                doc["body"]["text"].encode("utf-8")
-                            ).hexdigest(),
-                            doc["body"]["n_chars"],
-                            doc["meta"]["lang"],
-                            len(doc["tags"]),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=_DOC_SCHEMA.fieldNames())
-
-    return raw.select("content").mapInPandas(batches, schema=_DOC_SCHEMA)
+    raw = reader.schema(_BINARYFILE_SCHEMA).load(path).select("content")
+    return map_rows(raw, _doc_rows, _DOC_SCHEMA, cols=("content",), many=True)

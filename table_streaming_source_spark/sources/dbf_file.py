@@ -13,12 +13,10 @@ L fields map T/t/Y/y → true.
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -125,21 +123,19 @@ def read_dbf_docs(spark: SparkSession, path: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for blob in pdf["content"]:
-                _, rows = dbf_records(bytes(blob))
-                for r in rows:
-                    out.append(
-                        (r["ID"], r["LANG"], r["NCHARS"], r["FLAG"])
-                    )
-            yield pd.DataFrame(out, columns=schema.fieldNames())
-
-    return (
+    raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.dbf")
         .load(path)
         .select("content")
-        .mapInPandas(batches, schema=schema)
+    )
+    return map_rows(
+        raw,
+        lambda blob: [
+            (r["ID"], r["LANG"], r["NCHARS"], r["FLAG"])
+            for r in dbf_records(blob)[1]
+        ],
+        schema,
+        cols=("content",),
+        many=True,
     )

@@ -2,15 +2,13 @@
 container (``>id description`` header lines, sequence data wrapped
 across following lines until the next header): per-record id, length,
 GC count, and per-file rollups.  Bioinformatics corpora are a staple
-large-scale ingest workload; the parse is row-local over Arrow
-batches, and malformed input (data before any header, empty record,
+large-scale ingest workload; one row per file
+(:mod:`table_streaming_source_spark._rows`), and malformed input (data
+before any header, empty record,
 non-IUPAC characters) raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -18,6 +16,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 FASTA_ROWS_SCHEMA = StructType(
     [
@@ -98,26 +98,10 @@ def parse_fasta(text: str | bytes) -> dict:
 def fasta_rows(
     df: DataFrame, *, text_col: str = "fasta", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in FASTA_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_fasta(str(text))
-                out["key"].append(int(k))
-                for name in ("n_seqs", "total_len", "gc_count", "longest"):
-                    out[name].append(m[name])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_seqs": pd.Series(out["n_seqs"], dtype="int32"),
-                    "total_len": pd.Series(
-                        out["total_len"], dtype="int64"
-                    ),
-                    "gc_count": pd.Series(out["gc_count"], dtype="int64"),
-                    "longest": pd.Series(out["longest"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=FASTA_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_fasta(str(t)),
+        FASTA_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

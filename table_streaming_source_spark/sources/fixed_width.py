@@ -177,8 +177,8 @@ class FixedWidthWriter(DataSourceArrowWriter):
     reports it; only the driver-side ``commit`` renames staged files
     to their visible ``.tsr`` names — a crashed job's staging residue
     is invisible to the directory reader (which lists ``.tsr`` only)
-    and ``abort`` sweeps it.  An ``DataSourceArrowWriter`` since round
-    16: tasks receive Arrow record batches, not per-row pickled Rows."""
+    and ``abort`` sweeps it.  A ``DataSourceArrowWriter``: tasks
+    receive Arrow record batches, not per-row pickled Rows."""
 
     def __init__(self, options: dict):
         self.dir = options.get("path")

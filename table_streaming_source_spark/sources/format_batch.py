@@ -212,7 +212,7 @@ def _range_prunes(f: dict, col: str, lo, hi) -> bool:
 class TableFormatReader(DataSourceReader):
     """One input partition per manifest data file; executor-side MOR
     resolution through the same pandas algebra as the streaming CDF
-    source (``format_cdf._resolve_pandas``).  ERA-AWARE (round 14):
+    source (``format_cdf._resolve_pandas``).  ERA-AWARE:
     manifest entries carry the rename/widen chain their era must pass
     through — pruning runs on TRANSLATED stats (a predicate on the
     current name keeps skipping pre-rename files), and each partition

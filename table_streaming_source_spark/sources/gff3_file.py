@@ -3,15 +3,12 @@ Format v3 (the genome-annotation standard beside VCF/FASTA:
 ``##gff-version 3`` pragma, 9 tab-separated columns with '.' nulls,
 1-based inclusive coordinates, and the ``key=value;...`` attributes
 column with ID/Parent hierarchy).  Completes the genomics source trio
-(`vcf_file.py`, `fasta_file.py`).  Row-local over Arrow batches;
-malformed input (missing pragma, wrong arity, end < start, bad
+(`vcf_file.py`, `fasta_file.py`).  One row per file
+(:mod:`table_streaming_source_spark._rows`); malformed input (missing pragma, wrong arity, end < start, bad
 strand) raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -19,6 +16,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 GFF3_ROWS_SCHEMA = StructType(
     [
@@ -122,34 +121,10 @@ def parse_gff3(text: str | bytes) -> dict:
 def gff3_rows(
     df: DataFrame, *, text_col: str = "gff3", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in GFF3_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_gff3(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_features", "n_genes", "n_children", "span_sum",
-                    "n_plus_strand",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_features": pd.Series(
-                        out["n_features"], dtype="int32"
-                    ),
-                    "n_genes": pd.Series(out["n_genes"], dtype="int32"),
-                    "n_children": pd.Series(
-                        out["n_children"], dtype="int32"
-                    ),
-                    "span_sum": pd.Series(out["span_sum"], dtype="int64"),
-                    "n_plus_strand": pd.Series(
-                        out["n_plus_strand"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=GFF3_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_gff3(str(t)),
+        GFF3_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -3,14 +3,12 @@ Hexadecimal Object File format (the classic firmware/EPROM image
 container): ``:LLAAAATT<data>CC`` records with byte count, 16-bit
 address, record type (00 data, 01 EOF, 04 extended linear address)
 and the two's-complement CHECKSUM verified on every record.
-Firmware blobs are a real binary-analysis corpus; row-local parse
-over Arrow batches, malformed records raise ValueError (quarantine)."""
+Firmware blobs are a real binary-analysis corpus; one row per image
+(:mod:`table_streaming_source_spark._rows`), malformed records raise
+ValueError (quarantine)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -19,6 +17,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 HEX_ROWS_SCHEMA = StructType(
     [
@@ -124,41 +124,10 @@ def parse_intel_hex(text: str) -> dict:
 def intel_hex_rows(
     df: DataFrame, *, text_col: str = "hex", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                f.name: [] for f in HEX_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_intel_hex(str(text))
-                rows["key"].append(int(k))
-                for name in (
-                    "n_data_records", "total_bytes", "byte_sum",
-                    "addr_min", "addr_max", "upper_segments",
-                ):
-                    rows[name].append(m[name])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "n_data_records": pd.Series(
-                        rows["n_data_records"], dtype="int32"
-                    ),
-                    "total_bytes": pd.Series(
-                        rows["total_bytes"], dtype="int64"
-                    ),
-                    "byte_sum": pd.Series(
-                        rows["byte_sum"], dtype="int64"
-                    ),
-                    "addr_min": pd.Series(
-                        rows["addr_min"], dtype="int64"
-                    ),
-                    "addr_max": pd.Series(
-                        rows["addr_max"], dtype="int64"
-                    ),
-                    "upper_segments": pd.Series(
-                        rows["upper_segments"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=HEX_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_intel_hex(str(t)),
+        HEX_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -1,19 +1,16 @@
 """INI / config-file ingestion: parse ``.ini`` dialect text (sections,
 ``key = value`` pairs, ``;``/``#`` comments, case-insensitive keys)
 into relational rows with Python's stdlib ``configparser`` — the
-battle-tested reference parser for the format — over Arrow-batched
-``mapInPandas``.  The 100 TB shape matches every other text source
-here: parsing is row-local (one config blob → its rows), nothing
+battle-tested reference parser for the format.  The 100 TB shape
+matches every other text source here: one config blob yields its rows
+(:mod:`table_streaming_source_spark._rows` frames them), nothing
 shuffles until the caller aggregates, and malformed blobs raise
 :class:`ValueError` (the shared quarantine contract,
-``malformed.py``) rather than poisoning the batch.
+``malformed.py``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -22,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 INI_ROWS_SCHEMA = StructType(
     [
@@ -73,28 +72,14 @@ def ini_rows(
     """Explode a column of INI documents into typed rows; integer
     values additionally surface as ``value_int`` (NULL when the value
     is not a plain integer — the TRY_CAST convention)."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "key", "section", "prop", "value", "value_int",
-            )}
-            for k, text in zip(pdf[key], pdf[text_col]):
-                for section, prop, value in parse_ini(str(text)):
-                    rows["key"].append(int(k))
-                    rows["section"].append(section)
-                    rows["prop"].append(prop)
-                    rows["value"].append(value)
-                    rows["value_int"].append(_try_int32(value))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "section": pd.Series(rows["section"], dtype="object"),
-                    "prop": pd.Series(rows["prop"], dtype="object"),
-                    "value": pd.Series(rows["value"], dtype="object"),
-                    "value_int": pd.Series(
-                        rows["value_int"], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=INI_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: [
+            (section, prop, value, _try_int32(value))
+            for section, prop, value in parse_ini(str(t))
+        ],
+        INI_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+        many=True,
+    )

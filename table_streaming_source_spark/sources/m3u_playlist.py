@@ -2,15 +2,12 @@
 the de-facto public format (``#EXTM3U`` header, ``#EXTINF:<seconds>,
 <title>`` metadata lines each binding to the NEXT non-comment line's
 media path): playlists are the manifest format of audio/video corpora
-and HLS-adjacent pipelines.  Row-local over Arrow batches; malformed
-input (missing header, EXTINF without a following path, non-numeric
+and HLS-adjacent pipelines.  One row per playlist
+(:mod:`table_streaming_source_spark._rows`); malformed input (missing header, EXTINF without a following path, non-numeric
 duration) raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -18,6 +15,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 M3U_ROWS_SCHEMA = StructType(
     [
@@ -98,33 +97,10 @@ def parse_m3u(text: str | bytes) -> dict:
 def m3u_rows(
     df: DataFrame, *, text_col: str = "m3u", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in M3U_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_m3u(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_tracks", "total_duration", "max_duration",
-                    "n_ext",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_tracks": pd.Series(
-                        out["n_tracks"], dtype="int32"
-                    ),
-                    "total_duration": pd.Series(
-                        out["total_duration"], dtype="int64"
-                    ),
-                    "max_duration": pd.Series(
-                        out["max_duration"], dtype="int32"
-                    ),
-                    "n_ext": pd.Series(out["n_ext"], dtype="int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=M3U_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_m3u(str(t)),
+        M3U_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

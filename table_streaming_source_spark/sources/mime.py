@@ -7,8 +7,9 @@ module implements the read path directly from the public specs —
 RFC 4155 (mbox), RFC 5322 (headers), RFC 2045/2046 (MIME multipart +
 transfer encodings), RFC 2047 (encoded-words) — with the repo's
 container discipline: one mbox shard = one Spark task via
-``binaryFile``, a pure-Python parser inside an Arrow-batched
-``mapInPandas``, and only extracted fields ever leave the executor.
+``binaryFile``, a pure-Python parser that yields the rows of one file,
+framed by :mod:`table_streaming_source_spark._rows`, and only
+extracted fields ever leave the executor.
 
 Implemented surface:
 
@@ -36,14 +37,13 @@ printable HTML part, B-encoded Subject).
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import base64
 import binascii
 import re
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -324,27 +324,22 @@ def read_mbox(spark: SparkSession, path: str) -> DataFrame:
     text/plain leaves; one mbox shard = one task."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: [] for k in ("from_addr", "subject", "n_parts", "text")
-            }
-            for content in pdf["content"]:
-                for msg in mbox_messages(bytes(content)):
-                    parsed = parse_message(msg)
-                    plains = [
-                        t for ct, t in parsed["parts"]
-                        if ct == "text/plain"
-                    ]
-                    rows["from_addr"].append(parsed["from_addr"])
-                    rows["subject"].append(parsed["subject"])
-                    rows["n_parts"].append(len(parsed["parts"]))
-                    rows["text"].append(
-                        "".join(plains) if plains else None
-                    )
-            yield pd.DataFrame(rows)
+    return map_rows(
+        raw.select("content"), _mbox_rows, MBOX_SCHEMA, cols=("content",),
+        many=True,
+    )
 
-    return raw.select("content").mapInPandas(batches, schema=MBOX_SCHEMA)
+
+def _mbox_rows(content: bytes) -> Iterator[tuple]:
+    for msg in mbox_messages(content):
+        parsed = parse_message(msg)
+        plains = [t for ct, t in parsed["parts"] if ct == "text/plain"]
+        yield (
+            parsed["from_addr"],
+            parsed["subject"],
+            len(parsed["parts"]),
+            "".join(plains) if plains else None,
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -429,8 +424,6 @@ def parse_ics(payload: bytes) -> list[dict]:
 def read_ics_events(spark: "SparkSession", path: str) -> "DataFrame":
     """All VEVENTs under ``path`` as (cal_key, uid, dtstart, minutes,
     summary_len, description_len) — one calendar file per task."""
-    import re
-
     schema = StructType(
         [
             StructField("cal_key", LongType(), False),
@@ -442,30 +435,23 @@ def read_ics_events(spark: "SparkSession", path: str) -> "DataFrame":
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for apath, blob in zip(pdf["path"], pdf["content"]):
-                m = re.search(r"cal-(\d+)\.ics$", apath)
-                key = int(m.group(1))
-                for ev in parse_ics(bytes(blob)):
-                    dur = re.fullmatch(r"PT(\d+)M", ev["DURATION"])
-                    rows.append(
-                        (
-                            key,
-                            ev["UID"],
-                            ev["DTSTART"],
-                            int(dur.group(1)),
-                            len(ev["SUMMARY"]),
-                            len(ev["DESCRIPTION"]),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=schema.fieldNames())
+    def events(apath: str, blob: bytes) -> Iterator[tuple]:
+        key = int(re.search(r"cal-(\d+)\.ics$", apath).group(1))
+        for ev in parse_ics(blob):
+            dur = re.fullmatch(r"PT(\d+)M", ev["DURATION"])
+            yield (
+                key,
+                ev["UID"],
+                ev["DTSTART"],
+                int(dur.group(1)),
+                len(ev["SUMMARY"]),
+                len(ev["DESCRIPTION"]),
+            )
 
-    return (
+    raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.ics")
         .load(path)
         .select("path", "content")
-        .mapInPandas(batches, schema=schema)
     )
+    return map_rows(raw, events, schema, cols=("path", "content"), many=True)

@@ -4,15 +4,12 @@
 3D meshes are a first-class multimodal-corpus payload (asset
 pipelines, text-to-3D training sets), and the container stats —
 vertex/face counts, triangle-fan triangulation count, bounding box —
-are the dedup/quality signals such pipelines key on.  Row-local over
-Arrow batches; malformed input (short vertex, index out of range,
+are the dedup/quality signals such pipelines key on.  One row per mesh
+(:mod:`table_streaming_source_spark._rows`); malformed input (short vertex, index out of range,
 face arity < 3) raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -21,6 +18,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 OBJ_ROWS_SCHEMA = StructType(
     [
@@ -125,33 +124,10 @@ def parse_obj(text: str | bytes) -> dict:
 def obj_rows(
     df: DataFrame, *, text_col: str = "obj", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in OBJ_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_obj(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_vertices", "n_faces", "n_triangles",
-                    "bbox_volume",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_vertices": pd.Series(
-                        out["n_vertices"], dtype="int32"
-                    ),
-                    "n_faces": pd.Series(out["n_faces"], dtype="int32"),
-                    "n_triangles": pd.Series(
-                        out["n_triangles"], dtype="int32"
-                    ),
-                    "bbox_volume": pd.Series(
-                        out["bbox_volume"], dtype="float64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=OBJ_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_obj(str(t)),
+        OBJ_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -4,16 +4,14 @@ global header (magic 0xA1B2C3D4 — byte order is DETECTED from it —
 version 2.4, snaplen, linktype) and per-packet 16-byte record headers
 (ts_sec, ts_usec, incl_len, orig_len) framing the capture bytes.
 Network captures are a staple large-scale ingest/forensics workload;
-row-local parse over Arrow batches, malformed records (bad magic,
+one row per capture (:mod:`table_streaming_source_spark._rows`),
+malformed records (bad magic,
 truncated record, incl_len > snaplen, ts_usec overflow) raise
 ValueError for the quarantine path."""
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -21,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 PCAP_ROWS_SCHEMA = StructType(
     [
@@ -117,36 +117,6 @@ def parse_pcap(payload: bytes) -> dict:
 def pcap_rows(
     df: DataFrame, *, payload_col: str = "pcap", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in PCAP_ROWS_SCHEMA.fields
-            }
-            for k, payload in zip(pdf[key], pdf[payload_col]):
-                m = parse_pcap(bytes(payload))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_packets", "total_bytes", "byte_sum",
-                    "first_ts_sec", "span_usec",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_packets": pd.Series(
-                        out["n_packets"], dtype="int32"
-                    ),
-                    "total_bytes": pd.Series(
-                        out["total_bytes"], dtype="int64"
-                    ),
-                    "byte_sum": pd.Series(out["byte_sum"], dtype="int64"),
-                    "first_ts_sec": pd.Series(
-                        out["first_ts_sec"], dtype="int64"
-                    ),
-                    "span_usec": pd.Series(
-                        out["span_usec"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=PCAP_ROWS_SCHEMA)
+    return map_rows(
+        df, parse_pcap, PCAP_ROWS_SCHEMA, cols=(payload_col,), key=key
+    )

@@ -6,9 +6,9 @@ pipelines spend real compute tearing text out of it.  This module
 implements the durable core of ISO 32000 (the public PDF spec)
 directly — no PDF library — with the repo's container discipline
 (`sources/archive.py`): one PDF file = one Spark task via the built-in
-``binaryFile`` source, a pure-Python object/stream parser inside an
-Arrow-batched ``mapInPandas``, and only extracted text leaves the
-executor.
+``binaryFile`` source, a pure-Python object/stream parser that yields
+one row per page, framed by :mod:`table_streaming_source_spark._rows`,
+and only extracted text leaves the executor.
 
 Implemented surface:
 
@@ -39,13 +39,11 @@ Malformed input (bad header, broken xref, bad stream) raises
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import re
 import zlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -494,16 +492,13 @@ def read_pdf_pages(spark: SparkSession, path: str) -> DataFrame:
     one PDF = one task, extraction entirely in-executor."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {"file": [], "page_no": [], "text": []}
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                for i, text in enumerate(pdf_page_texts(bytes(content))):
-                    rows["file"].append(fname.rsplit("/", 1)[-1])
-                    rows["page_no"].append(i)
-                    rows["text"].append(text)
-            yield pd.DataFrame(rows)
-
-    return raw.select("path", "content").mapInPandas(
-        batches, schema=PDF_SCHEMA
+    return map_rows(
+        raw.select("path", "content"),
+        lambda fname, content: [
+            (fname.rsplit("/", 1)[-1], i, text)
+            for i, text in enumerate(pdf_page_texts(content))
+        ],
+        PDF_SCHEMA,
+        cols=("path", "content"),
+        many=True,
     )

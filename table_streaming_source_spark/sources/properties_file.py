@@ -5,14 +5,12 @@ whitespace of the continuation is dropped), ``#``/``!`` start
 comments, the key ends at the first unescaped ``=``, ``:`` or
 whitespace separator, and ``\\uXXXX`` / ``\\t`` / ``\\n`` / ``\\\\``
 escapes decode in both keys and values.  The 100 TB shape matches the
-INI source: parsing is row-local over Arrow batches, malformed input
-raises ValueError (the shared quarantine contract)."""
+INI source: one document yields its rows
+(:mod:`table_streaming_source_spark._rows`), malformed input raises
+ValueError (the shared quarantine contract)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -21,6 +19,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark.sources.ini_config import _try_int32
 
 PROPERTIES_ROWS_SCHEMA = StructType(
     [
@@ -111,42 +112,20 @@ def parse_properties(text: str) -> list[tuple[str, str]]:
     return list(out.items())
 
 
-def _try_int32(value: str) -> int | None:
-    if "_" in value:
-        return None
-    try:
-        n = int(value)
-    except ValueError:
-        return None
-    return n if -(2**31) <= n < 2**31 else None
-
-
 def properties_rows(
     df: DataFrame, *, text_col: str = "props", key: str = "key"
 ) -> DataFrame:
     """Explode a column of .properties documents into typed rows;
     plain in-range integers surface in ``value_int`` (TRY_CAST
     convention: NULL, never a task failure)."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                "key": [], "prop": [], "value": [], "value_int": [],
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                for prop, value in parse_properties(str(text)):
-                    rows["key"].append(int(k))
-                    rows["prop"].append(prop)
-                    rows["value"].append(value)
-                    rows["value_int"].append(_try_int32(value))
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "prop": pd.Series(rows["prop"], dtype="object"),
-                    "value": pd.Series(rows["value"], dtype="object"),
-                    "value_int": pd.Series(
-                        rows["value_int"], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=PROPERTIES_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: [
+            (prop, value, _try_int32(value))
+            for prop, value in parse_properties(str(t))
+        ],
+        PROPERTIES_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+        many=True,
+    )

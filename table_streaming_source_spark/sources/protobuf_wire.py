@@ -28,11 +28,10 @@ input (truncated varint, short payload, unknown wire type) raises
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -241,40 +240,41 @@ ORDERS_PB_SCHEMA = StructType(
 )
 
 
+def _order_rows(content: bytes) -> Iterator[tuple]:
+    """``ORDERS_PB_SCHEMA`` rows of one length-delimited dump."""
+    for msg in read_delimited(content):
+        rec = decode_message(msg, ORDERS_FIELDS)
+        meta_raw = next(
+            (
+                raw_v
+                for num, wt, raw_v in decode_fields(msg)
+                if num == 7 and wt == 2
+            ),
+            b"",
+        )
+        meta = decode_message(meta_raw, META_FIELDS)
+        yield (
+            rec["o_orderkey"],
+            rec["o_custkey"],
+            rec["price_cents"],
+            rec["o_orderstatus"],
+            rec["o_orderdate"],
+            rec["o_orderpriority"],
+            meta["bucket"],
+            meta["tag"],
+            sum(rec["packed"]),
+        )
+
+
 def read_orders_protobuf(spark: SparkSession, path: str) -> DataFrame:
     """Length-delimited protobuf order dumps under ``path`` → typed
     DataFrame; one dump file = one task, decode entirely in-executor
     with library-free wire parsing."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ORDERS_PB_SCHEMA.fields]
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for content in pdf["content"]:
-                for msg in read_delimited(bytes(content)):
-                    rec = decode_message(msg, ORDERS_FIELDS)
-                    meta_raw = next(
-                        (
-                            raw_v
-                            for num, wt, raw_v in decode_fields(msg)
-                            if num == 7 and wt == 2
-                        ),
-                        b"",
-                    )
-                    meta = decode_message(meta_raw, META_FIELDS)
-                    for c in (
-                        "o_orderkey", "o_custkey", "price_cents",
-                        "o_orderstatus", "o_orderdate", "o_orderpriority",
-                    ):
-                        rows[c].append(rec[c])
-                    rows["bucket"].append(meta["bucket"])
-                    rows["tag"].append(meta["tag"])
-                    rows["packed_sum"].append(sum(rec["packed"]))
-            yield pd.DataFrame(rows)
-
-    return raw.select("content").mapInPandas(
-        batches, schema=ORDERS_PB_SCHEMA
+    return map_rows(
+        raw.select("content"), _order_rows, ORDERS_PB_SCHEMA,
+        cols=("content",), many=True,
     )
 
 
@@ -301,32 +301,7 @@ def stream_orders_protobuf(
         reader = reader.option(k, str(v))
     raw = reader.schema(_BINARYFILE_SCHEMA).load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ORDERS_PB_SCHEMA.fields]
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for content in pdf["content"]:
-                for msg in read_delimited(bytes(content)):
-                    rec = decode_message(msg, ORDERS_FIELDS)
-                    meta_raw = next(
-                        (
-                            raw_v
-                            for num, wt, raw_v in decode_fields(msg)
-                            if num == 7 and wt == 2
-                        ),
-                        b"",
-                    )
-                    meta = decode_message(meta_raw, META_FIELDS)
-                    for c in (
-                        "o_orderkey", "o_custkey", "price_cents",
-                        "o_orderstatus", "o_orderdate", "o_orderpriority",
-                    ):
-                        rows[c].append(rec[c])
-                    rows["bucket"].append(meta["bucket"])
-                    rows["tag"].append(meta["tag"])
-                    rows["packed_sum"].append(sum(rec["packed"]))
-            yield pd.DataFrame(rows)
-
-    return raw.select("content").mapInPandas(
-        batches, schema=ORDERS_PB_SCHEMA
+    return map_rows(
+        raw.select("content"), _order_rows, ORDERS_PB_SCHEMA,
+        cols=("content",), many=True,
     )

@@ -4,15 +4,13 @@ consecutive-UA sharing, ``Allow``/``Disallow`` path rules,
 ``Crawl-delay``, comments and blank-line group separation.  THE
 gatekeeper file of every web-corpus crawl — a pipeline that ingests
 the web at 100 TB parses billions of these to attribute crawl
-permissions.  Row-local over Arrow batches; malformed input
+permissions.  One row per file
+(:mod:`table_streaming_source_spark._rows`); malformed input
 (rule before any group, unknown-but-required fields malformed,
 non-numeric crawl-delay) raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -20,6 +18,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 ROBOTS_ROWS_SCHEMA = StructType(
     [
@@ -110,33 +110,10 @@ def parse_robots(text: str | bytes) -> dict:
 def robots_rows(
     df: DataFrame, *, text_col: str = "robots", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in ROBOTS_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_robots(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_groups", "n_disallow", "n_allow",
-                    "crawl_delay_sum",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_groups": pd.Series(
-                        out["n_groups"], dtype="int32"
-                    ),
-                    "n_disallow": pd.Series(
-                        out["n_disallow"], dtype="int32"
-                    ),
-                    "n_allow": pd.Series(out["n_allow"], dtype="int32"),
-                    "crawl_delay_sum": pd.Series(
-                        out["crawl_delay_sum"], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=ROBOTS_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_robots(str(t)),
+        ROBOTS_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -3,16 +3,14 @@ specification, https://www.rssboard.org/rss-specification): channel
 metadata + one row per ``<item>`` with title / link / guid / pubDate
 (RFC-822 date-time, parsed with ``email.utils.parsedate_to_datetime``
 — the reference parser for that grammar).  Feed archives are a
-classic crawl corpus; the shape matches every text source here:
-row-local parse over Arrow batches, malformed XML or dates raise
+classic crawl corpus; the shape matches every text source here: one
+feed yields its item rows (:mod:`table_streaming_source_spark._rows`),
+malformed XML or dates raise
 ValueError (shared quarantine contract), nothing shuffles until the
 caller aggregates."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -21,6 +19,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 RSS_ITEMS_SCHEMA = StructType(
     [
@@ -78,37 +78,11 @@ def parse_rss(text: str) -> list[dict]:
 def rss_items(
     df: DataFrame, *, text_col: str = "rss", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                f.name: [] for f in RSS_ITEMS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                for item in parse_rss(str(text)):
-                    rows["key"].append(int(k))
-                    for name in (
-                        "channel", "item_title", "link", "guid",
-                        "pub_epoch", "n_categories",
-                    ):
-                        rows[name].append(item[name])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(rows["key"], dtype="int64"),
-                    "channel": pd.Series(
-                        rows["channel"], dtype="object"
-                    ),
-                    "item_title": pd.Series(
-                        rows["item_title"], dtype="object"
-                    ),
-                    "link": pd.Series(rows["link"], dtype="object"),
-                    "guid": pd.Series(rows["guid"], dtype="object"),
-                    "pub_epoch": pd.Series(
-                        rows["pub_epoch"], dtype="Int64"
-                    ),
-                    "n_categories": pd.Series(
-                        rows["n_categories"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RSS_ITEMS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_rss(str(t)),
+        RSS_ITEMS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+        many=True,
+    )

@@ -8,9 +8,9 @@ This module reads the file format directly from its public spec
 READ path — so a directory of ``.db`` / ``.sqlite`` shards becomes a
 DataFrame with the repo's container discipline (`sources/archive.py`,
 `sources/warc.py`): one database file = one Spark task via the
-built-in ``binaryFile`` source, a pure-Python page walker inside an
-Arrow-batched ``mapInPandas``, and only decoded fields ever leave the
-executor.
+built-in ``binaryFile`` source, a pure-Python page walker that yields
+the rows of one file, framed by :mod:`table_streaming_source_spark._rows`,
+and only decoded fields ever leave the executor.
 
 Implemented surface (the durable core of the format):
 
@@ -39,12 +39,11 @@ the §2B "sources" surface that the Spark rebuild must provide itself.
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import struct
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -234,34 +233,21 @@ DOCUMENTS_SCHEMA = StructType(
     ]
 )
 
-_DOC_COLS = ("doc_id", "lang", "source", "text", "n_chars", "quality")
-
-
 def read_sqlite_documents(spark: SparkSession, path: str) -> DataFrame:
     """Read every ``documents(doc_id INTEGER PRIMARY KEY, lang, source,
     text, n_chars, quality REAL)`` table under ``path`` (one file = one
     task)."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {k: [] for k in _DOC_COLS}
-            for content in pdf["content"]:
-                for rec in sqlite_rows(
-                    bytes(content), "documents", rowid_alias_col=0
-                ):
-                    cols["doc_id"].append(rec[0])
-                    cols["lang"].append(rec[1])
-                    cols["source"].append(rec[2])
-                    cols["text"].append(rec[3])
-                    cols["n_chars"].append(rec[4])
-                    # REAL affinity: sqlite stores integral reals as
-                    # ints on disk; convert back like the engine does
-                    cols["quality"].append(
-                        None if rec[5] is None else float(rec[5])
-                    )
-            yield pd.DataFrame(cols)
-
-    return raw.select("content").mapInPandas(
-        batches, schema=DOCUMENTS_SCHEMA
+    return map_rows(
+        raw.select("content"),
+        lambda content: [
+            # REAL affinity: sqlite stores integral reals as ints on
+            # disk; convert back like the engine does
+            (*rec[:5], None if rec[5] is None else float(rec[5]))
+            for rec in sqlite_rows(content, "documents", rowid_alias_col=0)
+        ],
+        DOCUMENTS_SCHEMA,
+        cols=("content",),
+        many=True,
     )

@@ -5,14 +5,12 @@ lines with S0 header, S1/S2/S3 data records (16/24/32-bit addresses),
 an optional S5 record-count record, and S7/S8/S9 terminators.  The
 checksum is the ONES' COMPLEMENT of the LSB of the sum over count +
 address + data bytes — verified on every record; an S5 count that
-disagrees with the number of data records raises.  Row-local parse
-over Arrow batches; malformed records raise ValueError (quarantine)."""
+disagrees with the number of data records raises.  One row per image
+(:mod:`table_streaming_source_spark._rows`); malformed records raise
+ValueError (quarantine)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -20,6 +18,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 SREC_ROWS_SCHEMA = StructType(
     [
@@ -133,35 +133,10 @@ def parse_srec(text: str | bytes) -> dict:
 def srec_rows(
     df: DataFrame, *, text_col: str = "srec", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in SREC_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_srec(str(text))
-                out["key"].append(int(k))
-                for name in (
-                    "n_data_records", "total_bytes", "byte_sum",
-                    "addr_min", "addr_max", "header_len",
-                ):
-                    out[name].append(m[name])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_data_records": pd.Series(
-                        out["n_data_records"], dtype="int32"
-                    ),
-                    "total_bytes": pd.Series(
-                        out["total_bytes"], dtype="int64"
-                    ),
-                    "byte_sum": pd.Series(out["byte_sum"], dtype="int64"),
-                    "addr_min": pd.Series(out["addr_min"], dtype="int64"),
-                    "addr_max": pd.Series(out["addr_max"], dtype="int64"),
-                    "header_len": pd.Series(
-                        out["header_len"], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=SREC_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_srec(str(t)),
+        SREC_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -4,15 +4,13 @@ header, and tab-separated variant rows (CHROM POS ID REF ALT QUAL
 FILTER INFO) with ``key=value;...`` INFO fields.  The genomics
 companion of `sources/fasta_file.py`; the rollup includes the Ts/Tv
 (transition/transversion) ratio components — the classic variant-call
-QC statistic.  Row-local over Arrow batches; malformed input (missing
+QC statistic.  One row per file (:mod:`table_streaming_source_spark._rows`);
+malformed input (missing
 header, short rows, non-numeric POS/QUAL, REF==ALT) raises ValueError
 for the quarantine path."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -20,6 +18,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 VCF_ROWS_SCHEMA = StructType(
     [
@@ -135,34 +135,10 @@ def parse_vcf(text: str | bytes) -> dict:
 def vcf_rows(
     df: DataFrame, *, text_col: str = "vcf", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in VCF_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_vcf(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "n_variants", "n_transitions", "n_transversions",
-                    "sum_dp", "qual_sum",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "n_variants": pd.Series(
-                        out["n_variants"], dtype="int32"
-                    ),
-                    "n_transitions": pd.Series(
-                        out["n_transitions"], dtype="int32"
-                    ),
-                    "n_transversions": pd.Series(
-                        out["n_transversions"], dtype="int32"
-                    ),
-                    "sum_dp": pd.Series(out["sum_dp"], dtype="int64"),
-                    "qual_sum": pd.Series(out["qual_sum"], dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=VCF_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_vcf(str(t)),
+        VCF_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

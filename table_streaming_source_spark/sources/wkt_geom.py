@@ -4,16 +4,14 @@ one ring): coordinate parsing, SHOELACE polygon area, and segment-sum
 linestring length.  The geometry companion of the spatial joins
 (`operators/joins.py::join_nearest_spatial` / point-in-polygon): those
 consume coordinates, this produces them from the interchange text
-every GIS export speaks.  Row-local over Arrow batches; malformed text
+every GIS export speaks.  One row per record
+(:mod:`table_streaming_source_spark._rows`); malformed text
 (unknown type, unclosed ring, odd coordinate arity, <3-point ring)
 raises ValueError for the quarantine path."""
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -22,6 +20,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from table_streaming_source_spark._rows import map_rows
 
 WKT_ROWS_SCHEMA = StructType(
     [
@@ -137,35 +137,10 @@ def parse_wkt(text: str | bytes) -> dict:
 def wkt_rows(
     df: DataFrame, *, text_col: str = "wkt", key: str = "key"
 ) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                f.name: [] for f in WKT_ROWS_SCHEMA.fields
-            }
-            for k, text in zip(pdf[key], pdf[text_col]):
-                m = parse_wkt(str(text))
-                out["key"].append(int(k))
-                for nm in (
-                    "poly_area", "line_len", "n_line_points",
-                    "point_xy_sum",
-                ):
-                    out[nm].append(m[nm])
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out["key"], dtype="int64"),
-                    "poly_area": pd.Series(
-                        out["poly_area"], dtype="float64"
-                    ),
-                    "line_len": pd.Series(
-                        out["line_len"], dtype="float64"
-                    ),
-                    "n_line_points": pd.Series(
-                        out["n_line_points"], dtype="int32"
-                    ),
-                    "point_xy_sum": pd.Series(
-                        out["point_xy_sum"], dtype="float64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=WKT_ROWS_SCHEMA)
+    return map_rows(
+        df,
+        lambda t: parse_wkt(str(t)),
+        WKT_ROWS_SCHEMA,
+        cols=(text_col,),
+        key=key,
+    )

@@ -18,21 +18,20 @@ Writer twin (:func:`write_xlsx`) emits a minimal spec-complete package
 round-trips exercise the REAL deflate + central-directory path.
 
 Scale shape: one .xlsx file = one Spark task via ``binaryFile``; the
-unzip + XML walk is partition-local inside one Arrow-batched
-``mapInPandas``; only parsed records leave the executor.  Shard a big
+unzip + XML walk is partition-local and yields one row per record
+(:mod:`table_streaming_source_spark._rows`); only parsed records leave
+the executor.  Shard a big
 export across many .xlsx files for parallelism exactly like the ZIP
 corpus path.
 """
 
 from __future__ import annotations
 
+from table_streaming_source_spark._rows import map_rows
 from table_streaming_source_spark.malformed import quarantinable
 
 import re
-from typing import Iterator
 from xml.etree import ElementTree as ET
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -263,16 +262,7 @@ def read_xlsx(spark: SparkSession, path: str) -> DataFrame:
     (sheet, row_num, header→value map) — one file per task."""
     raw = spark.read.format("binaryFile").load(path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                "sheet": [], "row_num": [], "record": []
-            }
-            for content in pdf["content"]:
-                for sheet, rn, rec in xlsx_records(bytes(content)):
-                    rows["sheet"].append(sheet)
-                    rows["row_num"].append(rn)
-                    rows["record"].append(rec)
-            yield pd.DataFrame(rows)
-
-    return raw.select("content").mapInPandas(batches, schema=XLSX_SCHEMA)
+    return map_rows(
+        raw.select("content"), xlsx_records, XLSX_SCHEMA, cols=("content",),
+        many=True,
+    )

@@ -19,6 +19,9 @@ projection, no shuffle, so partitioning is preserved.  The contract:
   map, ...) stay object columns.  A value its dtype cannot hold, such as
   2**31 in an int column or ``None`` in a NOT NULL one, raises while the
   batch is built instead of wrapping around.
+- **Documents.**  :func:`map_docs` frames a text source: ``parse``
+  gets each document of one string column, and a NULL document yields
+  no rows (it is filtered out in the JVM, before the Python worker).
 - **Errors.**  ``fn`` raises ``ValueError`` on malformed input, which
   fails the task: the quarantine path
   (:mod:`table_streaming_source_spark.malformed`).
@@ -30,6 +33,7 @@ from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -87,3 +91,20 @@ def map_rows(
             )
 
     return df.mapInPandas(batches, schema=schema)
+
+
+def map_docs(
+    df: DataFrame,
+    parse: Callable[[str], "tuple | dict | Iterable[tuple | dict]"],
+    schema: "StructType | str",
+    *,
+    text_col: str,
+    key: str,
+    many: bool = False,
+) -> DataFrame:
+    """:func:`map_rows` of ``parse`` over the non-NULL documents of the
+    string column ``text_col``."""
+    return map_rows(
+        df.where(F.col(text_col).isNotNull()), parse, schema,
+        cols=(text_col,), key=key, many=many,
+    )

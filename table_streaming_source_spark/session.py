@@ -28,6 +28,11 @@ from pyspark.sql import SparkSession
 # Metaspace.
 CODEGEN_CACHE_MAX_ENTRIES = 16384
 
+# The directory holding this package; Python workers need it on their path
+# to start the session's daemon (_pydaemon.py) and to run library UDFs.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def _default_driver_memory() -> str:
     """Size the local-mode JVM to the machine instead of a constant.
@@ -132,7 +137,18 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
         )
+        # PySpark's worker daemon, less the re-read of every zip-import
+        # directory before each task: 16 reads, about half of a no-op
+        # Arrow task's cost (docs/SCALE.md §0d).
+        .config(
+            "spark.python.daemon.module",
+            "table_streaming_source_spark._pydaemon",
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
+        filter(None, [extra_conf.get(_EXECUTOR_PYTHONPATH), _PACKAGE_ROOT])
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -24,7 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 ARFF_CELLS_SCHEMA = StructType(
     [
@@ -140,14 +140,14 @@ def arff_cells(
     df: DataFrame, *, text_col: str = "arff", key: str = "key"
 ) -> DataFrame:
     """Explode ARFF documents into long-form typed cells."""
-    return map_rows(
-        df, _arff_cells, ARFF_CELLS_SCHEMA, cols=(text_col,), key=key,
+    return map_docs(
+        df, _arff_cells, ARFF_CELLS_SCHEMA, text_col=text_col, key=key,
         many=True,
     )
 
 
 def _arff_cells(text) -> Iterator[tuple]:
-    relation, attrs, data = parse_arff(str(text))
+    relation, attrs, data = parse_arff(text)
     for ri, row in enumerate(data):
         for (name, typ, _dom), cell in zip(attrs, row):
             yield (

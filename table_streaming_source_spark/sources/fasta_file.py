@@ -17,7 +17,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 FASTA_ROWS_SCHEMA = StructType(
     [
@@ -98,10 +98,6 @@ def parse_fasta(text: str | bytes) -> dict:
 def fasta_rows(
     df: DataFrame, *, text_col: str = "fasta", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_fasta(str(t)),
-        FASTA_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_fasta, FASTA_ROWS_SCHEMA, text_col=text_col, key=key
     )

@@ -17,7 +17,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 GFF3_ROWS_SCHEMA = StructType(
     [
@@ -121,10 +121,6 @@ def parse_gff3(text: str | bytes) -> dict:
 def gff3_rows(
     df: DataFrame, *, text_col: str = "gff3", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_gff3(str(t)),
-        GFF3_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_gff3, GFF3_ROWS_SCHEMA, text_col=text_col, key=key
     )

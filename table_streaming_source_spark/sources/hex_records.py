@@ -18,7 +18,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 HEX_ROWS_SCHEMA = StructType(
     [
@@ -124,10 +124,6 @@ def parse_intel_hex(text: str) -> dict:
 def intel_hex_rows(
     df: DataFrame, *, text_col: str = "hex", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_intel_hex(str(t)),
-        HEX_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_intel_hex, HEX_ROWS_SCHEMA, text_col=text_col, key=key
     )

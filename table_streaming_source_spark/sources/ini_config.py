@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 INI_ROWS_SCHEMA = StructType(
     [
@@ -72,14 +72,14 @@ def ini_rows(
     """Explode a column of INI documents into typed rows; integer
     values additionally surface as ``value_int`` (NULL when the value
     is not a plain integer — the TRY_CAST convention)."""
-    return map_rows(
+    return map_docs(
         df,
         lambda t: [
             (section, prop, value, _try_int32(value))
-            for section, prop, value in parse_ini(str(t))
+            for section, prop, value in parse_ini(t)
         ],
         INI_ROWS_SCHEMA,
-        cols=(text_col,),
+        text_col=text_col,
         key=key,
         many=True,
     )

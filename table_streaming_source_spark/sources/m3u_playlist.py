@@ -16,7 +16,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 M3U_ROWS_SCHEMA = StructType(
     [
@@ -97,10 +97,6 @@ def parse_m3u(text: str | bytes) -> dict:
 def m3u_rows(
     df: DataFrame, *, text_col: str = "m3u", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_m3u(str(t)),
-        M3U_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_m3u, M3U_ROWS_SCHEMA, text_col=text_col, key=key
     )

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 OBJ_ROWS_SCHEMA = StructType(
     [
@@ -124,10 +124,6 @@ def parse_obj(text: str | bytes) -> dict:
 def obj_rows(
     df: DataFrame, *, text_col: str = "obj", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_obj(str(t)),
-        OBJ_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_obj, OBJ_ROWS_SCHEMA, text_col=text_col, key=key
     )

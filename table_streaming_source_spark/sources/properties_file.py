@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 from table_streaming_source_spark.sources.ini_config import _try_int32
 
 PROPERTIES_ROWS_SCHEMA = StructType(
@@ -118,14 +118,14 @@ def properties_rows(
     """Explode a column of .properties documents into typed rows;
     plain in-range integers surface in ``value_int`` (TRY_CAST
     convention: NULL, never a task failure)."""
-    return map_rows(
+    return map_docs(
         df,
         lambda t: [
             (prop, value, _try_int32(value))
-            for prop, value in parse_properties(str(t))
+            for prop, value in parse_properties(t)
         ],
         PROPERTIES_ROWS_SCHEMA,
-        cols=(text_col,),
+        text_col=text_col,
         key=key,
         many=True,
     )

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 ROBOTS_ROWS_SCHEMA = StructType(
     [
@@ -110,10 +110,6 @@ def parse_robots(text: str | bytes) -> dict:
 def robots_rows(
     df: DataFrame, *, text_col: str = "robots", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_robots(str(t)),
-        ROBOTS_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_robots, ROBOTS_ROWS_SCHEMA, text_col=text_col, key=key
     )

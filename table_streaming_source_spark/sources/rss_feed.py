@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 RSS_ITEMS_SCHEMA = StructType(
     [
@@ -78,11 +78,6 @@ def parse_rss(text: str) -> list[dict]:
 def rss_items(
     df: DataFrame, *, text_col: str = "rss", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_rss(str(t)),
-        RSS_ITEMS_SCHEMA,
-        cols=(text_col,),
-        key=key,
-        many=True,
+    return map_docs(
+        df, parse_rss, RSS_ITEMS_SCHEMA, text_col=text_col, key=key, many=True
     )

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 SREC_ROWS_SCHEMA = StructType(
     [
@@ -133,10 +133,6 @@ def parse_srec(text: str | bytes) -> dict:
 def srec_rows(
     df: DataFrame, *, text_col: str = "srec", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_srec(str(t)),
-        SREC_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_srec, SREC_ROWS_SCHEMA, text_col=text_col, key=key
     )

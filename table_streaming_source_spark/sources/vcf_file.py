@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 VCF_ROWS_SCHEMA = StructType(
     [
@@ -135,10 +135,6 @@ def parse_vcf(text: str | bytes) -> dict:
 def vcf_rows(
     df: DataFrame, *, text_col: str = "vcf", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_vcf(str(t)),
-        VCF_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_vcf, VCF_ROWS_SCHEMA, text_col=text_col, key=key
     )

@@ -21,7 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from table_streaming_source_spark._rows import map_rows
+from table_streaming_source_spark._rows import map_docs
 
 WKT_ROWS_SCHEMA = StructType(
     [
@@ -137,10 +137,6 @@ def parse_wkt(text: str | bytes) -> dict:
 def wkt_rows(
     df: DataFrame, *, text_col: str = "wkt", key: str = "key"
 ) -> DataFrame:
-    return map_rows(
-        df,
-        lambda t: parse_wkt(str(t)),
-        WKT_ROWS_SCHEMA,
-        cols=(text_col,),
-        key=key,
+    return map_docs(
+        df, parse_wkt, WKT_ROWS_SCHEMA, text_col=text_col, key=key
     )

@@ -1,7 +1,10 @@
 """The shared Arrow row framing (`table_streaming_source_spark/_rows.py`):
 rows per input, the dtype rule, and failure on a value its column
-cannot hold.  The last two tests drive it through public sources, one
-per cardinality, and hold at the commit before the helper existed."""
+cannot hold.  The last tests drive it through public sources: one per
+cardinality, which hold at the commit before the helper existed, and a
+NULL document in each of the thirteen text sources."""
+
+import importlib
 
 import pandas as pd
 import pytest
@@ -133,3 +136,43 @@ def test_ini_rows_zero_and_many_rows_per_document(spark):
         (2, "a", "y", "z", None),
         (2, "b", "w", "-7", -7),
     ]
+
+
+# (module, reader, text column, one valid document)
+_TEXT_SOURCES = [
+    ("arff_file", "arff_cells", "arff",
+     "@RELATION r\n@ATTRIBUTE a NUMERIC\n@DATA\n1\n2\n"),
+    ("fasta_file", "fasta_rows", "fasta", "synth_fasta"),
+    ("gff3_file", "gff3_rows", "gff3", "synth_gff3"),
+    ("hex_records", "intel_hex_rows", "hex", "synth_intel_hex"),
+    ("ini_config", "ini_rows", "ini", "[a]\nx = 5\n"),
+    ("m3u_playlist", "m3u_rows", "m3u", "synth_m3u"),
+    ("obj_mesh", "obj_rows", "obj", "synth_obj"),
+    ("properties_file", "properties_rows", "props", "a=1\nb = two\n"),
+    ("robots_txt", "robots_rows", "robots", "synth_robots"),
+    ("rss_feed", "rss_items", "rss",
+     "<rss version=\"2.0\"><channel><title>f</title><item>"
+     "<title>i</title><link>http://x/1</link><guid>g</guid>"
+     "</item></channel></rss>"),
+    ("srec_file", "srec_rows", "srec", "synth_srec"),
+    ("vcf_file", "vcf_rows", "vcf", "synth_vcf"),
+    ("wkt_geom", "wkt_rows", "wkt", "synth_wkt"),
+]
+
+
+@pytest.mark.parametrize(
+    "module,reader,col,doc", _TEXT_SOURCES, ids=[s[0] for s in _TEXT_SOURCES]
+)
+def test_null_document_yields_no_rows(spark, module, reader, col, doc):
+    mod = importlib.import_module(
+        f"table_streaming_source_spark.sources.{module}"
+    )
+    if doc.startswith("synth_"):
+        doc = getattr(mod, doc)(2)
+    read = getattr(mod, reader)
+    schema = f"key long, {col} string"
+    with_null = spark.createDataFrame([(1, None), (2, doc)], schema)
+    alone = spark.createDataFrame([(2, doc)], schema)
+    got = sorted(tuple(r) for r in read(with_null).collect())
+    assert got, reader
+    assert got == sorted(tuple(r) for r in read(alone).collect())
